@@ -1616,7 +1616,7 @@ object LlmQueries {
     // --- product-quantization ANN (ADC + exact refine) ---------------------
     // The memory-bound ANN path: 64-float vectors compress to 16 code
     // bytes (16x); the scan reads CODES + a driver-side lookup table
-    // (codegen'd PqAdc), shortlists 50, and re-ranks just those rows
+    // (codegen'd pq_adc), shortlists 50, and re-ranks just those rows
     // exactly. Deterministic end-to-end (lowest-id seeding, tie-broken
     // argmins) but k-means-in-SQL has no practical oracle -> rows-only
     // (the q45/q76 discipline); PqIndexSpec measures recall@10 = 0.9

@@ -10,7 +10,7 @@ import graft.plans.{PqCodes, SquaredL2}
   * of `ksub` per-subspace centroids), then answer nearest-neighbor
   * queries with ASYMMETRIC DISTANCE — the query stays uncompressed, a
   * driver-side m×ksub lookup table turns each coded row into m table
-  * lookups ([[graft.plans.PqAdc]], whole-stage codegen).
+  * lookups ([[graft.plans.PqCodes.adc]], whole-stage codegen).
   *
   * This is the memory-bound scale path beside [[IvfIndex]] (which
   * prunes WHICH rows are scanned; PQ shrinks WHAT each scanned row
@@ -21,7 +21,7 @@ import graft.plans.{PqCodes, SquaredL2}
   *
   * Training is deterministic per-subspace Lloyd (the [[IvfIndex]]
   * discipline): seeds are the `ksub` lowest-id vectors' sub-slices; the
-  * assign step IS the encoder — one codegen'd [[graft.plans.PqEncode]]
+  * assign step IS the encoder — one codegen'd [[graft.plans.PqCodes.encode]]
   * pass assigns all m subspaces concurrently (no centroid join, no
   * shuffle of distance rows) — and the new means (m·ksub tiny rows)
   * collect to the driver, the [[graft.operators.KMeans]] per-iteration
@@ -90,7 +90,7 @@ object PqIndex {
       Array.tabulate(m, ksubEff)((s, c) => seeds(c).slice(s * subDim, (s + 1) * subDim))
 
     if (iterations > 0) {
-      // Lloyd assign = the ENCODER itself: PqEncode's codegen'd argmin
+      // Lloyd assign = the ENCODER itself: pq_encode's codegen'd argmin
       // assigns all m subspaces in ONE narrow pass over the cached
       // sample — no centroid cross join, no shuffle of |sample| ×
       // m·ksub distance rows (that first-cut shape cost 9.3 s at
@@ -125,8 +125,8 @@ object PqIndex {
   }
 
   /** Add the m-byte PQ codes column — the compressed dataset
-    * ([[graft.plans.PqEncode]], codegen'd; the codebooks ride the
-    * generated class as a constant). */
+    * ([[graft.plans.PqCodes.encode]], codegen'd; the codebooks ride
+    * each task as one constant table). */
   def encode(vectors: DataFrame, vecCol: String, cb: Codebooks,
              codesCol: String = "pq_codes"): DataFrame =
     vectors.withColumn(codesCol, PqCodes.encode(col(vecCol), cb.cents))

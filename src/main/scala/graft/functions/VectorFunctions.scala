@@ -36,32 +36,11 @@ object VectorFunctions {
                    outCol: String): org.apache.spark.sql.DataFrame =
     df.withColumn(outCol, graft.plans.L2Normalize.of(col(vecCol)))
 
-  /** The interpreted-HOF reference form of [[l2Normalized]] — retained
-    * to cross-check [[graft.plans.L2Normalize]] bit-for-bit in tests
-    * (~2·dim interpreted lambda evals per row, re-run per plan
-    * materialization: 3× per q140 run before the codegen swap). */
-  private[graft] def l2NormalizedHof(df: org.apache.spark.sql.DataFrame,
-                                     vecCol: String,
-                                     outCol: String): org.apache.spark.sql.DataFrame =
-    df.withColumn("__graft_norm", norm(col(vecCol)))
-      .withColumn(outCol,
-        when(col("__graft_norm") > 0,
-          transform(col(vecCol), x => x / col("__graft_norm")))
-          .otherwise(col(vecCol).cast("array<double>"))
-          .cast("array<float>"))
-      .drop("__graft_norm")
-
-  /** Cosine similarity in [-1, 1] — native codegen'd Catalyst expression
+  /** Cosine similarity in [-1, 1] — native kernel
     * ([[graft.plans.CosineSimilarity]]): one fused primitive loop inside
     * whole-stage codegen. Null on length mismatch or zero vector. */
   def cosine(a: Column, b: Column): Column =
     graft.plans.CosineSimilarity(a, b)
-
-  /** Reference implementation of [[cosine]] via higher-order functions —
-    * identical fold order/semantics, used to cross-check the native
-    * expression in tests. */
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / nullif(norm(a) * norm(b), lit(0.0))
 
   /** Brute-force top-k nearest neighbors of a single query vector.
     *
@@ -91,34 +70,15 @@ object VectorFunctions {
     * Native codegen ([[graft.plans.HyperplaneLsh]]): this is the
     * full-corpus pass feeding LSH ANN and embedding near-dup clustering —
     * the widest scan in the dedup pipeline — so it must stay inside
-    * whole-stage codegen. Bit-identical to [[lshBucketsHof]] (asserted in
-    * VectorFunctionsSpec); the `coalesce` reproduces the HOF's bucket-0
-    * for a null vector. */
+    * whole-stage codegen. Bit-identical to the interpreted HOF reference
+    * form (asserted in VectorFunctionsSpec); the `coalesce` reproduces
+    * the HOF's bucket-0 for a null vector. planeOffset shifts into a
+    * disjoint plane family — multi-table LSH (union of tables raises
+    * recall; see Dedup.embeddingNearDupClusters). */
   def lshBuckets(vectors: DataFrame, vecCol: String, numPlanes: Int = 16,
                  planeOffset: Int = 0): DataFrame =
     vectors.withColumn("lsh_bucket",
       coalesce(graft.plans.HyperplaneLsh(col(vecCol), numPlanes, planeOffset), lit(0L)))
-
-  /** Reference implementation of [[lshBuckets]] via higher-order functions
-    * (interpreted — CodegenFallback); retained to cross-check the native
-    * expression bit-for-bit in tests. Plane p component i = a
-    * deterministic hash mapped to [-0.5, 0.5). planeOffset shifts into a
-    * disjoint plane family — multi-table LSH (union of tables raises
-    * recall; see Dedup.embeddingNearDupClusters). */
-  def lshBucketsHof(vectors: DataFrame, vecCol: String, numPlanes: Int = 16,
-                    planeOffset: Int = 0): DataFrame = {
-    val bucket = expr(
-      s"""aggregate(
-            sequence($planeOffset, ${planeOffset + numPlanes - 1}),
-            0L,
-            (acc, p) -> acc + shiftleft(
-              CASE WHEN aggregate(
-                zip_with($vecCol, sequence(0, size($vecCol) - 1),
-                         (v, i) -> cast(v as double) *
-                                   ((cast(pmod(xxhash64(p, i), 1000000) as double) / 1000000.0) - 0.5)),
-                0.0D, (s, x) -> s + x) > 0.0D THEN 1L ELSE 0L END, p - $planeOffset))""")
-    vectors.withColumn("lsh_bucket", bucket)
-  }
 
   /** ANN top-k via LSH: probe only the query's bucket (fallback to brute
     * force when the bucket has fewer than k members is the caller's

@@ -72,8 +72,7 @@ object Bpe {
           merges += ((rank, l, r, merged, cnt))
           // greedy left-to-right application — one native codegen fold
           // per word (graft.plans.BpeMergeFold; the interpreted
-          // aggregate-fold stays as encodeFoldHof, the BpeSpec
-          // reference form)
+          // aggregate-fold stays the BpeSpec reference form)
           words = words
             .withColumn("sym",
               graft.plans.BpeMergeFold.of(col("sym"), Seq((l, r, merged))))
@@ -97,8 +96,8 @@ object Bpe {
     * with an in-place write pointer. The earlier interpreted form — a
     * nested `aggregate` over a `typedlit` merge table — re-allocated
     * the accumulated output array per symbol per merge (O(symbols²)
-    * copying, every step an interpreted lambda eval); it stays as
-    * [[encodeFoldHof]], the BpeSpec differential reference. */
+    * copying, every step an interpreted lambda eval); it stays the
+    * BpeSpec differential reference. */
   def encode(docs: DataFrame, textCol: String, merges: DataFrame): DataFrame = {
     val ordered = merges.select("rank", "left", "right", "merged")
       .orderBy("rank")
@@ -111,26 +110,5 @@ object Bpe {
       "w -> filter(split(w, ''), x -> x <> ''))")
     docs.withColumn("bpe_tokens", flatten(transform(base,
       w => graft.plans.BpeMergeFold.of(w, ordered))))
-  }
-
-  /** The interpreted HOF reference form of the per-token merge replay —
-    * outer `aggregate` over the merge array (rank order), inner
-    * `aggregate` over the token's symbols. Kept verbatim so BpeSpec can
-    * pin [[graft.plans.BpeMergeFold]] element-for-element against it. */
-  private[graft] def encodeFoldHof(syms: org.apache.spark.sql.Column,
-                                   ordered: Seq[(String, String, String)])
-      : org.apache.spark.sql.Column = {
-    if (ordered.isEmpty) return syms
-    val mergeTab = typedlit(ordered) // array<struct<_1,_2,_3>> — ONE literal node
-    aggregate(mergeTab, syms, (acc, mrg) =>
-      aggregate(acc,
-        lit(Array.empty[String]).cast("array<string>"),
-        (out, x) =>
-          when(size(out) > 0 &&
-               element_at(out, -1) === mrg.getField("_1") &&
-               x === mrg.getField("_2"),
-            concat(slice(out, lit(1), size(out) - 1),
-              array(mrg.getField("_3"))))
-            .otherwise(concat(out, array(x)))))
   }
 }

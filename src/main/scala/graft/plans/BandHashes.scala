@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native LSH band hashing: `band_hashes(minhash)` → array<bigint> of
   * `bands` hashes, where hash b folds XXH64.hashLong over the signature
@@ -20,39 +18,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * interpreted `transform`. This is one JIT'd loop, no allocation beyond
   * the output array, inside whole-stage codegen.
   */
-case class BandHashes(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _ if bands < 1 || rowsPerBand < 1 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"band_hashes needs positive band layout, got ${bands}x$rowsPerBand")
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"band_hashes expects array<bigint> (a MinHash signature), got ${other.catalogString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    BandHashes.compute(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.BandHashes.compute($c, $bands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BandHashes {
 
-  /** Shared by interpreted eval and generated code. A slice that runs past
-    * the signature end folds only the available elements — same clipping
-    * as builtin `slice`. */
+  /** Kernel. A slice that runs past the signature end folds only the
+    * available elements — same clipping as builtin `slice` — and a null
+    * element leaves the running hash unchanged, as builtin `xxhash64`
+    * skips it. */
   def compute(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val n = sig.numElements()
     val out = new Array[Long](bands)
@@ -62,7 +33,7 @@ object BandHashes {
       var j = b * rowsPerBand
       val end = math.min(j + rowsPerBand, n)
       while (j < end) {
-        h = XXH64.hashLong(sig.getLong(j), h)
+        if (!sig.isNullAt(j)) h = XXH64.hashLong(sig.getLong(j), h)
         j += 1
       }
       out(b) = h
@@ -71,6 +42,9 @@ object BandHashes {
     new GenericArrayData(out)
   }
 
-  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    GraftBridge.column(BandHashes(GraftBridge.expression(sig), bands, rowsPerBand))
+  def apply(sig: Column, bands: Int, rowsPerBand: Int): Column = {
+    require(bands >= 1 && rowsPerBand >= 1,
+      s"band_hashes needs positive band layout, got ${bands}x$rowsPerBand")
+    NativeFunctions("band_hashes")(sig, lit(bands), lit(rowsPerBand))
+  }
 }

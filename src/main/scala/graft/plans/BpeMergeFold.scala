@@ -1,17 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: greedy left-to-right BPE merge replay
-  * over a symbol array — the inner fold of [[graft.operators.Bpe]],
-  * applied for every merge in rank order. Replaces the interpreted
-  * nested `aggregate(mergeTab, syms, (out, x) -> CASE …
+/** Native `bpe_merge_fold`: greedy left-to-right BPE merge replay over a
+  * symbol array — the inner fold of [[graft.operators.Bpe]], applied for
+  * every merge in rank order. Replaces the interpreted nested
+  * `aggregate(mergeTab, syms, (out, x) -> CASE …
   * concat(slice(out, …), array(m)) … concat(out, array(x)))` chain
   * (which stays the reference form in BpeSpec): that HOF re-allocates
   * the accumulated output array per SYMBOL per MERGE — O(symbols²)
@@ -29,52 +25,26 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - a merge row with null left/right never fires; a null merged
   *     value is inserted as null when it does.
   */
-case class BpeMergeFold(child: Expression,
-                        merges: Seq[(String, String, String)])
-    extends UnaryExpression {
+object BpeMergeFold {
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bpe_merge_fold expects array<string>, got ${other.catalogString}")
-    }
-
-  // (left, right, merged) rows as UTF8Strings, built once per task
-  @transient private lazy val table: Array[Array[UTF8String]] =
-    merges.map { case (l, r, m) =>
+  /** The merge table rides along as one [[ConstTable]] of
+    * (left, right, merged) rows; explain shows its size and first rows. */
+  def of(symbols: Column, merges: Seq[(String, String, String)]): Column = {
+    val rows = merges.map { case (l, r, m) =>
       Array(UTF8String.fromString(l), UTF8String.fromString(r),
         UTF8String.fromString(m))
     }.toArray
-
-  override def nullSafeEval(a: Any): Any =
-    BpeMergeFold.fold(a.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tab = ctx.addReferenceObj("bpeMerges", table,
-      "org.apache.spark.unsafe.types.UTF8String[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.BpeMergeFold.fold($c, $tab);")
+    val shown = merges.take(3).map { case (l, r, m) => s"$l+$r=$m" }
+    val label = s"${merges.size} merges [" + shown.mkString(", ") +
+      (if (merges.size > 3) ", …]" else "]")
+    NativeFunctions("bpe_merge_fold")(symbols, ConstTable.lit(label, rows))
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BpeMergeFold {
-
-  def of(symbols: Column, merges: Seq[(String, String, String)]): Column =
-    GraftBridge.column(BpeMergeFold(GraftBridge.expression(symbols), merges))
-
-  /** Static entry the generated code calls: replay every merge in table
-    * order with an in-place write pointer (w ≤ read index always, so
-    * compaction is safe). */
-  def fold(arr: ArrayData, merges: Array[Array[UTF8String]]): GenericArrayData = {
+  /** Kernel: replay every merge in table order with an in-place write
+    * pointer (w ≤ read index always, so compaction is safe). */
+  def fold(arr: ArrayData,
+           table: ConstTable[Array[Array[UTF8String]]]): GenericArrayData = {
+    val merges = table.value
     val n = arr.numElements()
     val cur = new Array[AnyRef](n)
     var i = 0

@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: BLEU-style clipped n-gram overlap between
+/** Native `clipped_ngram_overlap`: BLEU-style clipped n-gram overlap between
   * two token arrays — Σ over distinct candidate n-grams g of
   * min(count_cand(g), count_ref(g)), with n-grams rendered exactly as the
   * HOF reference form renders them (adjacent tokens joined by the chr(1)
@@ -26,52 +23,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * identical value, linear work (the [[TokenLcs]] / [[CosineSimilarity]]
   * discipline: per-row text math belongs in one codegen'd static call).
   *
-  * Null contract: null if either array is null (BinaryExpression
-  * default). Null ELEMENTS follow the HOF form: a null token (or a
-  * bigram containing one — SQL `concat` null-propagates) never matches
-  * anything and contributes 0.
+  * Null contract: null if either array is null. Null ELEMENTS follow the
+  * HOF form: a null token (or a bigram containing one — SQL `concat`
+  * null-propagates) never matches anything and contributes 0.
   */
-case class ClippedNgramOverlap(left: Expression, right: Expression, n: Int)
-    extends BinaryExpression {
-
-  require(n >= 1 && n <= 8, s"clipped_ngram_overlap: n must be in [1,8], got $n")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _                        => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"clipped_ngram_overlap expects array<string> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(ClippedNgramOverlap.overlap(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], n))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.ClippedNgramOverlap.overlap($a, $b, $n);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object ClippedNgramOverlap {
 
   /** `clipped_ngram_overlap(cand, ref, n)` — candidate tokens first (the
     * side whose distinct grams are clipped), reference second. */
-  def of(cand: Column, ref: Column, n: Int): Column =
-    GraftBridge.column(ClippedNgramOverlap(
-      GraftBridge.expression(cand), GraftBridge.expression(ref), n))
+  def of(cand: Column, ref: Column, n: Int): Column = {
+    require(n >= 1 && n <= 8, s"clipped_ngram_overlap: n must be in [1,8], got $n")
+    NativeFunctions("clipped_ngram_overlap")(cand, ref, lit(n))
+  }
 
   // the HOF reference's bigram joint: chr(1), outside the whitespace-token
   // alphabet — n-gram equality below is equality of these joined strings,
@@ -108,7 +71,7 @@ object ClippedNgramOverlap {
     out
   }
 
-  /** Static entry the generated code calls: Σ_g min(count_cand(g),
+  /** Kernel: Σ_g min(count_cand(g),
     * count_ref(g)) over the n-grams of the two token arrays. */
   def overlap(cand: ArrayData, ref: ArrayData, n: Int): Long = {
     val cg = grams(cand, n)

@@ -1,119 +1,43 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expression: cosine similarity between two numeric
-  * arrays, accumulated in double, sequential over array order (identical
-  * semantics to the `zip_with`+`aggregate` higher-order form in
-  * [[graft.functions.VectorFunctions]], which is this expression's
-  * reference implementation in tests).
+/** Native `cosine_similarity(a, b)` between two numeric arrays,
+  * accumulated in double, sequential over array order (identical
+  * semantics to the `zip_with`+`aggregate` higher-order form, which is
+  * this kernel's reference implementation in tests).
   *
-  * Why it exists: Spark's higher-order functions are CodegenFallback —
-  * every element evaluation goes through the interpreter, which is the
-  * difference between scanning an embedding column at memory bandwidth
-  * and burning CPU on per-element virtual calls when the corpus has
-  * billions of vectors. This expression implements `doGenCode` so the
-  * dot/norm loop compiles into the whole-stage-codegen'd Java of the
-  * enclosing stage: one tight primitive loop, no allocation.
+  * Why it exists: Spark's higher-order functions evaluate every element
+  * through the interpreter — the difference between scanning an
+  * embedding column at memory bandwidth and burning CPU on per-element
+  * virtual calls when the corpus has billions of vectors. This kernel is
+  * one tight primitive loop inside the enclosing whole-stage codegen.
   *
-  * Null contract: null if either input is null (BinaryExpression default),
-  * or if lengths differ, or if either norm is zero.
+  * Null contract: null if either input is null, if lengths differ, if
+  * either norm is zero, or if an element is null (the HOF fold's
+  * null-propagation).
   */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+object CosineSimilarity {
+  /** Column-level entry point: `cosine_similarity(a, b)`. */
+  def apply(a: Column, b: Column): Column =
+    NativeFunctions("cosine_similarity")(a, b)
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _                                                  => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"cosine_similarity expects array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  /** Kernel; `aFloat`/`bFloat` give each array's element type. */
+  def cosine(xs: ArrayData, ys: ArrayData, aFloat: Boolean,
+             bFloat: Boolean): java.lang.Double = {
     val n = xs.numElements()
     if (n != ys.numElements()) return null
-    val lt = elemType(left)
-    val rt = elemType(right)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = toDouble(xs, i, lt)
-      val y = toDouble(ys, i, rt)
+      if (xs.isNullAt(i) || ys.isNullAt(i)) return null
+      val x = if (aFloat) xs.getFloat(i).toDouble else xs.getDouble(i)
+      val y = if (bFloat) ys.getFloat(i).toDouble else ys.getDouble(i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     if (na == 0.0 || nb == 0.0) null
     else java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
   }
-
-  private def toDouble(arr: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType => arr.getFloat(i).toDouble
-    case _         => arr.getDouble(i)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lt = elemType(left)
-    val rt = elemType(right)
-    def getter(arr: String, i: String, t: DataType): String = t match {
-      case FloatType => s"(double) $arr.getFloat($i)"
-      case _         => s"$arr.getDouble($i)"
-    }
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = ${getter(a, i, lt)};
-         |    double $y = ${getter(b, i, rt)};
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
-  /** Column-level entry point: `cosine_similarity(a, b)`. */
-  def apply(a: Column, b: Column): Column =
-    GraftBridge.column(CosineSimilarity(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
 }

@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the number of DISTINCT n-grams of a token
+/** Native `distinct_ngram_count`: the number of DISTINCT n-grams of a token
   * array, n-grams rendered exactly as
   * [[graft.operators.Quality.repetitionSignals]] renders them
   * (`concat_ws(" ", slice(tokens, i, n))` — space-joined adjacent
@@ -27,46 +24,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * shuffle it replaced, so this is a codegen'd single hash-set pass
   * (the [[ClippedNgramOverlap]] / [[TokenLcs]] discipline).
   *
-  * Null contract: null array → null (UnaryExpression default); arrays
-  * shorter than n count 0.
+  * Null contract: null array → null; arrays shorter than n count 0.
   */
-case class DistinctNgramCount(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  require(n >= 1 && n <= 8, s"distinct_ngram_count: n must be in [1,8], got $n")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"distinct_ngram_count expects array<string>, got ${t.catalogString}")
-    }
-
-  override def nullSafeEval(a: Any): Any =
-    java.lang.Long.valueOf(
-      DistinctNgramCount.count(a.asInstanceOf[ArrayData], n))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.DistinctNgramCount.count($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object DistinctNgramCount {
 
-  def of(tokens: Column, n: Int): Column =
-    GraftBridge.column(DistinctNgramCount(GraftBridge.expression(tokens), n))
+  def of(tokens: Column, n: Int): Column = {
+    require(n >= 1 && n <= 8, s"distinct_ngram_count: n must be in [1,8], got $n")
+    NativeFunctions("distinct_ngram_count")(tokens, lit(n))
+  }
 
   private val Space = UTF8String.fromString(" ")
 
-  /** Static entry the generated code calls. */
+  /** Kernel. */
   def count(arr: ArrayData, n: Int): Long = {
     val len = arr.numElements()
     if (len < n) return 0L

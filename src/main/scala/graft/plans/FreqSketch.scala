@@ -8,11 +8,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -120,51 +120,15 @@ case class FreqMergeAgg(child: Expression, maxMapSize: Int,
   override def prettyName: String = "freq_merge_agg"
 }
 
-/** Top-k heavy hitters from a serialized image:
-  * array<struct<item, estimate, lower_bound, upper_bound>>, ordered by
-  * (estimate DESC, item ASC) — the rounded-grid/tie-break discipline,
-  * so exact-mode output is engine-reproducible. NO_FALSE_NEGATIVES:
-  * every true heavy hitter appears (some false positives may, bounds
-  * tell them apart). Cold path: one row per group. */
-case class FreqTopK(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+object FreqSketch {
+  val DefaultMaxMapSize = 1024
 
-  require(k >= 1, s"k must be >= 1, got $k")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a serialized frequent-items binary input, got " +
-        child.dataType.catalogString)
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  val TopKType: DataType = ArrayType(StructType(Seq(
     StructField("item", StringType, nullable = false),
     StructField("estimate", LongType, nullable = false),
     StructField("lower_bound", LongType, nullable = false),
     StructField("upper_bound", LongType, nullable = false))),
     containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val sk = ItemsSketch.getInstance(
-      Memory.wrap(bytes.asInstanceOf[Array[Byte]]), new ArrayOfStringsSerDe)
-    if (sk.isEmpty) return null
-    val rows = sk.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
-      .sortBy(r => (-r.getEstimate, r.getItem))
-      .take(k)
-      .map { r =>
-        InternalRow(UTF8String.fromString(r.getItem), r.getEstimate,
-          r.getLowerBound, r.getUpperBound)
-      }
-    new GenericArrayData(rows.asInstanceOf[Array[Any]])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): FreqTopK =
-    copy(child = newChild)
-  override def prettyName: String = "freq_top_k"
-}
-
-object FreqSketch {
-  val DefaultMaxMapSize = 1024
 
   /** Per-group sketch aggregate over a string column. */
   def sketch(item: Column, maxMapSize: Int = DefaultMaxMapSize): Column =
@@ -178,7 +142,28 @@ object FreqSketch {
       FreqMergeAgg(GraftBridge.expression(image), maxMapSize)
         .toAggregateExpression())
 
-  /** Top-k heavy hitters from an image column. */
-  def topK(image: Column, k: Int): Column =
-    GraftBridge.column(FreqTopK(GraftBridge.expression(image), k))
+  /** Top-k heavy hitters from an image column:
+    * array<struct<item, estimate, lower_bound, upper_bound>>, ordered by
+    * (estimate DESC, item ASC) — the rounded-grid/tie-break discipline,
+    * so exact-mode output is engine-reproducible. NO_FALSE_NEGATIVES:
+    * every true heavy hitter appears (some false positives may, bounds
+    * tell them apart). Cold path: one row per group. */
+  def topK(image: Column, k: Int): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    NativeFunctions("freq_top_k")(image, lit(k))
+  }
+
+  /** Kernel of [[topK]]; null for an empty sketch. */
+  def topKItems(bytes: Array[Byte], k: Int): ArrayData = {
+    val sk = ItemsSketch.getInstance(Memory.wrap(bytes), new ArrayOfStringsSerDe)
+    if (sk.isEmpty) return null
+    val rows = sk.getFrequentItems(ErrorType.NO_FALSE_NEGATIVES)
+      .sortBy(r => (-r.getEstimate, r.getItem))
+      .take(k)
+      .map { r =>
+        InternalRow(UTF8String.fromString(r.getItem), r.getEstimate,
+          r.getLowerBound, r.getUpperBound)
+      }
+    new GenericArrayData(rows.asInstanceOf[Array[Any]])
+  }
 }

@@ -2,11 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available to ANY session created with
+/** SparkSessionExtensions entry point: makes the engine's SQL functions
+  * (the [[NativeFunctions]] rows with SQL arities) available to ANY
+  * session created with
   *
   * {{{
   * SparkSession.builder()
@@ -14,80 +14,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   ...
   * }}}
   *
-  * (or `.withExtensions(new GraftExtensions)`), including pure-SQL users —
-  * the injection route survives into thrift-server / connect deployments
-  * where [[GraftFunctions.register]]'s per-session temp functions do not.
+  * (or `.withExtensions(new GraftExtensions)`), including pure-SQL users
+  * in thrift-server / connect deployments.
   */
-object GraftExtensions {
-  /** Int parameter of a SQL builder: must be a foldable non-null literal.
-    * A column-valued argument would otherwise fail at `eval()` with an
-    * unhelpful NPE (or silently yield a wrong value) — raise the standard
-    * analysis errors instead. Shared with [[GraftFunctions]] so the
-    * per-session and extension-injection routes stay behavior-identical. */
-  private[plans] def literalInt(e: Expression, fn: String, param: String): Int = {
-    if (!e.foldable)
-      throw new org.apache.spark.sql.AnalysisException("NON_FOLDABLE_ARGUMENT",
-        Map("funcName" -> s"`$fn`", "paramName" -> s"`$param`", "paramType" -> "\"INT\""))
-    val v = e.eval()
-    if (v == null)
-      throw new org.apache.spark.sql.AnalysisException("INVALID_PARAMETER_VALUE.NULL",
-        Map("parameter" -> s"`$param`", "functionName" -> s"`$fn`"))
-    v.asInstanceOf[Number].intValue()
-  }
-}
-
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.literalInt
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(t)       => MinHashSignature(t, 3, 32, nfc = false)
-        case Seq(t, k, n) => MinHashSignature(t,
-          literalInt(k, "minhash", "shingleSize"),
-          literalInt(n, "minhash", "numHashes"), nfc = false)
-        case _ => throw new IllegalArgumentException(
-          "minhash(text[, shingleSize, numHashes])")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs(0), nfc = false)))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1),
-        winkler = true)))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_similarity"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_similarity"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1),
-        winkler = false)))
-    ext.injectFunction((
-      FunctionIdentifier("token_lcs"),
-      new ExpressionInfo(classOf[TokenLcs].getName, "token_lcs"),
-      (exprs: Seq[Expression]) => TokenLcs(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("squared_l2"),
-      new ExpressionInfo(classOf[SquaredL2].getName, "squared_l2"),
-      (exprs: Seq[Expression]) => SquaredL2(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hash_set"),
-      new ExpressionInfo(classOf[ShingleHashSet].getName, "shingle_hash_set"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(t)    => ShingleHashSet(t, 3, nfc = false)
-        case Seq(t, k) => ShingleHashSet(t, literalInt(k, "shingle_hash_set", "shingleSize"), nfc = false)
-        case _ => throw new IllegalArgumentException("shingle_hash_set(text[, shingleSize])")
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    NativeFunctions.table.filter(_.sqlArities.nonEmpty).foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(classOf[NativeCall].getName, f.name), f.fromSql _))
+    }
 }

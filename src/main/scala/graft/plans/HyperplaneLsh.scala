@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.functions.lit
 
 /** Native random-hyperplane LSH bucketing: `hyperplane_lsh(vec)` → 64-bit
   * bucket id whose bit (p - planeOffset) is the sign of the dot product of
@@ -14,11 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   *
   * Why native: this is the full-corpus bucketing pass feeding LSH ANN and
   * embedding near-dup clustering — the widest scan in the dedup pipeline.
-  * The higher-order-function form ([[graft.functions.VectorFunctions
-  * .lshBucketsHof]]) is CodegenFallback: a nested interpreted
-  * `aggregate(zip_with(...))` per plane per row. This expression compiles
-  * to one static JIT'd loop inside whole-stage codegen (the
-  * [[SimHash64]] pattern).
+  * The higher-order-function form (the reference in VectorFunctionsSpec)
+  * evaluates a nested interpreted `aggregate(zip_with(...))` per plane
+  * per row. This kernel is one static JIT'd loop inside whole-stage
+  * codegen (the [[SimHash64]] pattern).
   *
   * Bit-parity contract (asserted in VectorFunctionsSpec): identical hash
   * family (XXH64.hashInt(i, XXH64.hashInt(p, 42)) = builtin
@@ -27,41 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * a null ELEMENT nulls the plane dot so every plane bit is 0 (bucket 0),
   * exactly as null propagates through the HOF fold.
   */
-case class HyperplaneLsh(child: Expression, numPlanes: Int, planeOffset: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case _ if numPlanes < 1 || numPlanes > 64 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_lsh numPlanes must be in [1, 64], got $numPlanes")
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"hyperplane_lsh expects array<float|double>, got ${other.catalogString}")
-    }
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(input: Any): Any =
-    HyperplaneLsh.compute(input.asInstanceOf[ArrayData], isFloat, numPlanes, planeOffset)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.HyperplaneLsh.compute($c, $isFloat, $numPlanes, $planeOffset)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HyperplaneLsh {
 
-  /** Shared by interpreted eval and generated code. Plane p component i =
+  /** Kernel. Plane p component i =
     * pmod(xxhash64(p, i), 1e6) / 1e6 - 0.5 where xxhash64 is Spark's
     * builtin two-int composition: hashInt(i, seed = hashInt(p, 42)).
     * Accumulation is a left fold in element order (bit-identical to the
@@ -95,6 +60,9 @@ object HyperplaneLsh {
     bucket
   }
 
-  def apply(vec: Column, numPlanes: Int, planeOffset: Int = 0): Column =
-    GraftBridge.column(HyperplaneLsh(GraftBridge.expression(vec), numPlanes, planeOffset))
+  def apply(vec: Column, numPlanes: Int, planeOffset: Int = 0): Column = {
+    require(numPlanes >= 1 && numPlanes <= 64,
+      s"hyperplane_lsh numPlanes must be in [1, 64], got $numPlanes")
+    NativeFunctions("hyperplane_lsh")(vec, lit(numPlanes), lit(planeOffset))
+  }
 }

@@ -1,16 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: Jaro (and Jaro-Winkler) string similarity
-  * — the record-linkage gate Spark lacks (`levenshtein` is its only
-  * built-in edit metric, and absolute edit distance misranks short
-  * strings: one edit in 4 chars ≠ one edit in 40).
+/** Native `jaro_similarity` / `jaro_winkler`: Jaro (and Jaro-Winkler)
+  * string similarity — the record-linkage gate Spark lacks
+  * (`levenshtein` is its only built-in edit metric, and absolute edit
+  * distance misranks short strings: one edit in 4 chars ≠ one edit in
+  * 40).
   *
   * Definition (the classic one, matching DuckDB/RapidFuzz so results
   * are SQL-oracle-able): match window ⌊max(|a|,|b|)/2⌋−1, m matching
@@ -23,8 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * linkage domain); document non-ASCII expectations before relying on
   * exact cross-engine equality there.
   *
-  * Execution shape: implements `doGenCode` so it fuses into
-  * whole-stage codegen; the generated code is ONE call into the static
+  * Execution shape: whole-stage codegen emits ONE call into the static
   * [[JaroWinkler.sim]] (a JIT-compiled scratch-array loop — inlining
   * the whole DP into generated Java would only bloat the method past
   * JIT limits, the same trade Spark's own regexp expressions make).
@@ -34,51 +30,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale note: this is a SCALAR gate, evaluated per candidate pair —
   * at corpus scale generate candidates with a blocked join first
   * ([[graft.operators.EditDistance.levenshteinSelfJoin]] /
-  * [[graft.operators.SetSimJoin]]); all-pairs × this expression is the
+  * [[graft.operators.SetSimJoin]]); all-pairs × this function is the
   * documented anti-pattern.
   *
-  * Null contract: null if either side is null (BinaryExpression
-  * default).
+  * Null contract: null if either side is null.
   */
-case class JaroWinkler(left: Expression, right: Expression,
-                       winkler: Boolean) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"jaro expects string inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Double.valueOf(JaroWinkler.sim(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], winkler))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.JaroWinkler.sim($a, $b, $winkler);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object JaroWinkler {
 
   /** `jaro(a, b)` — plain Jaro similarity in [0, 1]. */
   def jaro(a: Column, b: Column): Column =
-    GraftBridge.column(JaroWinkler(
-      GraftBridge.expression(a), GraftBridge.expression(b), winkler = false))
+    NativeFunctions("jaro_similarity")(a, b)
 
   /** `jaro_winkler(a, b)` — prefix-boosted (ℓ ≤ 4, p = 0.1, boost
     * threshold 0.7). */
   def jaroWinkler(a: Column, b: Column): Column =
-    GraftBridge.column(JaroWinkler(
-      GraftBridge.expression(a), GraftBridge.expression(b), winkler = true))
+    NativeFunctions("jaro_winkler")(a, b)
 
   // Per-thread scratch (match flags for both strings), grown
   // geometrically — zero steady-state allocation in the codegen hot loop.
@@ -86,8 +52,7 @@ object JaroWinkler {
     override def initialValue(): Array[Boolean] = new Array[Boolean](256)
   }
 
-  /** Static entry the generated code calls. Public because generated
-    * Java lives outside this package. */
+  /** Kernel. Public because generated Java lives outside this package. */
   def sim(ua: UTF8String, ub: UTF8String, winkler: Boolean): Double = {
     val a = ua.toString
     val b = ub.toString

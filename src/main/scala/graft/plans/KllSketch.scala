@@ -7,11 +7,11 @@ import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** KLL quantile sketches (Apache DataSketches) as native Catalyst
@@ -27,13 +27,12 @@ import org.apache.spark.sql.types._
   * query. KLL guarantees ~1.65/k·√N normalized rank error (k = 200 →
   * ~0.8%), and min/max/n ride EXACTLY in the image.
   *
-  * All three aggregate/scalar forms are `TypedImperativeAggregate`/
-  * eval-only expressions (the buffer is the library's heap sketch;
-  * serialization happens only at shuffle boundaries — the
-  * ApproximatePercentile pattern, not a per-row UDF deserialize). The
-  * scalar readers are cold-path by design: they run over one row per
-  * GROUP, never per input row, so CodegenFallback costs nothing
-  * measurable.
+  * The aggregates are `TypedImperativeAggregate`s (the buffer is the
+  * library's heap sketch; serialization happens only at shuffle
+  * boundaries — the ApproximatePercentile pattern, not a per-row UDF
+  * deserialize). The scalar readers ([[KllSketch.quantiles]],
+  * [[KllSketch.stats]]) are cold-path by design: they run over one row
+  * per GROUP, never per input row.
   */
 case class KllSketchAgg(child: Expression, k: Int,
                         mutableAggBufferOffset: Int = 0,
@@ -121,63 +120,6 @@ case class KllMergeAgg(child: Expression, k: Int,
   override def prettyName: String = "kll_merge_agg"
 }
 
-/** Quantile values at the given ranks from a serialized KLL image
-  * (INCLUSIVE search criteria — the library default: the value whose
-  * rank is >= the requested rank). Null for an empty sketch. Cold path:
-  * one row per group. */
-case class KllQuantiles(child: Expression, ranks: Seq[Double])
-    extends UnaryExpression with CodegenFallback {
-
-  require(ranks.nonEmpty && ranks.forall(r => r >= 0.0 && r <= 1.0),
-    s"ranks must be non-empty, each in [0, 1]: $ranks")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a serialized KLL binary input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val sk = KllDoublesSketch.heapify(Memory.wrap(bytes.asInstanceOf[Array[Byte]]))
-    if (sk.isEmpty) null
-    else new GenericArrayData(
-      sk.getQuantiles(ranks.toArray, QuantileSearchCriteria.INCLUSIVE))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): KllQuantiles =
-    copy(child = newChild)
-  override def prettyName: String = "kll_quantiles"
-}
-
-/** Exact stream facts carried by a KLL image: (n, min, max) — the
-  * sketch tracks them exactly regardless of compaction, so they
-  * hash-oracle against `count/min/max` in any engine. Null for an empty
-  * sketch. */
-case class KllStats(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a serialized KLL binary input, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("min_v", DoubleType, nullable = false),
-    StructField("max_v", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val sk = KllDoublesSketch.heapify(Memory.wrap(bytes.asInstanceOf[Array[Byte]]))
-    if (sk.isEmpty) null
-    else InternalRow(sk.getN, sk.getMinItem, sk.getMaxItem)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): KllStats =
-    copy(child = newChild)
-  override def prettyName: String = "kll_stats"
-}
-
 object KllSketch {
   val DefaultK = 200
 
@@ -191,11 +133,39 @@ object KllSketch {
     GraftBridge.column(
       KllMergeAgg(GraftBridge.expression(image), k).toAggregateExpression())
 
-  /** Quantile values at `ranks` from an image column. */
-  def quantiles(image: Column, ranks: Seq[Double]): Column =
-    GraftBridge.column(KllQuantiles(GraftBridge.expression(image), ranks))
+  /** Quantile values at `ranks` from an image column (INCLUSIVE search
+    * criteria — the library default: the value whose rank is >= the
+    * requested rank). Null for an empty sketch. */
+  def quantiles(image: Column, ranks: Seq[Double]): Column = {
+    require(ranks.nonEmpty && ranks.forall(r => r >= 0.0 && r <= 1.0),
+      s"ranks must be non-empty, each in [0, 1]: $ranks")
+    NativeFunctions("kll_quantiles")(image, lit(ranks.toArray))
+  }
 
-  /** Exact (n, min_v, max_v) struct from an image column. */
+  /** Exact stream facts carried by a KLL image: (n, min_v, max_v) — the
+    * sketch tracks them exactly regardless of compaction, so they
+    * hash-oracle against `count/min/max` in any engine. Null for an
+    * empty sketch. */
   def stats(image: Column): Column =
-    GraftBridge.column(KllStats(GraftBridge.expression(image)))
+    NativeFunctions("kll_stats")(image)
+
+  val StatsType: DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("min_v", DoubleType, nullable = false),
+    StructField("max_v", DoubleType, nullable = false)))
+
+  /** Kernel of [[quantiles]]. */
+  def quantileValues(bytes: Array[Byte], ranks: ArrayData): ArrayData = {
+    val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
+    if (sk.isEmpty) null
+    else new GenericArrayData(
+      sk.getQuantiles(ranks.toDoubleArray(), QuantileSearchCriteria.INCLUSIVE))
+  }
+
+  /** Kernel of [[stats]]. */
+  def streamStats(bytes: Array[Byte]): InternalRow = {
+    val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
+    if (sk.isEmpty) null
+    else InternalRow(sk.getN, sk.getMinItem, sk.getMaxItem)
+  }
 }

@@ -1,17 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: L2-normalized copy of an `array<float>`
-  * vector — bit-identical to the HOF chain in
-  * [[graft.functions.VectorFunctions.l2Normalized]] (which stays the
-  * reference implementation in VectorFunctionsSpec): norm² accumulates
+/** Native `l2_normalize`: L2-normalized copy of an `array<float>` vector
+  * — bit-identical to the interpreted HOF chain that stays the reference
+  * implementation in VectorFunctionsSpec: norm² accumulates
   * left-to-right in doubles exactly like the `aggregate∘zip_with` fold,
   * each element divides in double then narrows to float exactly like
   * `transform(v, x -> x / norm)` under the array<float> cast, and a
@@ -26,37 +20,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * checkpoint AND the encode checkpoint). One codegen'd static call is
   * the [[CosineSimilarity]] discipline applied to the normalize pass.
   */
-case class L2Normalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = child.dataType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"l2_normalize expects array<float>, got ${t.catalogString}")
-    }
-
-  override def nullSafeEval(v: Any): Any =
-    L2Normalize.normalize(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.plans.L2Normalize.normalize($v);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object L2Normalize {
 
-  def of(v: Column): Column =
-    GraftBridge.column(L2Normalize(GraftBridge.expression(v)))
+  def of(v: Column): Column = NativeFunctions("l2_normalize")(v)
 
-  /** Static entry the generated code calls. Returns the INPUT ArrayData
+  /** Kernel. Returns the INPUT ArrayData
     * unchanged when the norm is not strictly positive (zero vector, NaN,
     * or a null element nulls the fold — the HOF `otherwise` branch). */
   def normalize(v: ArrayData): ArrayData = {

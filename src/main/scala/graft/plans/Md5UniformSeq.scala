@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the engine's md5 uniform
+/** Native `md5_uniform_seq`: the engine's md5 uniform
   * ([[graft.operators.Splits.uniformFromId]]) drawn B times per row in
   * ONE static call — u_r = (first-52-bits-of md5(prefix ‖ r) + 1) / 2^52
   * for r = 1..b, returned as array<double>.
@@ -29,44 +26,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * into a cheap posexplode over a primitive double array. Measured ~3×
   * on the q243/q244 replicate stage at sf0.1, B = 200.
   *
-  * Null contract: null prefix → null array (UnaryExpression default).
+  * Null contract: null prefix → null array.
   */
-case class Md5UniformSeq(child: Expression, b: Int) extends UnaryExpression {
-
-  require(b >= 1 && b <= 1000000,
-    s"md5_uniform_seq: b must be in [1, 1e6], got $b")
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"md5_uniform_seq expects a string prefix, got ${t.catalogString}")
-    }
-
-  override def nullSafeEval(prefix: Any): Any =
-    Md5UniformSeq.uniforms(prefix.asInstanceOf[UTF8String], b)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, p =>
-      s"${ev.value} = graft.plans.Md5UniformSeq.uniforms($p, $b);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Md5UniformSeq {
 
   /** `md5_uniform_seq(prefix, b)` — prefix already carries salt ‖ id ‖ '#';
     * element r−1 of the result is the uniform for replicate r (1-based). */
-  def of(prefix: Column, b: Int): Column =
-    GraftBridge.column(Md5UniformSeq(GraftBridge.expression(prefix), b))
+  def of(prefix: Column, b: Int): Column = {
+    require(b >= 1 && b <= 1000000,
+      s"md5_uniform_seq: b must be in [1, 1e6], got $b")
+    NativeFunctions("md5_uniform_seq")(prefix, lit(b))
+  }
 
   private val TwoTo52 = 4503599627370496.0 // 2^52
 
-  /** Static entry the generated code calls. */
+  /** Kernel. */
   def uniforms(prefix: UTF8String, b: Int): ArrayData = {
     val pre = prefix.getBytes
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MinHash signature: `minhash(text)` → array<bigint> of
@@ -14,10 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why native: a MinHash signature is per-row computable — the scale-
   * correct plan has NO shuffle until the (tiny) signature rows. The
   * higher-order-function formulation keeps that shape but evaluates
-  * interpreted (HOFs are CodegenFallback), and the explode+aggregate
-  * formulation is codegen'd but shuffles every shingle. This expression
-  * gets both: one JIT'd loop per row inside whole-stage codegen, zero
-  * shuffle. (SURVEY.md §4: custom Expression for hot-path north-star ops.)
+  * interpreted, and the explode+aggregate formulation is codegen'd but
+  * shuffles every shingle. This kernel gets both: one JIT'd loop per row
+  * inside whole-stage codegen, zero shuffle. (SURVEY.md §4: custom
+  * Expression for hot-path north-star ops.)
   *
   * Hash family (aligned with the pure-builtin formulation
   * [[graft.operators.Dedup.minHashSignatureAgg]] so the two are
@@ -28,36 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * from either path can be banded together. (ASCII-exact; both paths
   * lowercase via the same ASCII fast path for the corpus alphabet.)
   */
-case class MinHashSignature(child: Expression, shingleSize: Int, numHashes: Int,
-                            nfc: Boolean)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"minhash expects a string column, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSignature.compute(input.asInstanceOf[UTF8String], shingleSize, numHashes, nfc)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.MinHashSignature.compute($c, $shingleSize, $numHashes, $nfc)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object MinHashSignature {
 
-  /** Static entry point shared by interpreted eval and generated code:
-    * lowercase, whitespace-tokenize, then one pass per shingle hashing the
-    * space-joined window (via a reused byte buffer — one allocation per
+  /** Kernel: lowercase, whitespace-tokenize, then one pass per shingle
+    * hashing the space-joined window (via a reused byte buffer — one allocation per
     * row, not per shingle) and updating all `numHashes` minima.
     * Bit-identical to the builtin composition
     * `min(xxhash64(lit(j.toLong), xxhash64(shingle_string)))`. */
@@ -114,6 +86,5 @@ object MinHashSignature {
 
   def apply(text: Column, shingleSize: Int = 3, numHashes: Int = 32,
             nfc: Boolean = false): Column =
-    GraftBridge.column(MinHashSignature(GraftBridge.expression(text),
-      shingleSize, numHashes, nfc))
+    NativeFunctions("minhash")(text, lit(shingleSize), lit(numHashes), lit(nfc))
 }

@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the sorted-char-multiset deletion
+/** Native `multiset_variant_keys`: the sorted-char-multiset deletion
   * variants of [[graft.operators.JwJoin.multisetKeys]], up to depth
   * d ≤ 2, as the same flat strings the HOF chain rendered —
   * `"<depth digit><deleted chars><variant>"` over the CHAR-SORTED
@@ -25,44 +22,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * numeric code-point sort); all indexing is code-point-based, exactly
   * like SQL `substr` on UTF8String.
   *
-  * Null contract: null in → null out (UnaryExpression default); the
-  * empty string yields just its depth-0 variant ["0"]. */
-case class MultisetVariantKeys(child: Expression, d: Int)
-    extends UnaryExpression {
-
-  require(d >= 0 && d <= 2,
-    s"multiset_variant_keys: depth must be in [0,2], got $d")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"multiset_variant_keys expects a string input, got " +
-          s"${child.dataType.catalogString}")
-
-  override def nullSafeEval(s: Any): Any =
-    MultisetVariantKeys.variants(s.asInstanceOf[UTF8String], d)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.MultisetVariantKeys.variants($c, $d);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+  * Null contract: null in → null out; the empty string yields just its
+  * depth-0 variant ["0"]. */
 object MultisetVariantKeys {
 
   /** `multiset_variant_keys(s, d)` — sorted-multiset deletion variants
     * of the raw string `s` (sorting happens inside). */
-  def of(s: Column, d: Int): Column =
-    GraftBridge.column(MultisetVariantKeys(GraftBridge.expression(s), d))
+  def of(s: Column, d: Int): Column = {
+    require(d >= 0 && d <= 2,
+      s"multiset_variant_keys: depth must be in [0,2], got $d")
+    NativeFunctions("multiset_variant_keys")(s, lit(d))
+  }
 
-  /** Static entry the generated code calls. */
+  /** Kernel. */
   def variants(us: UTF8String, d: Int): GenericArrayData = {
     // code-point array, sorted ascending — identical order to
     // array_sort over 1-char UTF8Strings (UTF-8 is order-preserving)

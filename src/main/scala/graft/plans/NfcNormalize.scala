@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native `nfc_normalize(text)` → the Unicode NFC (canonical composition)
   * form of the string. Spark has no builtin normalization function; this
-  * expression supplies it with the exact name and semantics of DuckDB's
+  * kernel supplies it with the exact name and semantics of DuckDB's
   * `nfc_normalize`, so plans using it stay oracle-checkable — the dedup
   * building block for corpora that mix composed (U+00E9) and decomposed
   * (e + U+0301) producers, composable with `lower()`/`sha2()` for
@@ -18,28 +15,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * `Normalizer.isNormalized` short-circuits already-NFC (e.g. all-ASCII)
   * rows to a scan — the overwhelmingly common case costs no allocation.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"nfc_normalize expects a string column, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    NfcNormalize.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NfcNormalize.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object NfcNormalize {
 
   def compute(text: UTF8String): UTF8String = {
@@ -49,6 +24,5 @@ object NfcNormalize {
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
   }
 
-  def apply(text: Column): Column =
-    GraftBridge.column(NfcNormalize(GraftBridge.expression(text)))
+  def apply(text: Column): Column = NativeFunctions("nfc_normalize")(text)
 }

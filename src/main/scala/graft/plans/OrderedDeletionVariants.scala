@@ -1,14 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: the ORDER-PRESERVING deletion
+/** Native `ordered_deletion_variants`: the ORDER-PRESERVING deletion
   * neighborhood of [[graft.operators.EditDistance.deletionVariants]] —
   * every string reachable by ≤ d single-character deletions, original
   * included, duplicates collapsed keep-first, in exactly the order the
@@ -25,43 +22,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * (bit-identical to SQL `substr` — code-point indexed) and a
   * keep-first LinkedHashSet.
   *
-  * Null contract: null in → null out (UnaryExpression default); "" →
-  * [""] at any depth (deleting from the empty string adds nothing).
+  * Null contract: null in → null out; "" → [""] at any depth (deleting
+  * from the empty string adds nothing).
   */
-case class OrderedDeletionVariants(child: Expression, d: Int)
-    extends UnaryExpression {
-
-  require(d >= 0 && d <= 3,
-    s"ordered_deletion_variants: depth must be in [0,3], got $d")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ordered_deletion_variants expects a string input, got " +
-          s"${child.dataType.catalogString}")
-
-  override def nullSafeEval(s: Any): Any =
-    OrderedDeletionVariants.variants(s.asInstanceOf[UTF8String], d)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.OrderedDeletionVariants.variants($c, $d);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object OrderedDeletionVariants {
 
-  def of(s: Column, d: Int): Column =
-    GraftBridge.column(OrderedDeletionVariants(GraftBridge.expression(s), d))
+  def of(s: Column, d: Int): Column = {
+    require(d >= 0 && d <= 3,
+      s"ordered_deletion_variants: depth must be in [0,3], got $d")
+    NativeFunctions("ordered_deletion_variants")(s, lit(d))
+  }
 
-  /** Static entry the generated code calls: breadth-first closure, the
+  /** Kernel: breadth-first closure, the
     * HOF's append order (previous level's survivors in order, then each
     * one's deletions left-to-right), keep-first dedup. */
   def variants(us: UTF8String, d: Int): GenericArrayData = {

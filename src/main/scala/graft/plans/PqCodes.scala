@@ -1,63 +1,65 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
-/** Product-quantization codec expressions (Jégou et al., "Product
+/** Product-quantization codec kernels (Jégou et al., "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011) — the
   * compression layer under [[graft.functions.PqIndex]].
   *
   * A 100 TB embedding corpus at 64 float dims is 256 bytes/vector;
   * PQ with m sub-quantizers stores m BYTES per vector (32× here) and
   * answers approximate distances straight from the codes — the scan
-  * reads a binary column, never the raw vectors. Both expressions are
-  * whole-stage-codegen'd primitive loops over constants pinned into the
-  * generated class (`addReferenceObj`), the [[SquaredL2]] discipline:
-  * no boxing, no UDF serialization on the hot path.
+  * reads a binary column, never the raw vectors. Both kernels are
+  * primitive loops inside whole-stage codegen over a constant table
+  * passed once per task ([[ConstTable]]), the [[SquaredL2]] discipline:
+  * no UDF serialization on the hot path.
   */
+object PqCodes {
 
-/** Encode a vector into m PQ code bytes: for each of the m contiguous
-  * sub-vectors, the index of the nearest codebook centroid (squared L2,
-  * ties to the LOWEST code — deterministic). `codebooks(s)(c)` is
-  * centroid c of subspace s; all subspaces share `ksub = codebooks(s)
-  * .length <= 256` and `subDim = dim / m`. Null input → null; a vector
-  * whose length differs from m·subDim → null (malformed row, the
-  * [[SquaredL2]] convention). */
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
-    extends UnaryExpression {
-
-  private val m = codebooks.length
-  private val ksub = codebooks.head.length
-  private val subDim = codebooks.head.head.length
-  require(m >= 1 && ksub >= 1 && ksub <= 256,
-    s"need 1 <= ksub <= 256 codes per subspace (one byte each), got $ksub")
-  require(codebooks.forall(cb => cb.length == ksub &&
-    cb.forall(_.length == subDim)),
-    "ragged codebooks: every subspace needs ksub centroids of subDim dims")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_encode expects array<float|double>, got ${t.catalogString}")
-  }
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  private def isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
+  /** `pq_encode(vec)`: m PQ code bytes — for each of the m contiguous
+    * sub-vectors, the index of the nearest codebook centroid (squared L2,
+    * ties to the LOWEST code — deterministic). `codebooks(s)(c)` is
+    * centroid c of subspace s; all subspaces share `ksub =
+    * codebooks(s).length <= 256` and `subDim = dim / m`. Null input →
+    * null; a vector whose length differs from m·subDim, or with a null
+    * element → null (malformed row, the [[SquaredL2]] convention). */
+  def encode(vec: Column, codebooks: Array[Array[Array[Float]]]): Column = {
+    val m = codebooks.length
+    val ksub = codebooks.head.length
+    val subDim = codebooks.head.head.length
+    require(m >= 1 && ksub >= 1 && ksub <= 256,
+      s"need 1 <= ksub <= 256 codes per subspace (one byte each), got $ksub")
+    require(codebooks.forall(cb => cb.length == ksub &&
+      cb.forall(_.length == subDim)),
+      "ragged codebooks: every subspace needs ksub centroids of subDim dims")
+    NativeFunctions("pq_encode")(vec,
+      ConstTable.lit(s"pq codebooks ${m}x${ksub}x$subDim", codebooks))
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData]
+  /** `pq_adc(codes)`: asymmetric distance computation — approximate
+    * squared L2 between the (uncompressed) query and a PQ-coded vector,
+    * summed from a per-subspace lookup table the caller precomputes
+    * driver-side: `lut(s)(c)` = ||query_s − codebook_s[c]||². One
+    * binary-column read + m table lookups per row; the codes column IS
+    * the dataset at scan time. Null codes → null; wrong code width →
+    * null. */
+  def adc(codes: Column, lut: Array[Array[Float]]): Column = {
+    require(lut.length >= 1, "empty lookup table")
+    NativeFunctions("pq_adc")(codes,
+      ConstTable.lit(s"pq lut ${lut.length}x${lut.head.length}", lut))
+  }
+
+  /** Kernel of [[encode]]. */
+  def nearestCodes(xs: ArrayData, isFloat: Boolean,
+                   table: ConstTable[Array[Array[Array[Float]]]]): Array[Byte] = {
+    val codebooks = table.value
+    val m = codebooks.length
+    val ksub = codebooks(0).length
+    val subDim = codebooks(0)(0).length
     if (xs.numElements() != m * subDim) return null
-    val fl = isFloat
+    var i = 0
+    while (i < m * subDim) { if (xs.isNullAt(i)) return null; i += 1 }
     val out = new Array[Byte](m)
     var s = 0
     while (s < m) {
@@ -69,7 +71,7 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
         var d = 0.0
         var j = 0
         while (j < subDim) {
-          val x = if (fl) xs.getFloat(s * subDim + j).toDouble
+          val x = if (isFloat) xs.getFloat(s * subDim + j).toDouble
                   else xs.getDouble(s * subDim + j)
           val diff = x - cent(j)
           d += diff * diff
@@ -84,67 +86,11 @@ case class PqEncode(child: Expression, codebooks: Array[Array[Array[Float]]])
     out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("pqCodebooks", codebooks, "float[][][]")
-    val getter = if (isFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, x => {
-      val s = ctx.freshName("s"); val c = ctx.freshName("c")
-      val j = ctx.freshName("j"); val d = ctx.freshName("d")
-      val diff = ctx.freshName("diff"); val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD"); val out = ctx.freshName("out")
-      val cent = ctx.freshName("cent")
-      s"""
-         |if ($x.numElements() != ${m * subDim}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $out = new byte[$m];
-         |  for (int $s = 0; $s < $m; $s++) {
-         |    int $best = 0;
-         |    double $bestD = Double.MAX_VALUE;
-         |    for (int $c = 0; $c < $ksub; $c++) {
-         |      float[] $cent = $cb[$s][$c];
-         |      double $d = 0.0;
-         |      for (int $j = 0; $j < $subDim; $j++) {
-         |        double $diff = (double) $x.$getter($s * $subDim + $j) - $cent[$j];
-         |        $d += $diff * $diff;
-         |      }
-         |      if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |    }
-         |    $out[$s] = (byte) $best;
-         |  }
-         |  ${ev.value} = $out;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-  override def prettyName: String = "pq_encode"
-}
-
-/** Asymmetric distance computation: approximate squared L2 between the
-  * (uncompressed) query and a PQ-coded vector, summed from a
-  * per-subspace lookup table the caller precomputes driver-side —
-  * `lut(s)(c)` = ||query_s − codebook_s[c]||². One binary-column read +
-  * m table lookups per row; the codes column IS the dataset at scan
-  * time. Null codes → null; wrong code width → null. */
-case class PqAdc(child: Expression, lut: Array[Array[Float]])
-    extends UnaryExpression {
-
-  private val m = lut.length
-  require(m >= 1, "empty lookup table")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pq_adc expects the binary pq_encode codes, got ${t.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val codes = input.asInstanceOf[Array[Byte]]
+  /** Kernel of [[adc]]. */
+  def adcDistance(codes: Array[Byte],
+                  table: ConstTable[Array[Array[Float]]]): java.lang.Double = {
+    val lut = table.value
+    val m = lut.length
     if (codes.length != m) return null
     var acc = 0.0
     var s = 0
@@ -154,34 +100,4 @@ case class PqAdc(child: Expression, lut: Array[Array[Float]])
     }
     java.lang.Double.valueOf(acc)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tbl = ctx.addReferenceObj("pqLut", lut, "float[][]")
-    nullSafeCodeGen(ctx, ev, x => {
-      val s = ctx.freshName("s"); val acc = ctx.freshName("acc")
-      s"""
-         |if ($x.length != $m) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $s = 0; $s < $m; $s++) {
-         |    $acc += $tbl[$s][$x[$s] & 0xFF];
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqAdc =
-    copy(child = newChild)
-  override def prettyName: String = "pq_adc"
-}
-
-object PqCodes {
-  def encode(vec: Column, codebooks: Array[Array[Array[Float]]]): Column =
-    GraftBridge.column(PqEncode(GraftBridge.expression(vec), codebooks))
-
-  def adc(codes: Column, lut: Array[Array[Float]]): Column =
-    GraftBridge.column(PqAdc(GraftBridge.expression(codes), lut))
 }

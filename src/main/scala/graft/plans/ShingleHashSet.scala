@@ -1,10 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native `shingle_hash_set(text)` → sorted distinct array<bigint> of
@@ -14,31 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash sets equals string-shingle Jaccard up to 64-bit collisions.
   * Sorted output makes downstream set intersection mergeable.
   */
-case class ShingleHashSet(child: Expression, shingleSize: Int,
-                          nfc: Boolean)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"shingle_hash_set expects a string column, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashSet.compute(input.asInstanceOf[UTF8String], shingleSize, nfc)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.ShingleHashSet.compute($c, $shingleSize, $nfc)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object ShingleHashSet {
 
   def compute(text: UTF8String, shingleSize: Int, nfc: Boolean = false): ArrayData = {
@@ -73,5 +47,5 @@ object ShingleHashSet {
   }
 
   def apply(text: Column, shingleSize: Int = 3, nfc: Boolean = false): Column =
-    GraftBridge.column(ShingleHashSet(GraftBridge.expression(text), shingleSize, nfc))
+    NativeFunctions("shingle_hash_set")(text, lit(shingleSize), lit(nfc))
 }

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native SimHash: `simhash64(text)` → 64-bit fingerprint whose bit i is
@@ -14,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * computable — the scale-correct plan has NO shuffle until fingerprints
   * exist (one long per document). The explode + 64-sum-aggregates
   * formulation ([[graft.operators.Dedup.simHashAgg]]) shuffles one row
-  * per corpus token; this expression is one JIT'd loop inside
+  * per corpus token; this kernel is one JIT'd loop inside
   * whole-stage codegen.
   *
   * Hash family: token hash = xxhash64(token) (XXH64 over UTF-8 bytes,
@@ -22,31 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * bit-identical (asserted in DedupSpec). Ties (bit-sum 0) count as 0,
   * matching `sum > 0` in the aggregate form.
   */
-case class SimHash64(child: Expression, nfc: Boolean) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"simhash64 expects a string column, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.compute(input.asInstanceOf[UTF8String], nfc)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.SimHash64.compute($c, $nfc)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHash64 {
 
-  /** Shared by interpreted eval and generated code: lowercase,
+  /** Kernel: lowercase,
     * whitespace-tokenize, hash each token once (seed 42 = builtin
     * xxhash64), accumulate the 64 bit counters, assemble sign bits. */
   def compute(text: UTF8String, nfc: Boolean = false): Long = {
@@ -74,5 +50,5 @@ object SimHash64 {
   }
 
   def apply(text: Column, nfc: Boolean = false): Column =
-    GraftBridge.column(SimHash64(GraftBridge.expression(text), nfc))
+    NativeFunctions("simhash64")(text, lit(nfc))
 }

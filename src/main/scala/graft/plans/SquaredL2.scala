@@ -1,107 +1,41 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expression: squared euclidean (L2²) distance between
+/** Native `squared_l2(a, b)`: squared euclidean (L2²) distance between
   * two numeric arrays, accumulated in double over array order.
   *
   * The k-means assignment primitive: cluster assignment scores every
   * corpus vector against every centroid (corpus × k evaluations), which
-  * makes this THE hot loop of distributed clustering — the same
-  * CodegenFallback argument as [[CosineSimilarity]] applies, so it
-  * implements `doGenCode` and fuses into the enclosing whole-stage
-  * codegen as one primitive loop. Squared (not rooted) on purpose:
-  * argmin is invariant under sqrt and the root costs a transcendental
-  * per evaluation.
+  * makes this THE hot loop of distributed clustering — the same argument
+  * as [[CosineSimilarity]] applies, so it runs as one primitive loop
+  * inside the enclosing whole-stage codegen. Squared (not rooted) on
+  * purpose: argmin is invariant under sqrt and the root costs a
+  * transcendental per evaluation.
   *
-  * Null contract: null if either input is null (BinaryExpression
-  * default) or if lengths differ.
+  * Null contract: null if either input is null, if lengths differ, or if
+  * an element is null.
   */
-case class SquaredL2(left: Expression, right: Expression)
-    extends BinaryExpression {
+object SquaredL2 {
+  /** Column-level entry point: `squared_l2(a, b)`. */
+  def apply(a: Column, b: Column): Column =
+    NativeFunctions("squared_l2")(a, b)
 
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _                                                  => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"squared_l2 expects array<float|double> inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-  }
-
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val ys = b.asInstanceOf[ArrayData]
+  /** Kernel; `aFloat`/`bFloat` give each array's element type. */
+  def distance(xs: ArrayData, ys: ArrayData, aFloat: Boolean,
+               bFloat: Boolean): java.lang.Double = {
     val n = xs.numElements()
     if (n != ys.numElements()) return null
-    val lt = elemType(left)
-    val rt = elemType(right)
     var acc = 0.0
     var i = 0
     while (i < n) {
-      val d = toDouble(xs, i, lt) - toDouble(ys, i, rt)
+      if (xs.isNullAt(i) || ys.isNullAt(i)) return null
+      val d = (if (aFloat) xs.getFloat(i).toDouble else xs.getDouble(i)) -
+        (if (bFloat) ys.getFloat(i).toDouble else ys.getDouble(i))
       acc += d * d
       i += 1
     }
     java.lang.Double.valueOf(acc)
   }
-
-  private def toDouble(arr: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType => arr.getFloat(i).toDouble
-    case _         => arr.getDouble(i)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lt = elemType(left)
-    val rt = elemType(right)
-    def getter(arr: String, i: String, t: DataType): String = t match {
-      case FloatType => s"(double) $arr.getFloat($i)"
-      case _         => s"$arr.getDouble($i)"
-    }
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $d = ${getter(a, i, lt)} - ${getter(b, i, rt)};
-         |    $acc += $d * $d;
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SquaredL2 {
-  /** Column-level entry point: `squared_l2(a, b)`. */
-  def apply(a: Column, b: Column): Column =
-    GraftBridge.column(SquaredL2(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
 }

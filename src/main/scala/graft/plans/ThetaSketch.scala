@@ -8,9 +8,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -123,69 +122,6 @@ case class ThetaUnionAgg(child: Expression, lgK: Int,
   override def prettyName: String = "theta_union_agg"
 }
 
-private[plans] object ThetaOps {
-  def read(bytes: Any): Sketch =
-    CompactSketch.heapify(Memory.wrap(bytes.asInstanceOf[Array[Byte]]))
-
-  def binaryCheck(name: String, l: Expression, r: Expression): TypeCheckResult =
-    if (l.dataType == BinaryType && r.dataType == BinaryType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name needs two serialized theta binaries, got " +
-        s"${l.dataType.catalogString} / ${r.dataType.catalogString}")
-}
-
-/** Distinct-count estimate of a theta image (exact below the sketch's
-  * nominal k). */
-case class ThetaEstimate(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a serialized theta binary, got ${child.dataType.catalogString}")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(bytes: Any): Any = ThetaOps.read(bytes).getEstimate
-  override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
-    copy(child = newChild)
-  override def prettyName: String = "theta_estimate"
-}
-
-/** Intersection of two theta images → image (A ∩ B). */
-case class ThetaIntersect(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ThetaOps.binaryCheck(prettyName, left, right)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val i = SetOperation.builder().build(Family.INTERSECTION)
-      .asInstanceOf[Intersection]
-    i.intersect(ThetaOps.read(a))
-    i.intersect(ThetaOps.read(b))
-    i.getResult.toByteArray
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ThetaIntersect =
-    copy(left = l, right = r)
-  override def prettyName: String = "theta_intersect"
-}
-
-/** Difference of two theta images → image (A \ B). */
-case class ThetaDifference(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    ThetaOps.binaryCheck(prettyName, left, right)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val d = SetOperation.builder().build(Family.A_NOT_B).asInstanceOf[AnotB]
-    d.aNotB(ThetaOps.read(a), ThetaOps.read(b)).toByteArray
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ThetaDifference =
-    copy(left = l, right = r)
-  override def prettyName: String = "theta_difference"
-}
-
 object ThetaSketch {
   val DefaultLgK = 12
 
@@ -199,14 +135,36 @@ object ThetaSketch {
     GraftBridge.column(
       ThetaUnionAgg(GraftBridge.expression(image), lgK).toAggregateExpression())
 
+  /** Distinct-count estimate of a theta image (exact below the sketch's
+    * nominal k). */
   def estimate(image: Column): Column =
-    GraftBridge.column(ThetaEstimate(GraftBridge.expression(image)))
+    NativeFunctions("theta_estimate")(image)
 
+  /** Intersection of two theta images → image (A ∩ B). */
   def intersect(a: Column, b: Column): Column =
-    GraftBridge.column(
-      ThetaIntersect(GraftBridge.expression(a), GraftBridge.expression(b)))
+    NativeFunctions("theta_intersect")(a, b)
 
+  /** Difference of two theta images → image (A \ B). */
   def difference(a: Column, b: Column): Column =
-    GraftBridge.column(
-      ThetaDifference(GraftBridge.expression(a), GraftBridge.expression(b)))
+    NativeFunctions("theta_difference")(a, b)
+
+  private def read(bytes: Array[Byte]): Sketch =
+    CompactSketch.heapify(Memory.wrap(bytes))
+
+  /** Kernel of [[estimate]]. */
+  def estimateOf(bytes: Array[Byte]): Double = read(bytes).getEstimate
+
+  /** Kernel of [[intersect]]. */
+  def intersectOf(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val i = SetOperation.builder().build(Family.INTERSECTION)
+      .asInstanceOf[Intersection]
+    i.intersect(read(a))
+    i.intersect(read(b))
+    i.getResult.toByteArray
+  }
+
+  /** Kernel of [[difference]]. */
+  def differenceOf(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    SetOperation.builder().build(Family.A_NOT_B).asInstanceOf[AnotB]
+      .aNotB(read(a), read(b)).toByteArray
 }

@@ -1,19 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression: token-level longest common subsequence
+/** Native `token_lcs`: token-level longest common subsequence
   * length — the DP primitive under ROUGE-L (generation eval) that no
   * built-in expresses (`levenshtein` is char-level and distance-shaped;
   * ROUGE needs the ORDER-PRESERVING shared token count).
   *
   * Tokenization is the engine's lowercase-whitespace contract, applied
-  * INSIDE the expression so both sides see identical tokens regardless
+  * INSIDE the kernel so both sides see identical tokens regardless
   * of caller casing. The DP is the classic O(n·m) two-rolling-rows
   * recurrence — small integer arithmetic on interned token ids (each
   * side's tokens map to ints first, so the inner loop compares ints,
@@ -22,47 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * guard caps n·m at 10^8 cells and fails fast with the chunk-first
   * remedy rather than letting one row burn a task for minutes.
   *
-  * Execution shape: `doGenCode` fuses into whole-stage codegen as ONE
-  * static call (the [[JaroWinkler]] trade — inlining the DP would
+  * Execution shape: whole-stage codegen emits ONE static call (the
+  * [[JaroWinkler]] trade — inlining the DP would
   * bloat generated methods past JIT limits). The rolling rows are
   * thread-local and grown geometrically: zero steady-state allocation.
   *
-  * Null contract: null if either side is null (BinaryExpression
-  * default); empty/whitespace-only text has zero tokens → LCS 0.
+  * Null contract: null if either side is null; empty/whitespace-only
+  * text has zero tokens → LCS 0.
   */
-case class TokenLcs(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"token_lcs expects string inputs, got " +
-          s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.valueOf(TokenLcs.lcs(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.plans.TokenLcs.lcs($a, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object TokenLcs {
 
   /** `token_lcs(a, b)` — LCS length over lowercase-whitespace tokens. */
   def tokenLcs(a: Column, b: Column): Column =
-    GraftBridge.column(TokenLcs(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
+    NativeFunctions("token_lcs")(a, b)
 
   private val MaxCells = 100000000L
 
@@ -74,7 +42,7 @@ object TokenLcs {
   private def tokensOf(s: String): Array[String] =
     s.toLowerCase.split("\\s+").filter(_.nonEmpty)
 
-  /** Static entry the generated code calls. */
+  /** Kernel. */
   def lcs(ua: UTF8String, ub: UTF8String): Long = {
     val a = tokensOf(ua.toString)
     val b = tokensOf(ub.toString)

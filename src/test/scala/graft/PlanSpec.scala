@@ -67,8 +67,9 @@ class PlanSpec extends SparkSpec {
       .select(graft.functions.VectorFunctions.cosine(col("embedding"), col("qv")))
     val plan = executedPlan(df)
     // the "*(n)" prefix marks operators fused into WholeStageCodegen
-    assert("\\*\\(\\d+\\) Project \\[cosinesimilarity".r.findFirstIn(plan).isDefined,
-      s"expected cosinesimilarity inside a codegen'd (*-prefixed) Project in:\n$plan")
+    assert("\\*\\(\\d+\\) Project \\[static_invoke\\(graft\\.plans\\.CosineSimilarity\\.cosine\\("
+      .r.findFirstIn(plan).isDefined,
+      s"expected the cosine kernel inside a codegen'd (*-prefixed) Project in:\n$plan")
     assert(!plan.contains("CodegenFallback"), s"must not fall back:\n$plan")
   }
 
@@ -77,8 +78,9 @@ class PlanSpec extends SparkSpec {
     val df = graft.functions.VectorFunctions.lshBuckets(emb, "embedding", 16)
       .select("vec_id", "lsh_bucket")
     val plan = executedPlan(df)
-    assert("\\*\\(\\d+\\) Project \\[.*hyperplanelsh".r.findFirstIn(plan).isDefined,
-      s"expected hyperplanelsh inside a codegen'd (*-prefixed) Project in:\n$plan")
+    assert("\\*\\(\\d+\\) Project \\[.*graft\\.plans\\.HyperplaneLsh\\.compute\\("
+      .r.findFirstIn(plan).isDefined,
+      s"expected the hyperplane-LSH kernel inside a codegen'd (*-prefixed) Project in:\n$plan")
     assert(!plan.contains("CodegenFallback"), s"must not fall back:\n$plan")
   }
 

@@ -49,7 +49,7 @@ class VectorFunctionsSpec extends SparkSpec {
     for ((planes, off) <- Seq((16, 0), (8, 0), (8, 8), (64, 0), (1, 3))) {
       val native = VectorFunctions.lshBuckets(emb, "embedding", planes, off)
         .select($"vec_id", $"lsh_bucket".as("b_native"))
-      val hof = VectorFunctions.lshBucketsHof(emb, "embedding", planes, off)
+      val hof = graft.HofReference.lshBucketsHof(emb, "embedding", planes, off)
         .select($"vec_id", $"lsh_bucket".as("b_hof"))
       val diff = native.join(hof, "vec_id")
         .filter($"b_native" =!= $"b_hof" || $"b_native".isNull =!= $"b_hof".isNull)
@@ -65,7 +65,7 @@ class VectorFunctionsSpec extends SparkSpec {
       (3L, Some(Seq(Some(0.5), Some(-0.25), Some(3.75)))))     // plain doubles
       .toDF("id", "v")
     val native = VectorFunctions.lshBuckets(edge, "v", 16).select($"id", $"lsh_bucket".as("n"))
-    val hof = VectorFunctions.lshBucketsHof(edge, "v", 16).select($"id", $"lsh_bucket".as("h"))
+    val hof = graft.HofReference.lshBucketsHof(edge, "v", 16).select($"id", $"lsh_bucket".as("h"))
     val rows = native.join(hof, "id").orderBy("id").as[(Long, Long, Long)].collect()
     rows.foreach { case (id, n, h) => assert(n == h, s"id=$id native=$n hof=$h") }
     // empty / null-element / null-vec all land in bucket 0 on both paths
@@ -77,7 +77,7 @@ class VectorFunctionsSpec extends SparkSpec {
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val native = VectorFunctions.l2Normalized(emb, "embedding", "v")
       .select($"vec_id", $"v".as("v_native"))
-    val hof = VectorFunctions.l2NormalizedHof(emb, "embedding", "v")
+    val hof = graft.HofReference.l2NormalizedHof(emb, "embedding", "v")
       .select($"vec_id", $"v".as("v_hof"))
     val diff = native.join(hof, "vec_id")
       .filter($"v_native" =!= $"v_hof" ||
@@ -93,7 +93,7 @@ class VectorFunctionsSpec extends SparkSpec {
       .toDF("id", "v")
     val n2 = VectorFunctions.l2Normalized(edge, "v", "o")
       .select($"id", $"o").collect().map(r => r.getLong(0) -> r.get(1)).toMap
-    val h2 = VectorFunctions.l2NormalizedHof(edge, "v", "o")
+    val h2 = graft.HofReference.l2NormalizedHof(edge, "v", "o")
       .select($"id", $"o").collect().map(r => r.getLong(0) -> r.get(1)).toMap
     (0L to 5L).foreach { id =>
       assert(n2(id) == h2(id) ||

@@ -109,14 +109,14 @@ class BpeSpec extends SparkSpec {
       .as[(Long, Seq[String])].collect().toMap
     // the verbatim interpreted reference fold the operator used to run
     val gotHof = df.select(col("id"),
-        Bpe.encodeFoldHof(col("sym"), merges).as("out"))
+        graft.HofReference.encodeFoldHof(col("sym"), merges).as("out"))
       .as[(Long, Seq[String])].collect().toMap
     assert(got == gotHof, s"\ncodegen: $got\nhof:     $gotHof")
     // null array in -> null out on both forms
     val nullDf = Seq(Tuple1(Option.empty[Seq[String]])).toDF("sym")
     assert(nullDf.select(graft.plans.BpeMergeFold.of(col("sym"), merges))
       .collect().head.isNullAt(0))
-    assert(nullDf.select(Bpe.encodeFoldHof(col("sym"), merges))
+    assert(nullDf.select(graft.HofReference.encodeFoldHof(col("sym"), merges))
       .collect().head.isNullAt(0))
   }
 

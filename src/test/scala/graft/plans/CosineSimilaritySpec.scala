@@ -14,7 +14,7 @@ class CosineSimilaritySpec extends SparkSpec {
     val both = emb.crossJoin(broadcast(q)).select(
       $"vec_id",
       VectorFunctions.cosine($"embedding", $"qv").as("native"),
-      VectorFunctions.cosineHof($"embedding", $"qv").as("hof"))
+      graft.HofReference.cosineHof($"embedding", $"qv").as("hof"))
     val diffs = both.filter($"native" =!= $"hof" ||
       ($"native".isNull =!= $"hof".isNull)).count()
     assert(diffs == 0, "native and HOF cosine must agree exactly")
@@ -29,47 +29,5 @@ class CosineSimilaritySpec extends SparkSpec {
       .as[(Long, Option[Double])].collect().toMap
     assert(out(1L).isEmpty)
     assert(out(2L).isEmpty)
-  }
-
-  test("SQL registration works") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
-      .as[Double].collect().head
-    assert(math.abs(r - 1.0) < 1e-15)
-  }
-
-  test("per-session registry matches the extensions surface: minhash " +
-    "and shingle_hash_set with literal-parameter checks") {
-    GraftFunctions.register(spark)
-    val sig = spark.sql("SELECT minhash('a b c d e f') AS s")
-      .collect().head.getSeq[Long](0)
-    assert(sig.length == 32)
-    val sig8 = spark.sql("SELECT minhash('a b c d e f', 2, 8) AS s")
-      .collect().head.getSeq[Long](0)
-    assert(sig8.length == 8)
-    val sh = spark.sql("SELECT shingle_hash_set('a b c d e', 2) AS s")
-      .collect().head.getSeq[Long](0)
-    assert(sh.length == 4) // 4 distinct 2-shingles from 5 tokens
-    // a column-valued size parameter raises the analysis error, not an NPE
-    val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT minhash('a b', 2, CAST(id AS INT)) FROM range(1)")
-        .collect()
-    }
-    assert(e.getMessage.contains("numHashes"))
-  }
-
-  test("interpreted path (eval) agrees with codegen path") {
-    // force interpreted evaluation by disabling whole-stage codegen
-    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet").limit(50)
-    val q = emb.filter($"vec_id" === 0).select($"embedding".as("qv"))
-    def run(flag: String) = {
-      spark.conf.set("spark.sql.codegen.wholeStage", flag)
-      try emb.crossJoin(broadcast(q))
-        .select($"vec_id", VectorFunctions.cosine($"embedding", $"qv").as("c"))
-        .orderBy($"vec_id").as[(Long, Double)].collect().toSeq
-      finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
-    assert(run("false") == run("true"))
   }
 }

@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The extensions route needs its own session (spark.sql.extensions is
   * fixed at session build), so this spec builds one instead of using the
   * shared harness session. */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = {
     // getOrCreate ignores withExtensions when a session already exists
@@ -22,11 +23,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .getOrCreate()
   }
 
-  override protected def withFixture(test: NoArgTest) = {
-    val res = super.withFixture(test)
-    // leave a clean slate so the next suite's getOrCreate builds fresh
+  // leave a clean slate so the next suite's getOrCreate builds fresh
+  override protected def afterAll(): Unit = {
     spark.stop()
-    res
+    super.afterAll()
   }
 
   test("injected functions are available to pure SQL") {
@@ -73,7 +73,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
 
     // size parameters must be literals: a column-valued argument raises a
     // clear AnalysisException naming the parameter, not an NPE (ADVICE r1)
-    import org.apache.spark.sql.AnalysisException
     spark.range(3).toDF("n").createOrReplaceTempView("ext_n")
     val e1 = intercept[AnalysisException] {
       spark.sql("SELECT minhash('a b c', n, 16) FROM ext_n").collect()
@@ -87,5 +86,43 @@ class GraftExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT minhash('a b c', 3, CAST(NULL AS INT))").collect()
     }
     assert(e3.getMessage.contains("numHashes"), e3.getMessage)
+  }
+
+  test("SQL registration works") {
+    import spark.implicits._
+    val r = spark.sql(
+      "SELECT cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c")
+      .as[Double].collect().head
+    assert(math.abs(r - 1.0) < 1e-15)
+  }
+
+  test("minhash and shingle_hash_set SQL forms with literal-parameter checks") {
+    val sig = spark.sql("SELECT minhash('a b c d e f') AS s")
+      .collect().head.getSeq[Long](0)
+    assert(sig.length == 32)
+    val sig8 = spark.sql("SELECT minhash('a b c d e f', 2, 8) AS s")
+      .collect().head.getSeq[Long](0)
+    assert(sig8.length == 8)
+    val sh = spark.sql("SELECT shingle_hash_set('a b c d e', 2) AS s")
+      .collect().head.getSeq[Long](0)
+    assert(sh.length == 4) // 4 distinct 2-shingles from 5 tokens
+    // a column-valued size parameter raises the analysis error, not an NPE
+    val e = intercept[AnalysisException] {
+      spark.sql("SELECT minhash('a b', 2, CAST(id AS INT)) FROM range(1)")
+        .collect()
+    }
+    assert(e.getMessage.contains("numHashes"))
+  }
+
+  test("a wrong argument count raises WRONG_NUM_ARGS naming the function") {
+    Seq(
+      "cosine_similarity" -> "SELECT cosine_similarity(array(1.0D, 2.0D))",
+      "jaro_winkler" -> "SELECT jaro_winkler('a')",
+      "simhash64" -> "SELECT simhash64('a b c', 'zzz')",
+      "minhash" -> "SELECT minhash('a b c', 3)").foreach { case (fn, sql) =>
+      val e = intercept[AnalysisException](spark.sql(sql).collect())
+      assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", e.getMessage)
+      assert(e.getMessage.contains(s"`$fn`"), e.getMessage)
+    }
   }
 }

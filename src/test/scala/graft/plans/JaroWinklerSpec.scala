@@ -52,16 +52,11 @@ class JaroWinklerSpec extends SparkSpec {
     assert(out(1L).isEmpty && out(2L).isEmpty)
     assert(out(3L).nonEmpty)
 
-    // same expression through the interpreted path (eval) — filter with
-    // a non-codegen-friendly wrapper is overkill; instead call eval
-    // directly on the case class
+    // same kernel through the interpreted path: eval the StaticInvoke
+    // the function table builds
     import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.unsafe.types.UTF8String
-    val e = JaroWinkler(
-      Literal(UTF8String.fromString("kitten"),
-        org.apache.spark.sql.types.StringType),
-      Literal(UTF8String.fromString("sitting"),
-        org.apache.spark.sql.types.StringType), winkler = true)
+    val e = NativeCall("jaro_winkler",
+      Seq(Literal("kitten"), Literal("sitting"))).replacement
     assert(e.eval(null) == out(3L).get,
       "interpreted eval must equal the codegen result")
   }
