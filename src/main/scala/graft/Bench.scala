@@ -37,33 +37,16 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-      // Drop the query's LOCALLY-CHECKPOINTED blocks once it finishes —
-      // OUTSIDE the timed region: queries are independent, so
-      // localCheckpoint blocks left by query i are garbage to query i+1
-      // (lineage is truncated; nothing can or does re-read them after
-      // the noop sink) — but they accumulate over a 333-query board and
-      // turn late-board measurements into a function of heap history,
-      // not of the query (the q243 2–2.5× same-tree swing, VERDICT r16
-      // #4: its ×200 explode is the board's most allocation-heavy plan,
-      // timed ~3/4 through each pass; two boards after this fix read
-      // 8.27/8.14 s). ONLY the localCheckpoint class is dropped:
-      // Dataset-level caches are deliberate cross-query session state
-      // (LlmQueries.cachedIvfIndex's persisted centroids serve
-      // q76/q255/q282 — a blanket clearCache re-clustered them every
-      // query, a consistent 2× on all three). The timing above already
-      // captured the query's own cache-build cost.
-      // (public-API test for "locally checkpointed": isCheckpointed is
-      // true for reliable AND local checkpoints once materialized, and
-      // only reliable ones have a checkpoint file. The exact marker,
-      // RDD.isLocallyCheckpointed, is private[spark]; lazy checkpoints
-      // a query marked but never MATERIALIZED therefore stay
-      // registered — they hold zero blocks (nothing was computed into
-      // them), so the residue is registry entries only, ADVICE r17 #4.
-      // Deliberate Dataset caches — cachedIvfIndex, see its scaladoc
-      // invariant — are untouched by construction.)
-      spark.sparkContext.getPersistentRDDs.values
-        .filter(r => r.isCheckpointed && r.getCheckpointFile.isEmpty)
-        .foreach(_.unpersist(blocking = false))
+      // Drop the query's Materialize blocks once it finishes, OUTSIDE
+      // the timed region: queries are independent, so they are garbage
+      // to the next query, but they accumulate over a 333-query board
+      // and turn late-board measurements into a function of heap
+      // history (the q243 2–2.5× same-tree swing, VERDICT r16 #4).
+      // Dataset caches are deliberate cross-query session state
+      // (LlmQueries.cachedIvfIndex serves q76/q255/q282; a blanket
+      // clearCache re-clustered them every query, a consistent 2×), and
+      // release leaves them alone.
+      graft.operators.Materialize.release(spark)
       t
     }
 

@@ -3,6 +3,8 @@ package graft.catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Second breadth batch: time-interval joins, union-distinct, math/string/
   * date function coverage, approximate order statistics. */
 object ExtQueries2 {
@@ -596,12 +598,11 @@ object ExtQueries2 {
     "q234_reciprocal_match" -> ((s, d) => {
       val cust = t(s, d, "customer").select(col("c_name"))
       val supp = t(s, d, "supplier").select(col("s_name"))
-      val scored = graft.operators.JwJoin.bestMatchCandidates(
+      val scored = Materialize(graft.operators.JwJoin.bestMatchCandidates(
           cust, "c_name", "c_name", supp, "s_name", "s_name",
           symmetric = true)
         .select(col("id_a").as("c_name"), col("id_b").as("s_name"),
-          round(col("jw"), 4).as("jw"))
-        .localCheckpoint(eager = false)
+          round(col("jw"), 4).as("jw")))
       val bestPerC = scored.groupBy(col("c_name"))
         .agg(min(struct(negate(col("jw")).as("njw"), col("s_name"),
           col("jw"))).as("b"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Materialize}
 
 /** LLM-data-pipeline operators over `documents` and `embeddings`
   * (north-star extensions, BASELINE.json): text analysis, exact and
@@ -44,12 +44,13 @@ object LlmQueries {
   }
 
   /** INVARIANT (Bench sweep contract): a cached index's plans must
-    * never depend on `localCheckpoint` blocks — graft.Bench unpersists
-    * the locally-checkpointed RDD class after every timed query, so a
+    * never depend on [[graft.operators.Materialize]] blocks —
+    * graft.Bench calls `Materialize.release` after every timed query,
+    * which drops exactly the RDDs `Materialize` created, so a
     * cross-query cached object built over one would hit missing-block
     * failures mid-board. The cached Index persists its own centroid/
     * assignment Datasets via cache()/persist() (swept only at
-    * application end), which the Bench sweep deliberately skips. */
+    * application end), which `release` never touches. */
   private[graft] def cachedIvfIndex(s: SparkSession, d: String)(
       build: => graft.functions.IvfIndex.Index): graft.functions.IvfIndex.Index = {
     if (ivfListenerRegistered.add(s))
@@ -66,8 +67,9 @@ object LlmQueries {
     * tag), built once by `build`, swept recursively on application end.
     * Same Bench-sweep INVARIANT as [[cachedIvfIndex]]: these are paths
     * to on-DISK stores (no in-session plan state), so they are immune
-    * to Bench's per-query localCheckpoint sweep by construction — keep
-    * it that way if a store handle ever grows cached Datasets.
+    * to Bench's per-query `Materialize.release` by construction (it
+    * drops only `Materialize`'s own blocks) — keep it that way if a
+    * store handle ever grows cached Datasets.
     * Builds are deterministic per dataset, so serving a cached store is
     * result-identical to a rebuild — without leaking one store tree per
     * bench/verify invocation (ADVICE r9 on q260, generalized to every
@@ -1632,8 +1634,8 @@ object LlmQueries {
         m = 16, ksub = 32, iterations = 3)
       // materialize the coded table once — in a real deployment the
       // codes column IS the persisted index the ADC scan reads
-      val coded = graft.functions.PqIndex.encode(corpus, "vec", cb)
-        .localCheckpoint()
+      val coded = Materialize(graft.functions.PqIndex.encode(corpus, "vec", cb),
+        eager = true)
       graft.functions.PqIndex.adcRefineTopK(coded, "vec", "vec_id", cb, q,
           k = 10, shortlist = 50)
         .select(col("vec_id"), round(col("l2_dist"), 4).as("l2_dist"))

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
 import graft.plans.{PqCodes, SquaredL2}
 
 /** Product-quantization ANN index (Jégou et al. 2011): compress each
@@ -67,9 +68,8 @@ object PqIndex {
       if (keepMod > 1L)
         clean.filter(pmod(xxhash64(col(idCol)), lit(keepMod)) === 0)
       else clean
-    val base = sampled
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .localCheckpoint()
+    val base = Materialize(sampled
+      .select(col(idCol).as("__id"), col(vecCol).as("__v")), eager = true)
     val dimRow = base.select(size(col("__v")).as("d")).limit(1).collect()
     require(dimRow.nonEmpty, "PqIndex.train: sampling left no vectors")
     val dim = dimRow(0).getInt(0)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Dense-vector math over `array<float>` / `array<double>` columns.
   *
   * Implemented with higher-order functions (`zip_with` + `aggregate`) —
@@ -384,33 +386,31 @@ object VectorFunctions {
   def powerIteration(cov: DataFrame, iterations: Int = 10,
                      reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    if (reliable && cov.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "powerIteration(reliable = true) needs a reliable checkpoint " +
-        "location: call sparkContext.setCheckpointDir(<durable path>) first")
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+    // eager: the lazy form measured a wash here (r18 dead ends)
     val dec9 = (c: Column) => round(c, 9).cast("decimal(28,9)")
-    val m = materialize(cov.select(col("i"), col("j"), col("cov")).union(
+    val m = Materialize(cov.select(col("i"), col("j"), col("cov")).union(
       cov.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("cov"))))
+        .select(col("j").as("i"), col("i").as("j"), col("cov"))),
+      eager = true, reliable = reliable)
     val dims = m.select(col("i").as("dim")).distinct()
     val d = dims.count()
     require(d > 0, "powerIteration needs a non-empty matrix")
-    var v = materialize(dims.select(col("dim"),
-      round(lit(1.0) / sqrt(lit(d.toDouble)), 9).as("__v")))
+    var v = Materialize(dims.select(col("dim"),
+      round(lit(1.0) / sqrt(lit(d.toDouble)), 9).as("__v")),
+      eager = true, reliable = reliable)
     for (_ <- 1 to iterations) {
       val y = m.join(v, m("j") === v("dim"))
         .groupBy(m("i").as("ydim"))
         .agg(sum(dec9(col("cov") * col("__v"))).as("__y"))
       val n2 = y.agg(sum(dec9(col("__y").cast("double") *
         col("__y").cast("double"))).as("__n2"))
-      v = materialize(y.crossJoin(broadcast(n2))
+      v = Materialize(y.crossJoin(broadcast(n2))
         .select(col("ydim").as("dim"),
           when(col("__n2").cast("double") > 0,
             round(col("__y").cast("double") /
               sqrt(col("__n2").cast("double")), 9))
-            .otherwise(lit(0.0)).as("__v")))
+            .otherwise(lit(0.0)).as("__v")),
+        eager = true, reliable = reliable)
     }
     v.select(col("dim"), round(col("__v"), 6).as("loading"))
   }

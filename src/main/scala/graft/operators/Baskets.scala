@@ -45,7 +45,8 @@ object Baskets {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(maxBasketSize >= 2,
       s"maxBasketSize must be >= 2, got $maxBasketSize")
-    val baskets = df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
+    val baskets = Materialize(df
+      .select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .groupBy(col("__b"))
       .agg(sort_array(collect_set(col("__i"))).as("__arr"))
       // assert_true inside the Filter is load-bearing — a pruned
@@ -55,8 +56,7 @@ object Baskets {
           lit(s" holds more than $maxBasketSize distinct items — its" +
             " pair explosion is quadratic; split or drop mega-baskets" +
             " upstream, or raise maxBasketSize"))).isNull)
-      .select(col("__arr"))
-      .localCheckpoint(eager = false)
+      .select(col("__arr")))
     val nBaskets = baskets.agg(count(lit(1)).as("__nb"))
     val itemCounts = baskets.select(explode(col("__arr")).as("__i"))
       .groupBy(col("__i")).agg(count(lit(1)).as("__n"))

@@ -46,11 +46,11 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     // the one corpus-scale pass: word frequencies
-    var words = docs
+    var words = Materialize(docs
       .select(explode(expr(graft.plans.Tokens.whitespaceSql(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(expr("filter(split(w, ''), x -> x <> '')").as("sym"), col("n"))
-      .localCheckpoint()
+      .select(expr("filter(split(w, ''), x -> x <> '')").as("sym"), col("n")),
+      eager = true)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var rank = 0
     var exhausted = false
@@ -73,10 +73,10 @@ object Bpe {
           // greedy left-to-right application — one native codegen fold
           // per word (graft.plans.BpeMergeFold; the interpreted
           // aggregate-fold stays the BpeSpec reference form)
-          words = words
+          words = Materialize(words
             .withColumn("sym",
-              graft.plans.BpeMergeFold.of(col("sym"), Seq((l, r, merged))))
-            .localCheckpoint()
+              graft.plans.BpeMergeFold.of(col("sym"), Seq((l, r, merged)))),
+            eager = true)
           rank += 1
         case _ => exhausted = true
       }

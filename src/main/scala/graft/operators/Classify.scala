@@ -134,9 +134,8 @@ object Classify {
     // orchestration: same seconds at sf0.001 as at sf0.1). A LAZY
     // local checkpoint shares one materialized grid across references
     // and truncates the lineage — values unchanged, one corpus agg.
-    val cell = rows.groupBy(col("__v"), col("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
+    val cell = Materialize(rows.groupBy(col("__v"), col("__y"))
+      .agg(count(lit(1)).as("__c")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__y")).orderBy(col("__v"))
     // DENSIFY first: a class with no row at value v must still carry its
@@ -222,15 +221,15 @@ object Classify {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val d = featureCols.size
     val dec9 = (c: Column) => round(c, 9).cast("decimal(38,9)")
-    val data = df
+    val data = Materialize(df
       .filter(col(targetCol).isNotNull &&
         featureCols.map(col(_).isNotNull).reduce(_ && _))
       .select(col(targetCol).cast("double").as("__y") +:
         featureCols.zipWithIndex.map { case (f, i) =>
           col(f).cast("double").as(s"__x$i")
         }: _*)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .repartition(df.sparkSession.sparkContext.defaultParallelism),
+      eager = true)
     val w0 = data.sparkSession.range(1)
       .select((0 to d).map(j => lit(0.0).as(s"__w$j")): _*)
     val wFinal = (1 to iters).foldLeft(w0) { (w, _) =>
@@ -245,11 +244,10 @@ object Classify {
         (1 to d).map(j =>
           sum(dec9(e * col(s"__x${j - 1}"))).as(s"__g$j")) :+
           count(lit(1)).as("__n"): _*)
-      w.crossJoin(grads).select((0 to d).map(j =>
+      Materialize(w.crossJoin(grads).select((0 to d).map(j =>
         round(col(s"__w$j") + lit(lr) *
           (col(s"__g$j").cast("double") / col("__n")), 9)
-          .as(s"__w$j")): _*)
-        .localCheckpoint()
+          .as(s"__w$j")): _*), eager = true)
     }
     val terms = "intercept" +: featureCols
     val stackArgs = terms.zipWithIndex
@@ -284,13 +282,11 @@ object Classify {
     // materializes it, the children read blocks instead of re-scanning
     // — the logisticGD projection-pinning move, and it keeps the root
     // split's whole plan from re-embedding under each child)
-    val rows = df
+    val rows = Materialize(df
       .filter(col(featureCol).isNotNull && col(targetCol).isNotNull)
       .select(col(featureCol).cast("double").as("__v"),
-        col(targetCol).as("__y"))
-      .localCheckpoint(eager = false)
-    val root = infoGainSplit(rows, "__v", "__y")
-      .localCheckpoint(eager = false)
+        col(targetCol).as("__y")))
+    val root = Materialize(infoGainSplit(rows, "__v", "__y"))
     val rt = broadcast(root.select(col("threshold").as("__rt")))
     val le = infoGainSplit(
       rows.crossJoin(rt).filter(col("__v") <= col("__rt")), "__v", "__y")
@@ -346,15 +342,15 @@ object Classify {
     // would run every pass on one core — the correlationMatrix fix),
     // and pin the narrow projection so each pass rescans 3 columns, not
     // the source table
-    val data = df
+    val data = Materialize(df
       .filter(col(labelCol).isNotNull &&
         featureCols.map(col(_).isNotNull).reduce(_ && _))
       .select((col(labelCol).cast("int") =!= 0).cast("double").as("__y") +:
         featureCols.zipWithIndex.map { case (f, i) =>
           col(f).cast("double").as(s"__x$i")
         }: _*)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .repartition(df.sparkSession.sparkContext.defaultParallelism),
+      eager = true)
     val w0 = data.sparkSession.range(1)
       .select((0 to d).map(j => lit(0.0).as(s"__w$j")): _*)
     val wFinal = (1 to iters).foldLeft(w0) { (w, _) =>
@@ -373,11 +369,10 @@ object Classify {
       // next gradient's broadcast AND the next update's projection), so
       // an unmaterialized lineage recomputes every earlier iteration's
       // corpus pass ~2^k times (measured 6.5 s → ~2 s at sf0.1, 3 iters)
-      w.crossJoin(grads).select((0 to d).map(j =>
+      Materialize(w.crossJoin(grads).select((0 to d).map(j =>
         round(col(s"__w$j") + lit(lr) *
           (col(s"__g$j").cast("double") / col("__n")), 9)
-          .as(s"__w$j")): _*)
-        .localCheckpoint()
+          .as(s"__w$j")): _*), eager = true)
     }
     val terms = "intercept" +: featureCols
     val stackArgs = terms.zipWithIndex

@@ -215,8 +215,8 @@ object Dedup {
     // pairing) — previously the batch's shingle→minhash→band pipeline
     // re-executed per reader. Batch-bands-sized blocks; lazy (guide
     // §3.3), swept by Bench per query.
-    val newBands = bandedSignatures(newSigs, idCol, bands, rowsPerBand)
-      .localCheckpoint(eager = false)
+    val newBands = Materialize(
+      bandedSignatures(newSigs, idCol, bands, rowsPerBand))
     val crossPairs = crossPairsFromBands(newBands,
       bandedSignatures(corpusSigs, idCol, bands, rowsPerBand), maxBucketSize)
     val newNew = pairsFromBands(newBands, maxBucketSize)
@@ -312,9 +312,10 @@ object Dedup {
     // candidate-pair generation, and the survivor anti-join's pair plan) —
     // without the checkpoint each action recomputes every signature. The
     // checkpointed rows are narrow (id + numHashes longs).
-    val sigB = minHashSignature(fresh, textCol, shingleSize = 3, numHashes = numHashes)
-      .select(col(idCol), col("minhash"))
-      .localCheckpoint()
+    val sigB = Materialize(
+      minHashSignature(fresh, textCol, shingleSize = 3, numHashes = numHashes)
+        .select(col(idCol), col("minhash")),
+      eager = true)
     val newBands = bandedSignatures(sigB, idCol, bands, rowsPerBand)
     val pairs =
       if (hasStore) {
@@ -343,8 +344,9 @@ object Dedup {
     // materialize BEFORE any write: the survivor plan reads the store
     // (anti-join + pairing), and both `land` and the store append must see
     // one frozen result (no re-list hazards over paths this call grows)
-    val survivors = fresh.join(dropB.union(dropA).distinct(), Seq(idCol), "left_anti")
-      .localCheckpoint()
+    val survivors = Materialize(
+      fresh.join(dropB.union(dropA).distinct(), Seq(idCol), "left_anti"),
+      eager = true)
     // 1) caller's idempotent output landing FIRST (crash here -> replay
     //    recomputes the same survivors and re-lands convergently)
     land(survivors)

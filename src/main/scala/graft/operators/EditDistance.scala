@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exact edit-distance (Levenshtein) similarity self-join via symmetric
@@ -31,21 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object EditDistance {
 
-  /** All single-character deletions of `s` (empty array for empty/1-char
-    * handled naturally: "a" → [""], "" → []). */
-  private def deletions(s: Column): Column =
-    when(length(s) <= 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), length(s), lit(1)),
-        i => concat(s.substr(lit(1), i - 1), s.substr(i + 1, length(s) - i))))
-
-  /** The deletion neighborhood of `s` up to depth `d`, original
-    * included, duplicates collapsed. */
-  private[graft] def deletionVariants(s: Column, d: Int): Column = {
-    var v = array(s)
-    for (_ <- 1 to d) v = array_distinct(concat(v, flatten(transform(v, deletions(_)))))
-    v
-  }
-
   /** All pairs (id_a < id_b) with levenshtein(strCol_a, strCol_b) <=
     * `maxDist`. Null strings never pair. Output: (id_a, id_b, dist).
     *
@@ -68,10 +53,9 @@ object EditDistance {
   def levenshteinSelfJoin(df: DataFrame, idCol: String, strCol: String,
                           maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    // deletionVariants references the accumulated expression twice per
-    // depth, so the Catalyst tree grows ~2^d — and the neighborhood itself
-    // grows n^d. Both are the documented short-string design envelope
-    // (d <= 2 typical); fail fast instead of pathological codegen.
+    // the deletion neighborhood grows n^d — the documented short-string
+    // design envelope (d <= 2 typical); fail fast instead of a
+    // pathological variant explosion.
     require(maxDist <= 3, s"maxDist must be <= 3, got $maxDist — the " +
       "deletion-neighborhood design is for short strings and small d; " +
       "for long-text near-dup use the shingle/MinHash path")
@@ -79,7 +63,7 @@ object EditDistance {
       .filter(col("__str").isNotNull)
     // codegen neighborhood ([[graft.plans.OrderedDeletionVariants]] —
     // the interpreted HOF chain stays the reference form in
-    // EditDistanceSpec; same strings, same order, one static call)
+    // graft.HofReference; same strings, same order, one static call)
     val vars = base.select(col("__eid"),
         explode(graft.plans.OrderedDeletionVariants.of(col("__str"),
           maxDist)).as("__v"))
@@ -99,19 +83,5 @@ object EditDistance {
       .select(col("id_a"), col("id_b"),
         levenshtein(col("__sa"), col("__sb"), maxDist).cast("long").as("dist"))
       .filter(col("dist") >= 0)
-  }
-
-  /** Brute-force all-pairs reference (O(n²) — tests and tiny frames
-    * ONLY). Same output contract as [[levenshteinSelfJoin]]. */
-  private[graft] def bruteForce(df: DataFrame, idCol: String, strCol: String,
-                                maxDist: Int): DataFrame = {
-    val s = df.select(col(idCol).as("__eid"), col(strCol).as("__str"))
-      .filter(col("__str").isNotNull)
-    val a = s.select(col("__eid").as("id_a"), col("__str").as("__sa"))
-    val b = s.select(col("__eid").as("id_b"), col("__str").as("__sb"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("dist", levenshtein(col("__sa"), col("__sb")).cast("long"))
-      .filter(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist"))
   }
 }

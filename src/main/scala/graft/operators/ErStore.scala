@@ -199,7 +199,7 @@ object ErStore {
         "linkage is the registry's domain).")
     val m = Meta(threshold, maxLen, d, numBuckets, idCol, nameCol,
       blockCols, Seq(baseBatchId), Nil)
-    val p = prepped(df, m).localCheckpoint(eager = false)
+    val p = Materialize(prepped(df, m))
     val keys = keyed(p, m)
     val edges = JwJoin.gateJw(
         JwJoin.deletionCandidates(keys, keys, threshold, d,
@@ -236,18 +236,17 @@ object ErStore {
       s"batchId must exceed every applied batch id (max ${applied.max}), " +
         s"got $batchId — label deltas fold latest-id-wins, so appends " +
         "must carry monotonically increasing ids")
-    val p = prepped(df, m).localCheckpoint(eager = false)
-    val keys = keyed(p, m).localCheckpoint(eager = false)
+    val p = Materialize(prepped(df, m))
+    val keys = Materialize(keyed(p, m))
     val probeBuckets = keys.select(col("bucket")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val stored = storedKeys(spark, store, Some(probeBuckets))
     val sRecords = storedRecords(spark, store, m)
     val candBS = JwJoin.deletionCandidates(stored, keys.drop("bucket"),
       m.threshold, m.d, selfPairs = false, maxBlockSize = Int.MaxValue)
-    val edgesBS = JwJoin.gateJw(candBS,
+    val edgesBS = Materialize(JwJoin.gateJw(candBS,
         JwJoin.namesOf(sRecords, "a"), JwJoin.namesOf(p, "b"), m.threshold)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .localCheckpoint(eager = false)
+      .select(col("id_a").as("src"), col("id_b").as("dst")))
     val candBB = JwJoin.deletionCandidates(keys.drop("bucket"),
       keys.drop("bucket"), m.threshold, m.d, selfPairs = true,
       maxBlockSize = Int.MaxValue)

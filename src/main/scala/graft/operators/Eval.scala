@@ -99,12 +99,11 @@ object Eval {
       .select(col(groupCol).as("__g"),
         (col(labelCol).cast("int") =!= 0).as("__pos"),
         col(scoreCol).cast("double").as("__s"))
-    val level = rows.groupBy(col("__g"), col("__s"))
+    // read by the walk AND the totals agg — one lazy
+    // materialization (the dunn levels discipline)
+    val level = Materialize(rows.groupBy(col("__g"), col("__s"))
       .agg(sum(when(col("__pos"), 1L).otherwise(0L)).as("__p"),
-        sum(when(col("__pos"), 0L).otherwise(1L)).as("__q"))
-      // read by the walk AND the totals agg — one lazy
-      // materialization (the dunn levels discipline)
-      .localCheckpoint(eager = false)
+        sum(when(col("__pos"), 0L).otherwise(1L)).as("__q")))
     // descending-threshold walk as an ASCENDING bucketed cumulative
     // over the negated score (the ksTest discipline — a continuous
     // score grid never funnels a group through one task)
@@ -274,10 +273,9 @@ object Eval {
           round(sum(round(col("__v"), 9).cast("decimal(38,9)"))
             .cast("double") / count(lit(1)), 9).as("__m"))
       else {
-        val lvl = rows.groupBy(col("__g"), col("__v"))
-          .agg(count(lit(1)).as("__c"))
-          // read by the walk AND the totals agg (the dunn discipline)
-          .localCheckpoint(eager = false)
+        // read by the walk AND the totals agg (the dunn discipline)
+        val lvl = Materialize(rows.groupBy(col("__g"), col("__v"))
+          .agg(count(lit(1)).as("__c")))
         val tot = lvl.groupBy(col("__g")).agg(sum(col("__c")).as("__ng"))
         val lo = ((col("__ng") + lit(1L)) / lit(2L)).cast("long")
         val hi = (col("__ng") / lit(2L)).cast("long") + lit(1L)
@@ -488,13 +486,12 @@ object Eval {
     // groups: dense + the group-moment agg) — one lazy materialization
     // apiece instead of re-running the cell aggregation per reader
     // (the dunn/ksTest levels discipline)
-    val cells = rows.groupBy(col("__v"), col("__g"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
-    val levels = cells.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
-      .localCheckpoint(eager = false)
-    val groups = cells.groupBy(col("__g")).agg(sum(col("__c")).as("__ng"))
-      .localCheckpoint(eager = false)
+    val cells = Materialize(rows.groupBy(col("__v"), col("__g"))
+      .agg(count(lit(1)).as("__c")))
+    val levels = Materialize(cells.groupBy(col("__v"))
+      .agg(sum(col("__c")).as("__t")))
+    val groups = Materialize(cells.groupBy(col("__g"))
+      .agg(sum(col("__c")).as("__ng")))
     // dense grid: every (level, group) cell, zeros where absent
     val dense = levels.select(col("__v"))
       .crossJoin(broadcast(groups.select(col("__g"))))
@@ -561,12 +558,11 @@ object Eval {
         col(sampleCol).isin(aLabel, bLabel))
       .select((col(sampleCol) === aLabel).as("__a"),
         col(valCol).cast("double").as("__v"))
-    val level = rows.groupBy(col("__v"))
+    // read by the walk AND the totals agg — one lazy
+    // materialization (the dunn levels discipline)
+    val level = Materialize(rows.groupBy(col("__v"))
       .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__a"), 0L).otherwise(1L)).as("__cb"))
-      // read by the walk AND the totals agg — one lazy
-      // materialization (the dunn levels discipline)
-      .localCheckpoint(eager = false)
+        sum(when(col("__a"), 0L).otherwise(1L)).as("__cb")))
     val totals = level.agg(sum(col("__ca")).as("n_a"),
       sum(col("__cb")).as("n_b"))
     graft.operators.Ranks
@@ -753,16 +749,14 @@ object Eval {
     // value-level grid and its walked CDF are each read twice (totals +
     // walk; current + next segment endpoints): lazy local checkpoints
     // share one materialization per table (the q246 plan-explosion fix)
-    val level = rows.groupBy(col("__v"))
+    val level = Materialize(rows.groupBy(col("__v"))
       .agg(sum(when(col("__a"), 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__a"), 0L).otherwise(1L)).as("__cb"))
-      .localCheckpoint(eager = false)
+        sum(when(col("__a"), 0L).otherwise(1L)).as("__cb")))
     val totals = level.agg(sum(col("__ca")).as("n_a"),
       sum(col("__cb")).as("n_b"))
-    val walked = Ranks.globalRowNumber(
+    val walked = Materialize(Ranks.globalRowNumber(
       Ranks.groupedCumSum(level, Seq.empty, "__v", Seq("__ca", "__cb")),
-      "__v", "__rk")
-      .localCheckpoint(eager = false)
+      "__v", "__rk"))
     val cur = walked.select(col("__rk"), col("__v"),
       col("cum___ca").as("__fa"), col("cum___cb").as("__fb"))
     val nxt = walked.select((col("__rk") - 1L).as("__rk"),
@@ -813,9 +807,8 @@ object Eval {
       .filter(col(yCol).isNotNull && col(yhatCol).isNotNull)
       .select(abs(col(yCol).cast("double") -
         col(yhatCol).cast("double")).as("__r"))
-    val level = res.groupBy(col("__r")).agg(count(lit(1)).as("__c"))
-      // read by the walk AND the count agg (the dunn discipline)
-      .localCheckpoint(eager = false)
+    // read by the walk AND the count agg (the dunn discipline)
+    val level = Materialize(res.groupBy(col("__r")).agg(count(lit(1)).as("__c")))
     val n = level.agg(sum(col("__c")).as("__n"))
     val qhat = Ranks.groupedCumSum(level, Seq.empty, "__r", Seq("__c"))
       .crossJoin(broadcast(n))
@@ -850,10 +843,9 @@ object Eval {
     * Output: (idCol, pCol, rank, p_adj rounded 6) ordered by rank. */
   def bhAdjust(df: DataFrame, idCol: String, pCol: String): DataFrame = {
     // test-table-sized by contract; read by m AND the ranking walk
-    val rows = df.filter(col(pCol).isNotNull)
+    val rows = Materialize(df.filter(col(pCol).isNotNull)
       .select(col(idCol).as("__id"), col(pCol).cast("double").as("__p"),
-        struct(col(pCol).cast("double"), col(idCol)).as("__ord"))
-      .localCheckpoint(eager = false)
+        struct(col(pCol).cast("double"), col(idCol)).as("__ord")))
     val m = rows.agg(count(lit(1)).as("__m"))
     // both corpus-sized walks ride the Ranks two-level machinery — a
     // million-hypothesis screen never funnels through one task
@@ -1114,10 +1106,9 @@ object Eval {
         round(col(valCol).cast("double"), 9).as("__v"))
     // level grid read by the totals agg AND the cumulative walk — one
     // lazy materialization (the trimmedMean/dunn levels discipline)
-    val level = rows.groupBy(col("__g"), col("__v"))
+    val level = Materialize(rows.groupBy(col("__g"), col("__v"))
       .agg(count(lit(1)).as("__c"),
-        sum(round(col("__v"), 9).cast("decimal(38,9)")).as("__w"))
-      .localCheckpoint(eager = false)
+        sum(round(col("__v"), 9).cast("decimal(38,9)")).as("__w")))
     val totals = level.groupBy(col("__g"))
       .agg(sum(col("__c")).as("__n"), sum(col("__w")).as("__tw"))
     val walked = Ranks.groupedCumSum(level, Seq("__g"), "__v",
@@ -1218,9 +1209,8 @@ object Eval {
         round(col(valCol).cast("double"), 9).as("__v"))
     // level grid read by the totals agg AND the cumulative walk — one
     // lazy materialization (the trimmedMean/dunn levels discipline)
-    val level = rows.groupBy(col("__g"), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
+    val level = Materialize(rows.groupBy(col("__g"), col("__v"))
+      .agg(count(lit(1)).as("__c")))
     val totals = level.groupBy(col("__g")).agg(
       sum(col("__c")).as("__n"),
       sum(round(col("__v") * col("__c"), 9).cast("decimal(38,9)"))
@@ -1480,19 +1470,18 @@ object Eval {
     // materializations instead of re-executing the grid walk per
     // reader (guide §3.3). levels is value-grid-sized, rg is k rows;
     // Bench sweeps localCheckpoint blocks per query.
-    val levels = rows.groupBy(col("__v")).agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint(eager = false)
+    val levels = Materialize(rows.groupBy(col("__v"))
+      .agg(count(lit(1)).as("__cnt")))
     val ranks = Ranks.groupedCumSum(levels, Seq.empty, "__v", Seq("__cnt"))
       .select(col("__v"), col("__cnt"),
         ((lit(2L) * col("cum___cnt") - col("__cnt") + lit(1L))
           .cast("double") / 2.0).cast("decimal(19,1)").as("__r"))
-    val rg = rows.groupBy(col("__g"), col("__v"))
+    val rg = Materialize(rows.groupBy(col("__g"), col("__v"))
       .agg(count(lit(1)).as("__c"))
       .join(ranks.drop("__cnt"), Seq("__v"))
       .groupBy(col("__g"))
       .agg(sum(col("__c").cast("decimal(19,0)") * col("__r")).as("__rg"),
-        sum(col("__c")).as("__ng"))
-      .localCheckpoint(eager = false)
+        sum(col("__c")).as("__ng")))
     (rg, levels)
   }
 
@@ -2085,11 +2074,11 @@ object Eval {
     // 3-column projection — a small parquet source scans as ONE split
     // and would hash corpus×B rows on one core (the logisticGD fix;
     // measured 33 s → ~3 s at sf0.1, B = 200)
-    val rows = df.filter(col(valCol).isNotNull)
+    val rows = Materialize(df.filter(col(valCol).isNotNull)
       .select(col(groupCol).as("__g"), col(idCol).cast("string").as("__id"),
         col(valCol).cast("double").as("__v"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .repartition(df.sparkSession.sparkContext.defaultParallelism),
+      eager = true)
     val point = rows.groupBy(col("__g"))
       .agg(count(lit(1)).as("n"),
         round(sum(round(col("__v"), 9).cast("decimal(38,9)"))
@@ -2098,7 +2087,12 @@ object Eval {
     // (graft.plans.Md5UniformSeq — bit-identical to the per-replicate
     // conv(substring(md5(…))) chain, minus corpus×B hex/substring/conv
     // allocations), then a posexplode over the primitive array
-    val reps = rows
+    // ≤ groups×B rows, but its lineage is the whole ×B replicate
+    // pipeline and it feeds eff (read twice) + both rank picks — a
+    // lazy local checkpoint shares ONE materialization (the stat-
+    // family plan-truncation discipline; measured: the rank-walk tail
+    // re-ran the 20M-row pipeline and cost more than the pipeline)
+    val reps = Materialize(rows
       .select(col("__g"), col("__v"),
         posexplode(graft.plans.Md5UniformSeq.of(
           concat(lit(salt), col("__id"), lit("#")), b))
@@ -2116,15 +2110,10 @@ object Eval {
           .as("__wv"))
       .filter(col("__ws") > 0L)
       .select(col("__g"),
-        round(col("__wv").cast("double") / col("__ws"), 9).as("__m"))
-      // ≤ groups×B rows, but its lineage is the whole ×B replicate
-      // pipeline and it feeds eff (read twice) + both rank picks — a
-      // lazy local checkpoint shares ONE materialization (the stat-
-      // family plan-truncation discipline; measured: the rank-walk tail
-      // re-ran the 20M-row pipeline and cost more than the pipeline)
-      .localCheckpoint(eager = false)
-    val lvl = reps.groupBy(col("__g"), col("__m")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false) // read by eff AND the grid walk
+        round(col("__wv").cast("double") / col("__ws"), 9).as("__m")))
+    // read by eff AND the grid walk
+    val lvl = Materialize(reps.groupBy(col("__g"), col("__m"))
+      .agg(count(lit(1)).as("__c")))
     val eff = lvl.groupBy(col("__g")).agg(sum(col("__c")).as("b_eff"))
     val walked = Ranks.groupedCumSum(lvl, Seq("__g"), "__m", Seq("__c"))
       .join(eff, "__g")
@@ -2169,13 +2158,13 @@ object Eval {
                         b: Int = 200, salt: String = "perm"): DataFrame = {
     require(b >= 10, s"b must be >= 10, got $b")
     // same single-split hazard as bootstrapCi: spread the ×B work
-    val rows = df
+    val rows = Materialize(df
       .filter(col(valCol).isNotNull && col(variantCol).isin(aLabel, bLabel))
       .select(col(idCol).cast("string").as("__id"),
         (col(variantCol) === aLabel).as("__a"),
         col(valCol).cast("double").as("__v"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint()
+      .repartition(df.sparkSession.sparkContext.defaultParallelism),
+      eager = true)
     val dec9 = (c: Column) => round(c, 9).cast("decimal(38,9)")
     val tot = rows.agg(
       sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),

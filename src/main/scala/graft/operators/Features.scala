@@ -496,10 +496,9 @@ object Features {
     // the level grid is read by the totals agg AND the cumulative walk
     // (sample + shuffle) — one lazy materialization (the dunn levels
     // discipline; grid-sized, swept by Bench per query)
-    val lvl = df.filter(col(valCol).isNotNull)
+    val lvl = Materialize(df.filter(col(valCol).isNotNull)
       .select(col(groupCol).as("__g"), col(valCol).cast("double").as("__v"))
-      .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
+      .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c")))
     val tot = lvl.groupBy(col("__g")).agg(sum(col("__c")).as("__n"))
     graft.operators.Ranks.groupedCumSum(lvl, Seq("__g"), "__v", Seq("__c"))
       .join(tot, "__g")
@@ -793,10 +792,9 @@ object Features {
     // the level grid is read by the totals agg AND the cumulative walk
     // (sample + shuffle) — one lazy materialization (the dunn levels
     // discipline; grid-sized, swept by Bench per query)
-    val lvl = df.filter(col(valCol).isNotNull)
+    val lvl = Materialize(df.filter(col(valCol).isNotNull)
       .select(col(groupCol).as("__g"), col(valCol).cast("double").as("__v"))
-      .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(eager = false)
+      .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as("__c")))
     val tot = lvl.groupBy(col("__g")).agg(sum(col("__c")).as("__n"))
     val k = floor(col("__n") * frac)
     val kept = greatest(lit(0L),
@@ -823,7 +821,7 @@ object Features {
     require(delta > 0, s"delta must be positive, got $delta")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val dec9 = (c: Column) => round(c, 9).cast("decimal(38,9)")
-    val rows = df
+    val rows = Materialize(df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("__g"), col(xCol).cast("double").as("__x"),
         col(yCol).cast("double").as("__y"))
@@ -831,13 +829,12 @@ object Features {
       // and pin the narrow projection (the logisticGD discipline: a
       // small parquet source scans as few splits and would run every
       // IRLS pass underparallelized)
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint(eager = false)
+      .repartition(df.sparkSession.sparkContext.defaultParallelism))
     def fit(w: Column, prev: DataFrame): DataFrame = {
       val base = if (prev == null) rows
         else rows.join(broadcast(prev), Seq("__g"), "left")
       val wr = round(w, 9)
-      base.groupBy(col("__g")).agg(
+      Materialize(base.groupBy(col("__g")).agg(
           count(lit(1)).as("n"),
           sum(when(wr < 1.0, 1L).otherwise(0L)).as("n_downweighted"),
           sum(dec9(wr)).as("__sw"),
@@ -861,8 +858,7 @@ object Features {
         .select(col("__g"), col("n"), col("n_downweighted"), col("__b1"),
           round(when(col("__sw") =!= 0.0,
             (col("__swy") - col("__b1") * col("__swx")) / col("__sw")), 9)
-            .as("__b0"))
-        .localCheckpoint(eager = false)
+            .as("__b0")))
     }
     val resid = col("__y") - (col("__b0") + col("__b1") * col("__x"))
     val huberW = when(col("__b0").isNull || col("__b1").isNull,

@@ -17,9 +17,15 @@ import org.apache.spark.sql.functions._
   * shuffle join on node id, and the edge set converges to stars
   * (min-id root -> member) in O(log n) rounds — the proven shape for
   * multi-TB graphs, vs O(diameter) rounds for naive label propagation.
-  * Per-round `localCheckpoint` truncates lineage so the loop's plan does
+  * Per-round [[Materialize]] truncates lineage so the loop's plan does
   * not grow (a 20-round lineage would otherwise blow up the optimizer
-  * and re-execute every prior round on each action).
+  * and re-execute every prior round on each action). Every truncation
+  * here is LAZY (r18): the round's own convergence action or the next
+  * round's first job materializes it, so an eager checkpoint's
+  * dedicated job per round was pure scheduling overhead at toy scale
+  * and a redundant extra pass at cluster scale. `reliable = true`
+  * passes through to [[Materialize]] (checkpoint-dir-backed truncation
+  * that survives executor loss).
   */
 object Graph {
 
@@ -78,12 +84,11 @@ object Graph {
     * full corpus so isolated documents aren't dropped from the output.
     */
   /** `reliable = true` switches the per-round lineage truncation from
-    * `localCheckpoint` (executor-local blocks — fast, but on a real
-    * cluster a lost executor makes the truncated lineage unrecoverable
-    * mid-loop) to `checkpoint` against the session's configured
-    * checkpoint directory (replicated/distributed storage survives node
-    * loss — the production path for long CC runs). Requires
-    * `sparkContext.setCheckpointDir` to have been called; set
+    * executor-local blocks (fast, but on a real cluster a lost executor
+    * makes the truncated lineage unrecoverable mid-loop) to the
+    * session's checkpoint directory (replicated/distributed storage
+    * survives node loss — the production path for long CC runs).
+    * Requires `sparkContext.setCheckpointDir` to have been called; set
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` to reap
     * superseded round files. */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
@@ -91,31 +96,13 @@ object Graph {
                           nodes: Option[(DataFrame, String)] = None,
                           maxIter: Int = 25,
                           reliable: Boolean = false): DataFrame = {
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "connectedComponents(reliable = true) needs a reliable checkpoint " +
-        "location: call sparkContext.setCheckpointDir(<durable path>) first")
-    // lazy lineage truncation (r18): the round's own convergence
-    // action / the next round's first job materializes the checkpoint,
-    // so an EAGER checkpoint's dedicated job per round was pure
-    // scheduling overhead at toy scale and a redundant extra pass at
-    // cluster scale
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    // lazy checkpoint + fingerprint: the convergence fingerprint is a full
-    // scan, so letting IT materialize the checkpoint folds two actions
-    // (eager-checkpoint job + fingerprint job) into one pass per round
-    def checkpointViaFingerprint(df: DataFrame): (DataFrame, Seq[Any]) = {
-      val ck = if (reliable) df.checkpoint(eager = false)
-               else df.localCheckpoint(eager = false)
-      (ck, fingerprint(ck))
-    }
-    def lazyCk(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    var (e, sig) = checkpointViaFingerprint(canonical(edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))))
+    // the convergence fingerprint is a full scan, so letting IT
+    // materialize the lazy checkpoint folds two actions (checkpoint job +
+    // fingerprint job) into one pass per round
+    var e = Materialize(canonical(edges.select(
+        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))),
+      reliable = reliable)
+    var sig = fingerprint(e)
     var converged = sig.head == 0L
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -136,11 +123,11 @@ object Graph {
       // scheduled job's cost at every scale tried). Convergence is
       // checked every TWO rounds: worst case one redundant fixpoint
       // round, paid once.
-      val half1 = lazyCk(largeStar(e).distinct())
-      val next1 = lazyCk(smallStar(half1).distinct())
-      val half2 = lazyCk(largeStar(next1).distinct())
-      val (next, nextSig) = checkpointViaFingerprint(
-        smallStar(half2).distinct())
+      val half1 = Materialize(largeStar(e).distinct(), reliable = reliable)
+      val next1 = Materialize(smallStar(half1).distinct(), reliable = reliable)
+      val half2 = Materialize(largeStar(next1).distinct(), reliable = reliable)
+      val next = Materialize(smallStar(half2).distinct(), reliable = reliable)
+      val nextSig = fingerprint(next)
       converged = nextSig == sig
       e = next
       sig = nextSig
@@ -204,18 +191,6 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0,1], got $damping")
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "pageRank(reliable = true) needs a reliable checkpoint location: " +
-        "call sparkContext.setCheckpointDir(<durable path>) first")
-    // lazy lineage truncation (r18): the round's own convergence
-    // action / the next round's first job materializes the checkpoint,
-    // so an EAGER checkpoint's dedicated job per round was pure
-    // scheduling overhead at toy scale and a redundant extra pass at
-    // cluster scale
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
     // weighted variant: a walker leaves u along (u,v) with probability
     // w(u,v) / Σ_out w(u) — link strength (co-citation counts, click
     // weights) steers the rank flow. w = 1 reduces BIT-exactly to the
@@ -228,16 +203,17 @@ object Graph {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"), w.as("__w"))
     val e = e0.filter(col("__w") > 0)
-    val nodeIds = materialize {
+    val nodeIds = Materialize({
       val fromEdges = e0.select(col("src").as("id"))
         .union(e0.select(col("dst").as("id")))
       nodes.fold(fromEdges) { case (df, c) =>
         fromEdges.union(df.select(col(c).cast("long").as("id")))
       }.distinct()
-    }
+    }, reliable = reliable)
     val n = nodeIds.count().toDouble
-    val outdeg = materialize(
-      e.groupBy("src").agg(sum(col("__w")).cast("double").as("__deg")))
+    val outdeg = Materialize(
+      e.groupBy("src").agg(sum(col("__w")).cast("double").as("__deg")),
+      reliable = reliable)
     val dec9 = (c: org.apache.spark.sql.Column) =>
       round(c, 9).cast("decimal(28,9)")
     var ranks = nodeIds.select(col("id"),
@@ -253,13 +229,14 @@ object Graph {
         .join(outdeg, col("id") === col("src"), "left_anti")
         .agg(coalesce(sum(dec9(col("pagerank"))),
           lit(java.math.BigDecimal.ZERO).cast("decimal(28,9)")).as("__dang"))
-      ranks = materialize(
+      ranks = Materialize(
         nodeIds.join(sums, col("id") === col("dst"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("id"),
             round(lit(1.0 - damping) / lit(n) + lit(damping) *
               (coalesce(col("__in").cast("double"), lit(0.0)) +
-                col("__dang").cast("double") / lit(n)), 9).as("pagerank")))
+                col("__dang").cast("double") / lit(n)), 9).as("pagerank")),
+        reliable = reliable)
     }
     ranks
   }
@@ -295,41 +272,31 @@ object Graph {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0,1], got $damping")
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "personalizedPageRank(reliable = true) needs a reliable checkpoint " +
-        "location: call sparkContext.setCheckpointDir(<durable path>) first")
-    // lazy lineage truncation (r18): the round's own convergence
-    // action / the next round's first job materializes the checkpoint,
-    // so an EAGER checkpoint's dedicated job per round was pure
-    // scheduling overhead at toy scale and a redundant extra pass at
-    // cluster scale
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val nodeIds = materialize {
+    val nodeIds = Materialize({
       val fromEdges = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
       nodes.fold(fromEdges) { case (df, c) =>
         fromEdges.union(df.select(col(c).cast("long").as("id")))
       }.distinct()
-    }
-    val seedIds = materialize(
+    }, reliable = reliable)
+    val seedIds = Materialize(
       seeds.select(col(seedCol).cast("long").as("id")).distinct()
-        .join(nodeIds, Seq("id"), "left_semi"))
+        .join(nodeIds, Seq("id"), "left_semi"), reliable = reliable)
     val sCount = seedIds.count()
     require(sCount >= 1,
       "personalizedPageRank needs at least one seed present in the graph")
-    val tele = materialize(
+    val tele = Materialize(
       nodeIds.join(
           seedIds.select(col("id"),
             round(lit(1.0) / lit(sCount.toDouble), 9).as("__tele")),
           Seq("id"), "left")
-        .select(col("id"), coalesce(col("__tele"), lit(0.0)).as("__tele")))
-    val outdeg = materialize(
-      e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg")))
+        .select(col("id"), coalesce(col("__tele"), lit(0.0)).as("__tele")),
+      reliable = reliable)
+    val outdeg = Materialize(
+      e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg")),
+      reliable = reliable)
     val dec9 = (c: org.apache.spark.sql.Column) =>
       round(c, 9).cast("decimal(28,9)")
     var ranks = tele.select(col("id"), col("__tele").as("pagerank"))
@@ -343,14 +310,14 @@ object Graph {
         .join(outdeg, col("id") === col("src"), "left_anti")
         .agg(coalesce(sum(dec9(col("pagerank"))),
           lit(java.math.BigDecimal.ZERO).cast("decimal(28,9)")).as("__dang"))
-      ranks = materialize(
+      ranks = Materialize(
         tele.join(sums, col("id") === col("dst"), "left")
           .crossJoin(broadcast(dangling))
           .select(col("id"),
             round(lit(1.0 - damping) * col("__tele") + lit(damping) *
               (coalesce(col("__in").cast("double"), lit(0.0)) +
                 col("__dang").cast("double") * col("__tele")), 9)
-              .as("pagerank")))
+              .as("pagerank")), reliable = reliable)
     }
     ranks
   }
@@ -480,31 +447,20 @@ object Graph {
                    sourceCol: String = "id", maxHops: Int = 20,
                    reliable: Boolean = false): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "hopDistances(reliable = true) needs a reliable checkpoint " +
-        "location: call sparkContext.setCheckpointDir(<durable path>) first")
-    // lazy lineage truncation (r18): the round's own convergence
-    // action / the next round's first job materializes the checkpoint,
-    // so an EAGER checkpoint's dedicated job per round was pure
-    // scheduling overhead at toy scale and a redundant extra pass at
-    // cluster scale
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    var frontier = materialize(
-      sources.select(col(sourceCol).cast("long").as("id")).distinct())
+    var frontier = Materialize(
+      sources.select(col(sourceCol).cast("long").as("id")).distinct(),
+      reliable = reliable)
     var dist = frontier.select(col("id"), lit(0L).as("dist"))
     var hop = 0
     var frontierEmpty = frontier.limit(1).isEmpty
     while (!frontierEmpty && hop < maxHops) {
       hop += 1
-      val next = materialize(
+      val next = Materialize(
         frontier.join(e, frontier("id") === e("src"))
           .select(col("dst").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti"))
+          .join(dist, Seq("id"), "left_anti"), reliable = reliable)
       frontierEmpty = next.limit(1).isEmpty
       if (!frontierEmpty) {
         // the visited set re-materializes per level — the Pregel
@@ -513,8 +469,9 @@ object Graph {
         // avoids the rewrite but deepens the anti-join plan by one scan
         // per level, and measured ~1.5× SLOWER at sf0.1 (scheduling
         // dominates tiny scans); depth is bounded by maxHops either way
-        dist = materialize(
-          dist.union(next.select(col("id"), lit(hop.toLong).as("dist"))))
+        dist = Materialize(
+          dist.union(next.select(col("id"), lit(hop.toLong).as("dist"))),
+          reliable = reliable)
         frontier = next
       }
     }
@@ -542,20 +499,9 @@ object Graph {
             dstCol: String = "dst", maxIter: Int = 30,
             reliable: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "kCore(reliable = true) needs a reliable checkpoint location: " +
-        "call sparkContext.setCheckpointDir(<durable path>) first")
-    // lazy lineage truncation (r18): the round's own convergence
-    // action / the next round's first job materializes the checkpoint,
-    // so an EAGER checkpoint's dedicated job per round was pure
-    // scheduling overhead at toy scale and a redundant extra pass at
-    // cluster scale
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    var e = materialize(canonical(edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))))
+    var e = Materialize(canonical(edges.select(
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))),
+      reliable = reliable)
     var nEdges = e.count()
     var converged = nEdges == 0L
     var iter = 0
@@ -563,10 +509,10 @@ object Graph {
       val keep = bothDirs(e).groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") >= k).select("id")
-      val next = materialize(
+      val next = Materialize(
         e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst"))
+          .select("src", "dst"), reliable = reliable)
       val n = next.count()
       converged = n == nEdges
       e = next
@@ -609,28 +555,16 @@ object Graph {
                        nodes: Option[(DataFrame, String)] = None,
                        reliable: Boolean = false): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "labelPropagation(reliable = true) needs a reliable checkpoint " +
-        "location: call sparkContext.setCheckpointDir(<durable path>) first")
-    // lazy lineage truncation (r18): the round's own convergence
-    // action / the next round's first job materializes the checkpoint,
-    // so an EAGER checkpoint's dedicated job per round was pure
-    // scheduling overhead at toy scale and a redundant extra pass at
-    // cluster scale
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
     // undirected neighbor list, self-loops dropped, parallel edges
     // collapsed (a duplicate edge must not double a vote)
     val e = bothDirs(canonical(edges.select(
       col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))))
-    val nodeIds = materialize {
+    val nodeIds = Materialize({
       val fromEdges = e.select(col("src").as("id")).distinct()
       nodes.fold(fromEdges) { case (df, c) =>
         fromEdges.union(df.select(col(c).cast("long").as("id"))).distinct()
       }
-    }
+    }, reliable = reliable)
     var labels = nodeIds.select(col("id"), col("id").as("label"))
     for (_ <- 1 to iterations) {
       val votes = e.join(labels, e("dst") === labels("id"))
@@ -639,9 +573,10 @@ object Graph {
         .groupBy(col("__v"))
         .agg(min_by(col("__l"),
           struct((col("__cnt") * -1).as("nc"), col("__l"))).as("__new"))
-      labels = materialize(
+      labels = Materialize(
         labels.join(votes, labels("id") === votes("__v"), "left")
-          .select(col("id"), coalesce(col("__new"), col("label")).as("label")))
+          .select(col("id"), coalesce(col("__new"), col("label")).as("label")),
+        reliable = reliable)
     }
     labels
   }
@@ -713,14 +648,13 @@ object Graph {
                     weightCol: String = "w",
                     maxIter: Int = 50): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    def materialize(df: DataFrame): DataFrame =
-      df.localCheckpoint(eager = false) // lazy: the frontier-empty test materializes it
+    // lazy: the frontier-empty test materializes each truncation
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       col(weightCol).cast("long").as("w"))
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = materialize(Seq((source, 0L)).toDF("id", "dist"))
+    var dist = Materialize(Seq((source, 0L)).toDF("id", "dist"))
     var frontier = dist
     var it = 0
     var done = frontier.limit(1).isEmpty
@@ -729,13 +663,13 @@ object Graph {
       val candidates = frontier.join(e, frontier("id") === e("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("dist") + col("w")).as("cand"))
-      val improved = materialize(
+      val improved = Materialize(
         candidates.join(dist, Seq("id"), "left")
           .filter(col("dist").isNull || col("cand") < col("dist"))
           .select(col("id"), col("cand").as("dist")))
       done = improved.limit(1).isEmpty
       if (!done) {
-        dist = materialize(
+        dist = Materialize(
           dist.join(improved.select(col("id")), Seq("id"), "left_anti")
             .union(improved))
         frontier = improved
@@ -766,14 +700,13 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String = "src",
            dstCol: String = "dst", iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges
+    val e = Materialize(edges
       .select(col(srcCol).cast("long").as("__src"),
         col(dstCol).cast("long").as("__dst"))
-      .filter(col("__src").isNotNull && col("__dst").isNotNull)
-      .localCheckpoint(eager = false)
-    val nodes = e.select(col("__src").as("id"))
+      .filter(col("__src").isNotNull && col("__dst").isNotNull))
+    val nodes = Materialize(e.select(col("__src").as("id"))
       .unionByName(e.select(col("__dst").as("id")))
-      .distinct().localCheckpoint(eager = false)
+      .distinct())
     val dec = (c: Column) => round(c, 9).cast("decimal(28,9)")
     def normalize(raw: DataFrame, valCol: String, outCol: String): DataFrame = {
       val total = raw.agg(sum(col(valCol)).as("__tot"))
@@ -790,12 +723,12 @@ object Graph {
         .join(h.select(col("id").as("__src"), col("__h")), "__src")
         .groupBy(col("__dst").as("id"))
         .agg(sum(dec(col("__h"))).as("__ar"))
-      a = normalize(araw, "__ar", "__a").localCheckpoint(eager = false)
+      a = Materialize(normalize(araw, "__ar", "__a"))
       val hraw = e
         .join(a.select(col("id").as("__dst"), col("__a")), "__dst")
         .groupBy(col("__src").as("id"))
         .agg(sum(dec(col("__a"))).as("__hr"))
-      h = normalize(hraw, "__hr", "__h").localCheckpoint(eager = false)
+      h = Materialize(normalize(hraw, "__hr", "__h"))
     }
     h.join(a, Seq("id"))
       .select(col("id"), round(col("__h"), 6).as("hub"),
@@ -889,56 +822,48 @@ object Graph {
       srcCol: String = "src", dstCol: String = "dst",
       nodes: Option[(DataFrame, String)] = None,
       maxIter: Int = 100, reliable: Boolean = false): DataFrame = {
-    if (reliable && edges.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "stronglyConnectedComponents(reliable = true) needs a reliable " +
-        "checkpoint location: call sparkContext.setCheckpointDir first")
-    // LAZY checkpoints throughout (r18): each was an EAGER
-    // localCheckpoint — a scheduled job of its own — but every one of
-    // these frames is followed by a count()/fingerprint or consumed by
-    // the next round's first job, which materializes the lazy
-    // checkpoint for free. Same truncated lineage, roughly half the
-    // driver jobs per outer round (the toy-scale wall here is job
-    // scheduling, not shuffle work — the CC round-batching finding).
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
+    // LAZY checkpoints throughout (r18): each was an EAGER one — a
+    // scheduled job of its own — but every one of these frames is
+    // followed by a count()/fingerprint or consumed by the next round's
+    // first job, which materializes the lazy checkpoint for free. Same
+    // truncated lineage, roughly half the driver jobs per outer round
+    // (the toy-scale wall here is job scheduling, not shuffle work — the
+    // CC round-batching finding).
     val raw = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
     // the vertex set keeps self-loop-only nodes; the edge set drops
     // self-loops (never cycle-forming) before everything
-    var rem = materialize(raw.select(col("src").as("id"))
-      .union(raw.select(col("dst").as("id"))).distinct())
-    var e = materialize(
-      raw.filter(col("src") =!= col("dst")).distinct())
+    var rem = Materialize(raw.select(col("src").as("id"))
+      .union(raw.select(col("dst").as("id"))).distinct(), reliable = reliable)
+    var e = Materialize(
+      raw.filter(col("src") =!= col("dst")).distinct(), reliable = reliable)
     var doneParts = List.empty[DataFrame]
     var outer = 0
     var remCount = rem.count()
     while (remCount > 0 && outer < maxIter) {
       val srcs = e.select(col("src").as("id")).distinct()
       val dsts = e.select(col("dst").as("id")).distinct()
-      val trimmed = materialize(
+      val trimmed = Materialize(
         rem.join(srcs, Seq("id"), "left_anti")
-          .union(rem.join(dsts, Seq("id"), "left_anti")).distinct())
+          .union(rem.join(dsts, Seq("id"), "left_anti")).distinct(),
+        reliable = reliable)
       doneParts ::= trimmed.select(col("id"), col("id").as("component"))
-      val rem2 = materialize(rem.join(trimmed, Seq("id"), "left_anti"))
+      val rem2 = Materialize(rem.join(trimmed, Seq("id"), "left_anti"),
+        reliable = reliable)
       val rem2Count = rem2.count()
       if (rem2Count > 0) {
-        val e2 = materialize(e
+        val e2 = Materialize(e
           .join(rem2.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .join(rem2.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")))
+          .select(col("src"), col("dst")), reliable = reliable)
         // forward min-id coloring to fixpoint. TWO propagation steps
         // per materialized round, each intermediate a LAZY checkpoint
         // materialized through the convergence fingerprint — one
         // driver job per round instead of four (the CC round-batching
-        // + checkpointViaFingerprint discipline; the toy-scale wall
-        // here is job-scheduling overhead, not shuffle work). Worst
+        // + fingerprint-materializes-checkpoint discipline; the toy-scale
+        // wall here is job-scheduling overhead, not shuffle work). Worst
         // case one redundant fixpoint round, paid once.
-        def lazyCk(df: DataFrame): DataFrame =
-          if (reliable) df.checkpoint(eager = false)
-          else df.localCheckpoint(eager = false)
         def colorStep(c: DataFrame): DataFrame = {
           val contrib = e2
             .join(c.select(col("id").as("src"), col("c").as("__cs")),
@@ -951,12 +876,14 @@ object Graph {
         def colorSig(c: DataFrame): Seq[Any] =
           c.agg(count(lit(1)), sum(xxhash64(col("id"), col("c"))
             .cast("decimal(38,0)"))).collect()(0).toSeq
-        var colors = lazyCk(rem2.select(col("id"), col("id").as("c")))
+        var colors = Materialize(rem2.select(col("id"), col("id").as("c")),
+          reliable = reliable)
         var sig = colorSig(colors)
         var stable = false
         var cIter = 0
         while (!stable && cIter < maxIter) {
-          val next = lazyCk(colorStep(lazyCk(colorStep(colors))))
+          val half = Materialize(colorStep(colors), reliable = reliable)
+          val next = Materialize(colorStep(half), reliable = reliable)
           val nextSig = colorSig(next)
           stable = nextSig == sig
           colors = next; sig = nextSig
@@ -977,13 +904,14 @@ object Graph {
             .select(col("id"), col("component"))
           m.union(step).distinct()
         }
-        var marked = lazyCk(colors.filter(col("id") === col("c"))
-          .select(col("id"), col("c").as("component")))
+        var marked = Materialize(colors.filter(col("id") === col("c"))
+          .select(col("id"), col("c").as("component")), reliable = reliable)
         var mCount = marked.count()
         var grown = true
         var mIter = 0
         while (grown && mIter < maxIter) {
-          val next = lazyCk(markStep(lazyCk(markStep(marked))))
+          val half = Materialize(markStep(marked), reliable = reliable)
+          val next = Materialize(markStep(half), reliable = reliable)
           val nCount = next.count()
           grown = nCount != mCount
           marked = next; mCount = nCount
@@ -992,14 +920,15 @@ object Graph {
         if (grown) throw new IllegalStateException(
           s"SCC backward marking did not converge in $maxIter rounds")
         doneParts ::= marked
-        rem = materialize(rem2.join(marked, Seq("id"), "left_anti"))
-        e = materialize(e2
+        rem = Materialize(rem2.join(marked, Seq("id"), "left_anti"),
+          reliable = reliable)
+        e = Materialize(e2
           .join(marked.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(marked.select(col("id").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")))
+          .select(col("src"), col("dst")), reliable = reliable)
       } else {
         rem = rem2
-        e = materialize(e.limit(0))
+        e = Materialize(e.limit(0), reliable = reliable)
       }
       remCount = rem.count()
       outer += 1

@@ -458,9 +458,9 @@ object JwJoin {
     // side), the exact gate's two name joins and the expansion — one
     // materialization instead of a re-embedded prep+distinct subtree
     // per reference (the maxLen collect below materializes it)
-    val aD = dedupReps(a).localCheckpoint(eager = false)
+    val aD = Materialize(dedupReps(a))
     val bD = if (selfPairs) aD
-      else dedupReps(b).localCheckpoint(eager = false)
+      else Materialize(dedupReps(b))
     // channel selection: one tiny max-length agg decides whether the
     // sorted-multiset deletion neighborhood is affordable (D <= 2)
     val maxLen = {
@@ -877,7 +877,7 @@ object JwJoin {
       scores0.select(col("__ida"), col("__idb"))
     } else {
       val scores =
-        if (symmetric) scores0.localCheckpoint(eager = true) else scores0
+        if (symmetric) Materialize(scores0, eager = true) else scores0
       def cut(df: DataFrame, keyCol: String, otherCol: String) = {
         val w = Window.partitionBy(col(keyCol))
           .orderBy(col("__score").desc, col(otherCol).asc)
@@ -980,8 +980,8 @@ object JwJoin {
       s"probeDfBudget must be >= 0 (0 = auto-size), got $probeDfBudget")
     val a = prep(left, leftIdCol, leftStrCol, blockCols.map(_._1))
     val b = prep(right, rightIdCol, rightStrCol, blockCols.map(_._2))
-    val aD = dedupReps(a).localCheckpoint(eager = false)
-    val bD = dedupReps(b).localCheckpoint(eager = false)
+    val aD = Materialize(dedupReps(a))
+    val bD = Materialize(dedupReps(b))
     // one count serves both auto knobs (gramLen saturation + budget)
     val nRight =
       if (gramLen == 0 || probeDfBudget == 0L) bD.count() else -1L
@@ -1010,25 +1010,4 @@ object JwJoin {
     bestMatchPrep(left, leftIdCol, leftStrCol, right, rightIdCol,
       rightStrCol, 1, gramLen, maxDfFraction, probeGrams, probeDfBudget,
       Nil)._7
-
-  /** Brute-force all-pairs reference (O(n^2) — tests and tiny frames
-    * ONLY). Same output contract as [[jaroWinklerSelfJoin]]. */
-  private[graft] def bruteForce(df: DataFrame, idCol: String, strCol: String,
-                                threshold: Double,
-                                blockCols: Seq[String] = Nil): DataFrame = {
-    val bk = if (blockCols.isEmpty) struct(lit(0).as("__z"))
-      else struct(blockCols.map(col): _*)
-    val s = df.select(col(idCol).as("__id"), col(strCol).as("__s"),
-        bk.as("__bk"))
-      .filter(col("__s").isNotNull && length(col("__s")) > 0)
-    val a = s.select(col("__id").as("id_a"), col("__s").as("__sa"),
-      col("__bk").as("__bka"))
-    val b = s.select(col("__id").as("id_b"), col("__s").as("__sb"),
-      col("__bk").as("__bkb"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b") && (col("__bka") <=> col("__bkb")))
-      .select(col("id_a"), col("id_b"),
-        JaroWinkler.jaroWinkler(col("__sa"), col("__sb")).as("jw"))
-      .filter(col("jw") >= threshold)
-  }
 }

@@ -67,12 +67,11 @@ object KMeans {
     val dim = dimRow(0).getInt(0)
     val mean = udaf(new TypedAggregators.VectorMean(dim))
 
-    var centroids = clean.orderBy(col(idCol).asc).limit(k)
+    var centroids = Materialize(clean.orderBy(col(idCol).asc).limit(k)
       .select(row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(col(idCol)))
           .cast("long").as("cluster_id"),
-        col(vecCol).cast("array<double>").as("centroid"))
-      .localCheckpoint()
+        col(vecCol).cast("array<double>").as("centroid")), eager = true)
     var iter = 0
     var shift = Double.MaxValue
     while (iter < maxIterations && shift > tol) {
@@ -81,14 +80,13 @@ object KMeans {
         .agg(mean(col(vecCol).cast("array<float>")).as("centroid"))
       // empty clusters keep their previous centroid: right-join the old
       // set and coalesce — k rows out, every round
-      val next = updated
+      val next = Materialize(updated
         .join(centroids.select(col("cluster_id"),
           col("centroid").as("__prev")), Seq("cluster_id"), "right")
         .select(col("cluster_id"),
           coalesce(col("centroid"), col("__prev")).as("centroid"),
           SquaredL2(coalesce(col("centroid"), col("__prev")), col("__prev"))
-            .as("__shift"))
-        .localCheckpoint()
+            .as("__shift")), eager = true)
       shift = next.agg(max(col("__shift"))).collect()(0).getDouble(0)
       centroids = next.drop("__shift")
       iter += 1

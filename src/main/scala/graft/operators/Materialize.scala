@@ -1,0 +1,48 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The engine's one lineage-truncation primitive: every iterative loop
+  * and every multi-referenced intermediate goes through here, so the
+  * local-vs-reliable decision, its checkpoint-dir guard and the cleanup
+  * of the blocks it leaves live in one place.
+  *
+  * `Materialize(df, eager, reliable)` mirrors `Dataset.localCheckpoint
+  * (eager)`. `reliable = true` writes to the session's checkpoint
+  * directory instead (`checkpoint(eager)`): slower, but the truncated
+  * lineage survives a lost executor, which a local checkpoint's
+  * executor-held blocks do not.
+  *
+  * Every RDD created here is tagged by name, and [[release]] unpersists
+  * exactly the tagged set. Only names are held, never references, so
+  * `ContextCleaner` still reaps superseded loop rounds. */
+object Materialize {
+
+  private val Tag = "graft.Materialize"
+
+  def apply(df: DataFrame, eager: Boolean = false,
+            reliable: Boolean = false): DataFrame = {
+    // fail before any Spark job: the callers' first Materialize precedes
+    // their first action, so a missing dir surfaces at call time
+    if (reliable && df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
+      throw new IllegalStateException(
+        "reliable materialization needs a reliable checkpoint location: " +
+        "call sparkContext.setCheckpointDir(<durable path>) first")
+    val out = if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+    out.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.setName(Tag)
+      case _ =>
+    }
+    out
+  }
+
+  /** Unpersist every RDD [[apply]] created in this session: lazy, eager
+    * and never-materialized ones alike. Dataset caches (`persist()`)
+    * and on-disk stores are not touched. Call it only once nothing will
+    * read the released frames again, e.g. between independent queries. */
+  def release(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .filter(_.name == Tag)
+      .foreach(_.unpersist(blocking = false))
+}

@@ -47,10 +47,10 @@ object Mmr {
     val spark = candidates.sparkSession
     // materialize the bounded candidate list ONCE — the retrieval plan
     // feeding it must not re-run per greedy round
-    val base = candidates.select(
+    val base = Materialize(candidates.select(
       col(idCol).cast("long").as("__id"),
       round(col(relCol).cast("double"), 4).as("__rel"),
-      col(vecCol).as("__vec")).localCheckpoint()
+      col(vecCol).as("__vec")), eager = true)
 
     var selected = Vector.empty[(Long, Double)] // (id, rounded score)
     var continue = true

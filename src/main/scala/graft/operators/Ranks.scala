@@ -100,7 +100,7 @@ object Ranks {
       d.withColumn(s"__lc_$v", sum(col(v)).over(localW))
     }
     val local =
-      if (truncate) localRaw.localCheckpoint(eager = false) else localRaw
+      if (truncate) Materialize(localRaw) else localRaw
     // per-(group, bucket) totals → per-group prefix over bucket ids:
     // groups × buckets rows max, aggregated before the walk
     val prefW = Window.partitionBy(gcols: _*).orderBy(col("__pid"))

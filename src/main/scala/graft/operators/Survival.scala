@@ -59,7 +59,13 @@ object Survival {
       .withColumn("__t", col("__d") + col("__c"))
     val totals = level.groupBy(col("__g")).agg(sum(col("__t")).as("__n"))
     // walk 1: level sizes → at-risk counts
-    val atRisk = Ranks
+    // truncate between the chained walks: walk 2's internal
+    // offsets/join double-reference would otherwise re-embed (and
+    // re-execute) walk 1's whole tree, scan included (measured
+    // 1.7 → 1.1 s warm at sf0.1; level-grid-sized blocks, Bench
+    // sweeps them per query). Lazy — walk 2's first job
+    // materializes it.
+    val atRisk = Materialize(Ranks
       .groupedCumSum(level, Seq("__g"), "__dur", Seq("__t"), truncate = true)
       .join(broadcast(totals), Seq("__g"))
       .withColumn("__nr", col("__n") - col("cum___t") + col("__t"))
@@ -70,14 +76,7 @@ object Survival {
         when(col("__d") > 0 && col("__d") < col("__nr"),
           round(log(lit(1.0) -
             col("__d").cast("double") / col("__nr")), 9))
-          .otherwise(lit(0.0)).cast("decimal(38,9)"))
-      // truncate between the chained walks: walk 2's internal
-      // offsets/join double-reference would otherwise re-embed (and
-      // re-execute) walk 1's whole tree, scan included (measured
-      // 1.7 → 1.1 s warm at sf0.1; level-grid-sized blocks, Bench
-      // sweeps them per query). Lazy — walk 2's first job
-      // materializes it.
-      .localCheckpoint(eager = false)
+          .otherwise(lit(0.0)).cast("decimal(38,9)")))
     // walk 2: cumulative ln terms → survival
     Ranks.groupedCumSum(atRisk, Seq("__g"), "__dur", Seq("__lnq"),
         truncate = true)

@@ -642,7 +642,7 @@ object TextIndex {
     // norm semi-join) — one lazy materialization instead of three
     // re-executions of the upstream tfidf pipeline (guide §3.3; Bench
     // sweeps localCheckpoint blocks per query)
-    val weights = weightsIn.localCheckpoint(eager = false)
+    val weights = Materialize(weightsIn)
     val q = weights.filter(col("doc_id") === queryDocId)
       .select(col("token"), col("w").as("__wq"))
     val dec = (c: Column) => round(c, 9).cast("decimal(28,9)")
@@ -681,7 +681,7 @@ object TextIndex {
                        topK: Int = 0): DataFrame = {
     require(queryDocIds.nonEmpty, "queryDocIds must be non-empty")
     // three readers of the weight table (the tfidfCosineToDoc note)
-    val weights = weightsIn.localCheckpoint(eager = false)
+    val weights = Materialize(weightsIn)
     val dec = (c: Column) => round(c, 9).cast("decimal(28,9)")
     val q = weights.filter(col("doc_id").isin(queryDocIds: _*))
       .select(col("doc_id").as("query_id"), col("token"), col("w").as("__wq"))

@@ -370,9 +370,8 @@ object TimeSeries {
     // upstream plan from re-embedding per reference (the q246 plan-
     // explosion fix — these queries were driver-bound: same wall at
     // sf0.001 as sf0.1, all planning + AQE stage orchestration)
-    val rows = df.filter(col(valCol).isNotNull)
-      .select(col(keyCol).as("__k"), col(valCol).cast("double").as("__v"))
-      .localCheckpoint(eager = false)
+    val rows = Materialize(df.filter(col(valCol).isNotNull)
+      .select(col(keyCol).as("__k"), col(valCol).cast("double").as("__v")))
     val m = rows.agg(count(lit(1)).as("__n"),
       (sum(round(col("__v"), 9).cast("decimal(38,9)")).cast("double") /
         count(lit(1))).as("__mean"))
@@ -412,11 +411,9 @@ object TimeSeries {
     // shared by root + both child segments; root's 1-row result rides
     // into the children as a leaf, not as its whole plan (the
     // decisionTreeDepth2 truncation)
-    val rows = df.filter(col(valCol).isNotNull)
-      .select(col(keyCol).as("__k"), col(valCol).as("__v"))
-      .localCheckpoint(eager = false)
-    val root = changePoint(rows, "__k", "__v")
-      .localCheckpoint(eager = false)
+    val rows = Materialize(df.filter(col(valCol).isNotNull)
+      .select(col(keyCol).as("__k"), col(valCol).as("__v")))
+    val root = Materialize(changePoint(rows, "__k", "__v"))
     val rt = broadcast(root.select(col("change_at").as("__cp")))
     val le = changePoint(
       rows.crossJoin(rt).filter(col("__k") <= col("__cp")), "__k", "__v")
@@ -492,8 +489,7 @@ object TimeSeries {
     // row __pos contributes its value to trends __pos−half…__pos+half
     // positions feed the MA explode AND the trend join-back: one lazy
     // materialization (the q246 plan-explosion fix)
-    val pos = Ranks.globalRowNumber(rows, "__k", "__pos")
-      .localCheckpoint(eager = false)
+    val pos = Materialize(Ranks.globalRowNumber(rows, "__k", "__pos"))
     val trend = pos
       .select(explode(sequence(col("__pos") - half, col("__pos") + half))
           .as("__tp"),
@@ -507,9 +503,9 @@ object TimeSeries {
         .as("__trend"))
     val trended = pos.join(trend, col("__pos") === col("__tp"), "left")
       .drop("__tp")
-    val phase = trended
-      .withColumn("__phase", (col("__pos") - 1) % period)
-      .localCheckpoint(eager = false) // read by phase means + final join
+    // read by phase means + final join
+    val phase = Materialize(trended
+      .withColumn("__phase", (col("__pos") - 1) % period))
     val phaseMeans = phase.filter(col("__trend").isNotNull)
       .groupBy(col("__phase"))
       .agg((sum(round(col("__v") - col("__trend"), 9)
@@ -553,8 +549,7 @@ object TimeSeries {
     require(k > 0, s"k must be positive, got $k")
     // the decomposition is read three times (median, MAD, final gate):
     // one lazy materialization of the series-sized table
-    val dec = seasonalDecompose(df, keyCol, valCol, period)
-      .localCheckpoint(eager = false)
+    val dec = Materialize(seasonalDecompose(df, keyCol, valCol, period))
     val scored = dec.filter(col("residual").isNotNull)
     val med = scored.agg(expr("percentile(residual, 0.5)").as("__med"))
     val dev = scored.crossJoin(broadcast(med))
@@ -860,11 +855,10 @@ object TimeSeries {
     // follow-up pass: one lazy materialization (the q246 plan-
     // explosion fix) — the pair self-join reads blocks instead of
     // re-running the thinning window per side
-    val rows = all
+    val rows = Materialize(all
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= maxPointsPerKey)
-      .drop("__rn")
-      .localCheckpoint(eager = false)
+      .drop("__rn"))
     val a = rows.select(col("__k"), col("__t").as("__t1"),
       col("__v").as("__v1"))
     val b = rows.select(col("__k"), col("__t").as("__t2"),
@@ -878,7 +872,7 @@ object TimeSeries {
     // cumulative count reaches ceil(m/2)
     def lowerMedian(lvls0: DataFrame, out: String): DataFrame = {
       // slope-level grid, read by the total AND the cumulative walk
-      val lvls = lvls0.localCheckpoint(eager = false)
+      val lvls = Materialize(lvls0)
       val tot = lvls.groupBy(col("__k")).agg(sum(col("__c")).as("__m"))
       Ranks.groupedCumSum(lvls, Seq("__k"), "__s", Seq("__c"))
         .join(tot, "__k")
@@ -886,10 +880,10 @@ object TimeSeries {
           col("cum___c") - col("__c") < ceil(col("__m") / 2))
         .select(col("__k"), col("__s").as(out), col("__m"))
     }
-    val slope = lowerMedian(
+    // key-sized; read by icepts + join
+    val slope = Materialize(lowerMedian(
       pairs.groupBy(col("__k"), col("__s")).agg(count(lit(1)).as("__c")),
-      "__slope")
-      .localCheckpoint(eager = false) // key-sized; read by icepts + join
+      "__slope"))
     val icepts = rows.join(slope, "__k")
       .select(col("__k"),
         round(col("__v") - col("__slope") * col("__t"), 9).as("__s"))
@@ -951,11 +945,10 @@ object TimeSeries {
     // follow-up pass: one lazy materialization (the q246 plan-
     // explosion fix) — the pair self-join reads blocks instead of
     // re-running the thinning window per side
-    val rows = all
+    val rows = Materialize(all
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= maxPointsPerKey)
-      .drop("__rn")
-      .localCheckpoint(eager = false)
+      .drop("__rn"))
     val a = rows.select(col("__k"), col("__t").as("__t1"),
       col("__v").as("__v1"))
     val b = rows.select(col("__k"), col("__t").as("__t2"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native `ordered_deletion_variants`: the ORDER-PRESERVING deletion
-  * neighborhood of [[graft.operators.EditDistance.deletionVariants]] —
+  * neighborhood of `graft.HofReference.deletionVariants` (src/test) —
   * every string reachable by ≤ d single-character deletions, original
   * included, duplicates collapsed keep-first, in exactly the order the
   * HOF chain (`array_distinct(concat(v, flatten(transform(v,

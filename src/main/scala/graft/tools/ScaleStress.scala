@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Materialize
+
 /** Scale-stress harness: synthesize an N× corpus from a base testdata dir
   * by deterministic replication + id remapping, then measure catalog
   * queries at 1× and N× to expose superlinear scaling constants that plan
@@ -167,9 +169,9 @@ object ScaleStress {
       import org.apache.spark.sql.functions._
       val custAll = spark.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey").as("id"), col("c_name").as("name"))
-      val cust = (if (sampleMod > 1L)
+      val cust = Materialize(if (sampleMod > 1L)
           custAll.filter(pmod(xxhash64(col("id")), lit(sampleMod)) === 0)
-        else custAll).localCheckpoint()
+        else custAll, eager = true)
       val supp = spark.read.parquet(s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("id"), col("s_name").as("name"))
       val truth = cust.crossJoin(broadcast(
@@ -188,7 +190,7 @@ object ScaleStress {
           probeGrams = probe, probeDfBudget = budget)
         .select(col("id_a").as("id"), col("id_b").as("got_id"),
           col("jw").as("got_jw"))
-      val j = truth.join(got, Seq("id"), "left").localCheckpoint()
+      val j = Materialize(truth.join(got, Seq("id"), "left"), eager = true)
       val wall = (System.nanoTime() - t0) / 1e9
       // chosen gramLen AND resolved budget are auditable from the
       // lineage alias (round-18: the alias carries both)

@@ -4,10 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.plans.JaroWinkler
 
-/** Interpreted higher-order-function reference forms of native kernels.
-  * The differential specs pin each kernel to its form here: same fold
-  * order, same null semantics, bit-identical results. */
+/** Interpreted higher-order-function reference forms of native kernels,
+  * and brute-force all-pairs references of the similarity joins. The
+  * differential specs pin each kernel or join to its form here: same
+  * fold order, same null semantics, bit-identical results. */
 object HofReference {
 
   /** [[VectorFunctions.cosine]] as `zip_with` + `aggregate`. */
@@ -59,5 +61,56 @@ object HofReference {
             concat(slice(out, lit(1), size(out) - 1),
               array(mrg.getField("_3"))))
             .otherwise(concat(out, array(x)))))
+  }
+
+  /** All single-character deletions of `s` (empty array for empty/1-char
+    * handled naturally: "a" → [""], "" → []). */
+  private def deletions(s: Column): Column =
+    when(length(s) <= 0, array().cast("array<string>"))
+      .otherwise(transform(sequence(lit(1), length(s), lit(1)),
+        i => concat(s.substr(lit(1), i - 1), s.substr(i + 1, length(s) - i))))
+
+  /** [[graft.plans.OrderedDeletionVariants]]: the deletion neighborhood
+    * of `s` up to depth `d`, original included, duplicates collapsed
+    * keep-first. The Catalyst tree doubles per depth. */
+  def deletionVariants(s: Column, d: Int): Column = {
+    var v = array(s)
+    for (_ <- 1 to d) v = array_distinct(concat(v, flatten(transform(v, deletions(_)))))
+    v
+  }
+
+  /** All-pairs reference of [[graft.operators.EditDistance.levenshteinSelfJoin]]
+    * (O(n²) — tiny frames only); same output contract. */
+  def editDistanceBruteForce(df: DataFrame, idCol: String, strCol: String,
+                             maxDist: Int): DataFrame = {
+    val s = df.select(col(idCol).as("__eid"), col(strCol).as("__str"))
+      .filter(col("__str").isNotNull)
+    val a = s.select(col("__eid").as("id_a"), col("__str").as("__sa"))
+    val b = s.select(col("__eid").as("id_b"), col("__str").as("__sb"))
+    a.crossJoin(b).filter(col("id_a") < col("id_b"))
+      .withColumn("dist", levenshtein(col("__sa"), col("__sb")).cast("long"))
+      .filter(col("dist") <= maxDist)
+      .select(col("id_a"), col("id_b"), col("dist"))
+  }
+
+  /** All-pairs reference of [[graft.operators.JwJoin.jaroWinklerSelfJoin]]
+    * (O(n²) — tiny frames only); same output contract. */
+  def jwBruteForce(df: DataFrame, idCol: String, strCol: String,
+                   threshold: Double,
+                   blockCols: Seq[String] = Nil): DataFrame = {
+    val bk = if (blockCols.isEmpty) struct(lit(0).as("__z"))
+      else struct(blockCols.map(col): _*)
+    val s = df.select(col(idCol).as("__id"), col(strCol).as("__s"),
+        bk.as("__bk"))
+      .filter(col("__s").isNotNull && length(col("__s")) > 0)
+    val a = s.select(col("__id").as("id_a"), col("__s").as("__sa"),
+      col("__bk").as("__bka"))
+    val b = s.select(col("__id").as("id_b"), col("__s").as("__sb"),
+      col("__bk").as("__bkb"))
+    a.crossJoin(b)
+      .filter(col("id_a") < col("id_b") && (col("__bka") <=> col("__bkb")))
+      .select(col("id_a"), col("id_b"),
+        JaroWinkler.jaroWinkler(col("__sa"), col("__sb")).as("jw"))
+      .filter(col("jw") >= threshold)
   }
 }

@@ -16,4 +16,31 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Spark jobs `body` submits on this thread, counted with a listener.
+    * The listener bus is asynchronous but ordered: once a sentinel job
+    * submitted after `body` is seen, every job of `body` has been. */
+  def jobsSubmittedBy(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$tag-sentinel", "sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains(s"$tag-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(groups.contains(s"$tag-sentinel"), "listener never saw the sentinel job")
+      groups.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 
 class EditDistanceSpec extends SparkSpec {
   import spark.implicits._
@@ -26,7 +26,7 @@ class EditDistanceSpec extends SparkSpec {
   test("deletion-neighborhood join equals brute force at d = 1 and d = 2") {
     for (d <- Seq(1, 2)) {
       val fast = pairsOf(EditDistance.levenshteinSelfJoin(corpus, "id", "name", d))
-      val slow = pairsOf(EditDistance.bruteForce(corpus, "id", "name", d))
+      val slow = pairsOf(HofReference.editDistanceBruteForce(corpus, "id", "name", d))
       assert(fast == slow, s"mismatch at maxDist $d")
       assert(fast.nonEmpty)
     }
@@ -71,7 +71,7 @@ class EditDistanceSpec extends SparkSpec {
     for (d <- 0 to 3) {
       val rows = df.select(
         graft.plans.OrderedDeletionVariants.of(col("s"), d).as("fast"),
-        EditDistance.deletionVariants(col("s"), d).as("ref"),
+        HofReference.deletionVariants(col("s"), d).as("ref"),
         col("s")).as[(Seq[String], Seq[String], String)].collect()
       rows.foreach { case (fast, ref, s) =>
         assert(fast == ref, s"depth $d, input '$s': $fast != $ref")
@@ -81,11 +81,11 @@ class EditDistanceSpec extends SparkSpec {
 
   test("deletion neighborhood: size and membership at d = 1") {
     val v = spark.range(1).select(
-        EditDistance.deletionVariants(lit("abc"), 1).as("v"))
+        HofReference.deletionVariants(lit("abc"), 1).as("v"))
       .as[Seq[String]].collect().head.toSet
     assert(v == Set("abc", "bc", "ac", "ab"))
     val e = spark.range(1).select(
-        EditDistance.deletionVariants(lit(""), 1).as("v"))
+        HofReference.deletionVariants(lit(""), 1).as("v"))
       .as[Seq[String]].collect().head.toSet
     assert(e == Set(""))
   }

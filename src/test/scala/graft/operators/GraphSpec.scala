@@ -110,23 +110,54 @@ class GraphSpec extends SparkSpec {
     assert(kept == Seq(1L, 9L))
   }
 
-  test("reliable checkpoint path yields identical components (and requires a dir)") {
-    val edges = ((0L until 63L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
+  test("reliable checkpoint path: every reliable operator fails fast without a dir and matches its local result") {
+    // a directed graph with a cycle, a chain, a dense core and an
+    // isolated pair — every operator below has work to do on it
+    val edges = (Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
+        (5L, 6L), (6L, 4L), (4L, 7L), (100L, 101L)) ++
+      (0L until 12L).map(i => (20L + i, 21L + i)))
       .toDF("src", "dst")
-    val expected = Graph.connectedComponents(edges).as[(Long, Long)].collect().toMap
+    val seeds = Seq(1L).toDF("id")
+    val vecs = Seq((0L, Seq(3.0f, 4.0f, 1.0f)), (1L, Seq(-3.0f, -2.0f, 0.0f)),
+      (2L, Seq(6.0f, 8.0f, 2.0f)), (3L, Seq(-1.0f, -8.0f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val cov = graft.functions.VectorFunctions.covarianceMatrix(vecs, "embedding")
+    val operators: Seq[(String, Boolean => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (r => Graph.connectedComponents(edges, reliable = r)),
+      "pageRank" -> (r => Graph.pageRank(edges, iterations = 3, reliable = r)),
+      "personalizedPageRank" -> (r =>
+        Graph.personalizedPageRank(edges, seeds, iterations = 3, reliable = r)),
+      "hopDistances" -> (r => Graph.hopDistances(edges, seeds, reliable = r)),
+      "kCore" -> (r => Graph.kCore(edges, k = 2, reliable = r)),
+      "labelPropagation" -> (r =>
+        Graph.labelPropagation(edges, iterations = 3, reliable = r)),
+      "stronglyConnectedComponents" -> (r =>
+        Graph.stronglyConnectedComponents(edges, reliable = r)),
+      "powerIteration" -> (r => graft.functions.VectorFunctions.powerIteration(
+        cov, iterations = 3, reliable = r)))
+    val expected = operators.map { case (name, op) =>
+      name -> op(false).collect().map(_.toString).sorted.toSeq
+    }.toMap
     val sc = spark.sparkContext
     // without a checkpoint dir the reliable path must fail fast, not fall
-    // back to non-durable truncation
+    // back to non-durable truncation, and throw before its first job.
+    // The dir cannot be unset on the shared context, so this half runs
+    // only while no earlier suite has set one.
     if (sc.getCheckpointDir.isEmpty) {
-      intercept[IllegalStateException] {
-        Graph.connectedComponents(edges, reliable = true)
+      operators.foreach { case (name, op) =>
+        val jobs = jobsSubmittedBy {
+          val e = intercept[IllegalStateException](op(true))
+          assert(e.getMessage.contains("setCheckpointDir"), s"$name: ${e.getMessage}")
+        }
+        assert(jobs == 0, s"$name(reliable = true) started $jobs Spark job(s) before failing")
       }
     }
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
     sc.setCheckpointDir(dir)
-    val out = Graph.connectedComponents(edges, reliable = true)
-      .as[(Long, Long)].collect().toMap
-    assert(out == expected, "reliable and local checkpointing must agree")
+    operators.foreach { case (name, op) =>
+      val got = op(true).collect().map(_.toString).sorted.toSeq
+      assert(got == expected(name), s"$name: reliable and local checkpointing must agree")
+    }
     // rounds actually hit durable storage
     assert(new java.io.File(dir).listFiles().nonEmpty)
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{HofReference, SparkSpec}
 
 class JwJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +28,7 @@ class JwJoinSpec extends SparkSpec {
   test("bounded self-join equals brute force at 0.85 / 0.90 / 0.97") {
     for (t <- Seq(0.85, 0.90, 0.97)) {
       val fast = pairsOf(JwJoin.jaroWinklerSelfJoin(corpus, "id", "name", t))
-      val slow = pairsOf(JwJoin.bruteForce(corpus, "id", "name", t))
+      val slow = pairsOf(HofReference.jwBruteForce(corpus, "id", "name", t))
       assert(fast == slow, s"mismatch at threshold $t")
       assert(fast.nonEmpty, s"degenerate spec at threshold $t")
     }
@@ -81,7 +81,7 @@ class JwJoinSpec extends SparkSpec {
         .otherwise(lit("y")))
     val fast = pairsOf(JwJoin.jaroWinklerSelfJoin(
       df, "id", "name", 0.9, blockCols = Seq("blk")))
-    val slow = pairsOf(JwJoin.bruteForce(
+    val slow = pairsOf(HofReference.jwBruteForce(
       df, "id", "name", 0.9, blockCols = Seq("blk")))
     assert(fast == slow)
     assert(fast.exists { case (a, b, _) => (a, b) == (5L, 6L) },
@@ -183,7 +183,7 @@ class JwJoinSpec extends SparkSpec {
       .map { case (s, i) => (i.toLong, s) }.toDF("id", "name")
     val classIds = (0 until classNames.size).map(_.toLong).toSet
     val full = pairsOf(JwJoin.jaroWinklerSelfJoin(all, "id", "name", 0.9699))
-    val brute = pairsOf(JwJoin.bruteForce(all, "id", "name", 0.9699))
+    val brute = pairsOf(HofReference.jwBruteForce(all, "id", "name", 0.9699))
     assert(full == brute, "valve off must stay exact under multiset pressure")
     val capped = pairsOf(JwJoin.jaroWinklerSelfJoin(
       all, "id", "name", 0.9699, maxBlockSize = 30))
@@ -227,7 +227,7 @@ class JwJoinSpec extends SparkSpec {
       .map { case (s, i) => (i.toLong, s) }
     val df = names.toDF("id", "name")
     val fast = pairsOf(JwJoin.jaroWinklerSelfJoin(df, "id", "name", 0.95))
-    val slow = pairsOf(JwJoin.bruteForce(df, "id", "name", 0.95))
+    val slow = pairsOf(HofReference.jwBruteForce(df, "id", "name", 0.95))
     assert(fast == slow)
     // cross-family pairs (length 18 vs 19, different char sets) must
     // not appear — the families are far below 0.95
