@@ -162,6 +162,27 @@ class GraphSpec extends SparkSpec {
     assert(new java.io.File(dir).listFiles().nonEmpty)
   }
 
+  test("reliable checkpoint path yields identical components (and requires a dir)") {
+    val edges = ((0L until 63L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
+      .toDF("src", "dst")
+    val expected = Graph.connectedComponents(edges).as[(Long, Long)].collect().toMap
+    val sc = spark.sparkContext
+    // without a checkpoint dir the reliable path must fail fast, not fall
+    // back to non-durable truncation
+    if (sc.getCheckpointDir.isEmpty) {
+      intercept[IllegalStateException] {
+        Graph.connectedComponents(edges, reliable = true)
+      }
+    }
+    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    sc.setCheckpointDir(dir)
+    val out = Graph.connectedComponents(edges, reliable = true)
+      .as[(Long, Long)].collect().toMap
+    assert(out == expected, "reliable and local checkpointing must agree")
+    // rounds actually hit durable storage
+    assert(new java.io.File(dir).listFiles().nonEmpty)
+  }
+
   test("pageRank: cycle is uniform, hubs outrank spokes, dangling mass redistributes, sums to 1") {
     // 3-cycle: perfectly regular → uniform 1/3 at every iteration
     val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
