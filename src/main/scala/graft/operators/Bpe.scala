@@ -1,7 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.{BpeMergeFold, ConstTable}
 
 /** Byte-pair-encoding vocabulary induction — the "train the tokenizer"
   * job of an LLM data pipeline.
@@ -9,20 +16,27 @@ import org.apache.spark.sql.functions._
   * Scale shape: classic BPE trains on WORD FREQUENCIES, so the only
   * corpus-scale pass is the word count (one shuffle over the tokenized
   * corpus). The merge loop then runs on the word-frequency table —
-  * bounded by distinct-word count, not corpus size — with one small
-  * aggregation job per merge round:
+  * bounded by distinct-word count, not corpus size — held once as an
+  * RDD of (symbols, count), with exactly one Spark job per merge round
+  * and no DataFrame planned inside the loop:
   *
-  *   1. `explode` each word's adjacent symbol pairs weighted by the
-  *      word's corpus count, `groupBy(pair).sum(weight)` (partial agg),
-  *      take the top pair (count desc, pair asc — a deterministic total
-  *      order, no RNG);
-  *   2. apply the merge to every word's symbol array via a SQL
-  *      `aggregate` fold (greedy left-to-right: a symbol merges with the
-  *      previous output element iff they form the chosen pair — the
-  *      last-element check reproduces standard BPE application,
-  *      including the "aaa" + (a,a) -> [aa, a] case);
-  *   3. `localCheckpoint` the word table per round so the loop's lineage
-  *      does not grow (same discipline as [[Graph.connectedComponents]]).
+  *   1. each partition sums its words' adjacent symbol pairs, weighted
+  *      by the word's corpus count, into one hash map; `treeAggregate`
+  *      merges the partial maps into the driver (one stage at a few
+  *      partitions, a bounded fan-in at many). Driver memory is bounded
+  *      by distinct pairs × partitions, not by the corpus. The driver
+  *      takes the top pair (count desc, left asc, right asc in Spark's
+  *      binary string order — a deterministic total order, no RNG);
+  *   2. the merge is mapped lazily over every word's symbol array with
+  *      the native [[graft.plans.BpeMergeFold]] kernel (greedy
+  *      left-to-right: a symbol merges with the previous output element
+  *      iff they form the chosen pair — the last-element check
+  *      reproduces standard BPE application, including the "aaa" +
+  *      (a,a) -> [aa, a] case); the next round's counting job computes
+  *      it, and no map follows the last round;
+  *   3. each round's word table is a lazy RDD [[Materialize]], so the
+  *      counting job stores it and truncates the loop's lineage without
+  *      a job of its own.
   *
   * The merge table itself is tiny (ranks × 4 columns) and is THE
   * artifact — production tokenizers ship the merge list, not the
@@ -35,7 +49,10 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
-  private def sqlStr(s: String): String = "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+  private type Word = (Array[UTF8String], Long)
+  /** Pair → count, the count in a one-slot array so that an update is
+    * one lookup and boxes nothing. */
+  private type PairCounts = mutable.HashMap[(UTF8String, UTF8String), Array[Long]]
 
   /** Learn `numMerges` merges from the corpus. Returns the merge table:
     * (rank, left, right, merged, pair_count) — rank is 0-based merge
@@ -46,43 +63,66 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     // the one corpus-scale pass: word frequencies
-    var words = Materialize(docs
+    val counted = docs
       .select(explode(expr(graft.plans.Tokens.whitespaceSql(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(expr("filter(split(w, ''), x -> x <> '')").as("sym"), col("n")),
-      eager = true)
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    var rank = 0
+      .select(expr("filter(split(w, ''), x -> x <> '')").as("sym"), col("n"))
+    var words: RDD[Word] = Materialize(counted.queryExecution.toRdd.map { row =>
+      // rows and their strings are reused buffers: copy each symbol
+      val sym = row.getArray(0)
+      (Array.tabulate(sym.numElements())(i => sym.getUTF8String(i).clone()), row.getLong(1))
+    })
+    val merges = mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var exhausted = false
-    while (rank < numMerges && !exhausted) {
-      // adjacent pairs weighted by word count; deterministic winner
-      val top = words
-        .filter(size(col("sym")) > 1)
-        .select(col("n"), explode(expr(
-          "transform(sequence(1, size(sym) - 1), i -> struct(sym[i-1] AS l, sym[i] AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(1)
-        .as[(String, String, Long)]
-        .collect()
-      top.headOption match {
-        case Some((l, r, cnt)) if cnt > 1 =>
-          val merged = l + r
-          merges += ((rank, l, r, merged, cnt))
-          // greedy left-to-right application — one native codegen fold
-          // per word (graft.plans.BpeMergeFold; the interpreted
-          // aggregate-fold stays the BpeSpec reference form)
-          words = Materialize(words
-            .withColumn("sym",
-              graft.plans.BpeMergeFold.of(col("sym"), Seq((l, r, merged)))),
-            eager = true)
-          rank += 1
+    while (merges.size < numMerges && !exhausted) {
+      // the round's one job: per-partition pair counts, merged at the driver
+      val pairs = words.treeAggregate(new PairCounts)(addPairs, mergeCounts)
+      best(pairs) match {
+        case Some(((l, r), cnt)) if cnt > 1 =>
+          val merged = UTF8String.concat(l, r)
+          merges += ((merges.size, l.toString, r.toString, merged.toString, cnt))
+          if (merges.size < numMerges) {
+            val table = new ConstTable(s"$l+$r=$merged", Array(Array(l, r, merged)))
+            words = Materialize(words.map { case (sym, n) =>
+              val out = BpeMergeFold.fold(new GenericArrayData(sym.asInstanceOf[Array[Any]]), table)
+              // a word the merge left alone keeps its array, shared by the rounds
+              if (out.numElements() == sym.length) (sym, n)
+              else (out.array.map(_.asInstanceOf[UTF8String]), n)
+            })
+          }
         case _ => exhausted = true
       }
     }
     merges.toSeq.toDF("rank", "left", "right", "merged", "pair_count")
   }
+
+  private def addPairs(acc: PairCounts, word: Word): PairCounts = {
+    val (sym, n) = word
+    var i = 1
+    while (i < sym.length) {
+      acc.getOrElseUpdate((sym(i - 1), sym(i)), new Array[Long](1))(0) += n
+      i += 1
+    }
+    acc
+  }
+
+  private def mergeCounts(a: PairCounts, b: PairCounts): PairCounts = {
+    val (into, from) = if (a.size >= b.size) (a, b) else (b, a)
+    from.foreach { case (pair, n) => into.getOrElseUpdate(pair, new Array[Long](1))(0) += n(0) }
+    into
+  }
+
+  /** The round's winner: count descending, then left, then right
+    * ascending in Spark's binary (UTF-8 byte) string order. */
+  private def best(pairs: PairCounts): Option[((UTF8String, UTF8String), Long)] =
+    pairs.iterator.map { case (pair, n) => (pair, n(0)) }.reduceOption { (a, b) =>
+      val ((al, ar), an) = a
+      val ((bl, br), bn) = b
+      val c = if (an != bn) java.lang.Long.compare(bn, an)
+              else if (al != bl) al.binaryCompare(bl)
+              else ar.binaryCompare(br)
+      if (c <= 0) a else b
+    }
 
   /** Apply a learned merge table to text: tokenize, split each token to
     * characters, replay the merges in rank order. Returns the frame with

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -14,12 +15,19 @@ import org.apache.spark.sql.execution.LogicalRDD
   * lineage survives a lost executor, which a local checkpoint's
   * executor-held blocks do not.
   *
+  * A lazy frame form is lazy only above its last shuffle: under AQE,
+  * `Dataset.checkpoint` runs the map stages of every shuffle in the plan
+  * as Spark jobs when the checkpoint is created (a `groupBy` below the
+  * call costs one job then, not at the first read). Job counts of a
+  * loop must include them. The RDD form `Materialize(rdd)` submits no
+  * job at creation.
+  *
   * Every RDD created here is tagged by name, and [[release]] unpersists
   * exactly the tagged set. Only names are held, never references, so
   * `ContextCleaner` still reaps superseded loop rounds. */
 object Materialize {
 
-  private val Tag = "graft.Materialize"
+  private[operators] val Tag = "graft.Materialize"
 
   def apply(df: DataFrame, eager: Boolean = false,
             reliable: Boolean = false): DataFrame = {
@@ -36,6 +44,11 @@ object Materialize {
     }
     out
   }
+
+  /** The RDD form, for loops that run on RDDs: a lazy local checkpoint
+    * (`rdd.localCheckpoint()`), tagged like the frame form. The first job
+    * that computes the RDD stores its blocks and truncates its lineage. */
+  def apply[T](rdd: RDD[T]): RDD[T] = rdd.setName(Tag).localCheckpoint()
 
   /** Unpersist every RDD [[apply]] created in this session: lazy, eager
     * and never-materialized ones alike. Dataset caches (`persist()`)

@@ -265,26 +265,4 @@ object SetSimJoin {
         aGen("__el") === bGen("__el") && col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
   }
-
-  /** Brute-force all-pairs reference (O(n²) — tests and tiny frames
-    * ONLY). Same output contract as [[jaccardSelfJoin]]. */
-  private[graft] def bruteForce(df: DataFrame, idCol: String, setCol: String,
-                                threshold: Double): DataFrame = {
-    val s = df.select(col(idCol).as("__sid"),
-        array_sort(array_distinct(col(setCol))).as("__els"))
-      .filter(size(col("__els")) > 0)
-    val a = s.select(col("__sid").as("id_a"), col("__els").as("__ea"),
-      size(col("__els")).as("size_a"))
-    val b = s.select(col("__sid").as("id_b"), col("__els").as("__eb"),
-      size(col("__els")).as("size_b"))
-    a.crossJoin(b).filter(col("id_a") < col("id_b"))
-      .withColumn("intersection",
-        size(array_intersect(col("__ea"), col("__eb"))).cast("long"))
-      .withColumn("jaccard", col("intersection").cast("double") /
-        (col("size_a") + col("size_b") - col("intersection")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("size_a").cast("long").as("size_a"),
-        col("size_b").cast("long").as("size_b"), col("intersection"),
-        col("jaccard"))
-  }
 }

@@ -113,4 +113,26 @@ object HofReference {
         JaroWinkler.jaroWinkler(col("__sa"), col("__sb")).as("jw"))
       .filter(col("jw") >= threshold)
   }
+
+  /** All-pairs reference of [[graft.operators.SetSimJoin.jaccardSelfJoin]]
+    * (O(n²) — tiny frames only); same output contract. */
+  def setSimBruteForce(df: DataFrame, idCol: String, setCol: String,
+                       threshold: Double): DataFrame = {
+    val s = df.select(col(idCol).as("__sid"),
+        array_sort(array_distinct(col(setCol))).as("__els"))
+      .filter(size(col("__els")) > 0)
+    val a = s.select(col("__sid").as("id_a"), col("__els").as("__ea"),
+      size(col("__els")).as("size_a"))
+    val b = s.select(col("__sid").as("id_b"), col("__els").as("__eb"),
+      size(col("__els")).as("size_b"))
+    a.crossJoin(b).filter(col("id_a") < col("id_b"))
+      .withColumn("intersection",
+        size(array_intersect(col("__ea"), col("__eb"))).cast("long"))
+      .withColumn("jaccard", col("intersection").cast("double") /
+        (col("size_a") + col("size_b") - col("intersection")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("size_a").cast("long").as("size_a"),
+        col("size_b").cast("long").as("size_b"), col("intersection"),
+        col("jaccard"))
+  }
 }

@@ -1,12 +1,21 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.util.Locale
+
 import graft.SparkSpec
 
 class BpeSpec extends SparkSpec {
   import spark.implicits._
 
   // independent reference implementation (Sennrich-style, no end-of-word
-  // marker, same deterministic tie-break) to hand-check the engine
+  // marker, same deterministic tie-break) to hand-check the engine.
+  // Symbols are code points, as `split(w, '')`'s are, and ties break in
+  // Spark's string order: UTF-8 bytes, which a latin-1 view of those
+  // bytes turns into String order (UTF-16 order differs above U+FFFF).
+  private def byteOrder(s: String): String =
+    new String(s.getBytes(UTF_8), ISO_8859_1)
+
   private def refApply(syms: List[String], l: String, r: String): List[String] =
     syms.foldLeft(List.empty[String]) { (out, x) =>
       if (out.nonEmpty && out.last == l && x == r) out.init :+ (l + r)
@@ -16,7 +25,9 @@ class BpeSpec extends SparkSpec {
   private def refMerges(wordCounts: Map[String, Long], k: Int)
       : Seq[(Int, String, String, String, Long)] = {
     var words: Map[String, (List[String], Long)] =
-      wordCounts.map { case (w, c) => w -> (w.map(_.toString).toList, c) }
+      wordCounts.map { case (w, c) =>
+        w -> (w.codePoints().toArray.map(Character.toString).toList, c)
+      }
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var rank = 0
     var done = false
@@ -28,7 +39,8 @@ class BpeSpec extends SparkSpec {
           case _          => ()
         }
       }
-      val best = pc.toSeq.sortBy { case ((a, b), c) => (-c, a, b) }.headOption
+      val best = pc.toSeq.sortBy { case ((a, b), c) => (-c, byteOrder(a), byteOrder(b)) }
+        .headOption
       best match {
         case Some(((l, r), cnt)) if cnt > 1 =>
           out += ((rank, l, r, l + r, cnt))
@@ -54,6 +66,47 @@ class BpeSpec extends SparkSpec {
     val want = refMerges(corpus, 6)
     assert(got == want, s"\nengine: $got\nref:    $want")
     assert(got.size == 6, "this corpus supports at least 6 productive merges")
+  }
+
+  test("learnMerges submits one Spark job per merge round") {
+    val rounds = 6
+    // the word count's shuffle map stage, plus at most one for collect()
+    val fixed = 2
+    val jobs = jobsSubmittedBy(Bpe.learnMerges(corpusDf, "text", rounds).collect())
+    assert(jobs <= rounds + fixed, s"$jobs jobs for $rounds rounds")
+  }
+
+  test("learnMerges is partition-invariant and breaks ties in UTF-8 byte order") {
+    val rng = new scala.util.Random(17)
+    def word = Seq.fill(2 + rng.nextInt(4))("abcd"(rng.nextInt(4))).mkString
+    // a tie between a code point above U+FFFF and U+FF21 (lowercased to
+    // U+FF41): UTF-8 bytes put U+FF41 first, UTF-16 units put U+1D11E first
+    val texts = Seq.fill(400)(Seq.fill(6)(word).mkString(" ")) ++
+      Seq.fill(120)("\uD834\uDD1Eq \uFF21q")
+    assert("\uD834\uDD1E" < "\uFF41", "String order differs from byte order here")
+    val wordCounts = texts.flatMap(_.toLowerCase(Locale.ROOT).split("\\s+"))
+      .filter(_.nonEmpty).groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
+    val want = refMerges(wordCounts, 25)
+    assert(want.size == 25)
+    assert(want.sliding(2).count { case Seq(a, b) => a._5 == b._5 } > 1,
+      s"the corpus needs count ties between different pairs: $want")
+    val tie = want.indexWhere(_._2 == "\uFF41")
+    assert(tie >= 0 && want(tie + 1)._2 == "\uD834\uDD1E" &&
+      want(tie)._5 == want(tie + 1)._5, s"the supplementary tie is decided: $want")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val shuffle = "spark.sql.shuffle.partitions"
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = Seq(shuffle, coalesce).map(k => k -> spark.conf.get(k))
+    try {
+      for (n <- Seq(1, 7)) {
+        // n partitions of docs and of the word table the rounds count over
+        spark.conf.set(shuffle, n.toString)
+        spark.conf.set(coalesce, "false")
+        val got = Bpe.learnMerges(docs.repartition(n), "text", 25)
+          .orderBy("rank").as[(Int, String, String, String, Long)].collect().toSeq
+        assert(got == want, s"\n$n partitions: $got\nref:          $want")
+      }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("learnMerges stops early when no pair repeats") {

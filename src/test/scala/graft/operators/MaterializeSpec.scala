@@ -57,4 +57,24 @@ class MaterializeSpec extends SparkSpec {
     assert(jobsSubmittedBy(Materialize(narrow, eager = true)) > 0)
     Materialize.release(spark)
   }
+
+  test("a lazy Materialize over a groupBy runs its shuffle map stage at creation") {
+    // AQE executes the map stage inside Dataset.checkpoint's action
+    assert(jobsSubmittedBy(Materialize(grid(100))) == 1)
+    Materialize.release(spark)
+  }
+
+  test("the RDD form submits no job, carries the tag and is released") {
+    val counts = spark.sparkContext.parallelize(1 to 100, 4)
+      .map(i => (i % 7, 1)).reduceByKey(_ + _)
+    var m: RDD[(Int, Int)] = null
+    // unlike the frame form over a groupBy: no job, shuffle included
+    assert(jobsSubmittedBy { m = Materialize(counts) } == 0)
+    assert(m.name == Materialize.Tag)
+    assert(persisted(m) && !m.isCheckpointed)
+    assert(m.values.sum() == 100)
+    assert(m.isCheckpointed, "the first job stores it and truncates its lineage")
+    Materialize.release(spark)
+    assert(!persisted(m))
+  }
 }

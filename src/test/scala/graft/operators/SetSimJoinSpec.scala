@@ -26,7 +26,7 @@ class SetSimJoinSpec extends SparkSpec {
   test("prefix-filtered join equals brute force at several thresholds") {
     for (t <- Seq(0.5, 0.8, 0.95, 1.0)) {
       val fast = pairsOf(SetSimJoin.jaccardSelfJoin(corpus, "id", "els", t))
-      val slow = pairsOf(SetSimJoin.bruteForce(corpus, "id", "els", t))
+      val slow = pairsOf(graft.HofReference.setSimBruteForce(corpus, "id", "els", t))
       assert(fast == slow, s"mismatch at threshold $t")
     }
   }
