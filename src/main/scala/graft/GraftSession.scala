@@ -47,7 +47,15 @@ object GraftSession {
       // spark.sql.extensions themselves
       .withExtensions(new graft.plans.GraftExtensions)
 
-  def local(cores: Int = 32): SparkSession = {
+  /** Local parallelism of the command-line mains: `SPARK_GRAFT_CPUS`,
+    * else every core of the host. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session every main runs in (Bench, Verify, TimeQuery,
+    * ScaleStress and the demos): `cores` local threads and as many
+    * initial shuffle partitions. */
+  def local(cores: Int = cpus): SparkSession = {
     val s = builder(s"local[$cores]", shufflePartitions = cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -108,10 +108,10 @@ object JwJoin {
 
   /** The shipped best-match retrieval valves (measured, SCALE.md
     * rounds 16-17) — single source of truth shared by [[bestMatch]],
-    * [[bestMatchCandidates]], [[scoredRepsProbe]] and the scale
-    * harness's diagnostic probes, so a default drift can never make
-    * the diagnostics silently measure different settings than
-    * production. `DefaultProbeDfBudget = 0` = AUTO: resolve to
+    * [[bestMatchCandidates]] and [[scoredRepsProbe]] (the specs'
+    * retrieval-volume hook), so a default drift can never make the
+    * specs silently pin different settings than production.
+    * `DefaultProbeDfBudget = 0` = AUTO: resolve to
     * max([[BudgetFloor]], ceil(8·√|right reps|)) — the measured
     * recall-per-cost optimum at each corpus decade (SCALE.md r17
     * budget dial, measured on single-length retrieval: 512 → 1.000 at
@@ -656,18 +656,6 @@ object JwJoin {
     (g, vocab)
   }
 
-  /** Diagnostic mirror of the full-auto resolution (`ScaleStress
-    * jwvocab`): (right reps, per-length vocab, chosen gramLen,
-    * resolved budget) for a default bestMatch call against `right`. */
-  private[graft] def vocabDiag(right: DataFrame, idCol: String,
-                               strCol: String)
-      : (Long, Map[Int, Long], Int, Long) = {
-    val bD = dedupReps(prep(right, idCol, strCol, Nil))
-    val n = bD.count()
-    val (g, vocab) = autoGramLenVocab(bD, nRight = n)
-    (n, vocab, g, resolveBudget(0L, n, vocab.getOrElse(g, 0L)))
-  }
-
   /** Proxy-scored candidate rep pairs: every pair sharing at least
     * one surviving probe gram, scored by the IDF-weighted shared-gram
     * sum — the retrieval core all best-match forms share. The proxy
@@ -997,10 +985,9 @@ object JwJoin {
       bestMatchScoredReps(aD, bD, g, maxDfFraction, probeGrams, budget))
   }
 
-  /** Instrumentation hook for the scale harness (`ScaleStress jwdiag`):
-    * the rep-grain proxy-score table a best-match call would cut.
-    * Counting it at 1x vs Nx separates retrieval fan-out growth from
-    * the cut/gate machinery when adjudicating a measured exponent. */
+  /** Test hook: the rep-grain proxy-score table a best-match call
+    * would cut. `JwJoinSpec` counts it to pin how `probeDfBudget`
+    * bounds the retrieval fan-out, apart from the cut/gate machinery. */
   private[graft] def scoredRepsProbe(left: DataFrame, leftIdCol: String,
       leftStrCol: String, right: DataFrame, rightIdCol: String,
       rightStrCol: String, gramLen: Int = 0,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test harness: one session per suite (lazy), small local
-  * parallelism, UTC, nanos-compat — mirrors Verify/Bench configuration. */
+  * parallelism, UTC, nanos-compat — the confs `GraftSession` sets that
+  * differ from Spark's defaults, without `GraftExtensions`. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -174,7 +174,7 @@ class AnnRecallSpec extends SparkSpec {
     // 0.94-0.985 at the same probe-cost shape. The r15 routing note
     // stands as the permanent answer: IVF is the production route;
     // LSH is the zero-training streaming option, with recall sized on
-    // the caller's corpus via the `ScaleStress annrecall` harness.
+    // the caller's own corpus by this spec's recall protocol.
     val r8 = meanRecall((qid, qv) => ids(VectorFunctions.lshTopKMulti(
       emb.filter(col("vec_id") =!= qid), "embedding", "vec_id", qv, K,
       numPlanes = 4, tables = 8)))
