@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Merge/upsert semantics as pure relational plans.
@@ -12,12 +13,17 @@ import org.apache.spark.sql.functions._
   *    63-65, 84-92)
   *  - `UPDATE target SET cols WHERE key = :k` (keyed update, load.py:113-125)
   *
-  * Without a mutable store these become recompute-and-overwrite plans. All
-  * three are one shuffle (or zero, when the delta side broadcasts): at
+  * Without a mutable store these become recompute-and-overwrite plans.
+  * [[upsert]] and [[insertIfAbsent]] are one window over `target ∪ delta`
+  * partitioned by the key, so each is one shuffle and plans the delta's
+  * lineage once; [[updateMisses]] is one aggregate over the union of both
+  * key sets. (An anti-join against a key-pruned copy of the delta would
+  * plan the delta twice: exchange reuse cannot share two differently
+  * pruned branches.) The price is that the target is shuffled with the
+  * delta, where an anti-join could broadcast a small delta and stream the
+  * target; a whole-table rewrite reads the target in full either way. At
   * 100 TB, partition the target by the merge key on disk so the rewrite
-  * touches only affected partitions, and let AQE pick broadcast when the
-  * delta is small — mirroring the reference's intent of shipping only the
-  * delta across the storage boundary.
+  * touches only affected partitions.
   *
   * Determinism: Postgres resolves intra-batch conflicts by statement order.
   * We require an explicit `tiebreak` ordering instead (SURVEY.md §2.A
@@ -33,17 +39,44 @@ object Merge {
     * Schemas must match. */
   def upsert(target: DataFrame, updates: DataFrame, keys: Seq[String],
              tiebreak: Seq[Column]): DataFrame = {
-    val lastPerKey = Dedup.keepFirst(updates, keys, tiebreak.map(_.desc))
-    target.join(lastPerKey, keys, "left_anti").unionByName(lastPerKey)
+    val merged = mergeOnKeys(target, updates, keys, tiebreak.map(_.desc), deltaWins = true)
+    // key columns first: the layout of tables Sinks.upsertParquet stored
+    merged.select((keys ++ target.columns.filterNot(keys.contains)).map(col): _*)
   }
 
   /** Insert-if-absent (ON CONFLICT DO NOTHING): rows of `inserts` whose key
     * is absent from `target` are appended; the FIRST row per key under
     * `tiebreak` wins among intra-batch duplicates. */
   def insertIfAbsent(target: DataFrame, inserts: DataFrame, keys: Seq[String],
-                     tiebreak: Seq[Column]): DataFrame = {
-    val firstPerKey = Dedup.keepFirst(inserts, keys, tiebreak)
-    target.unionByName(firstPerKey.join(target, keys, "left_anti"))
+                     tiebreak: Seq[Column]): DataFrame =
+    mergeOnKeys(target, inserts, keys, tiebreak, deltaWins = false)
+
+  /** The one window behind [[upsert]] and [[insertIfAbsent]]. Rows of
+    * `target ∪ delta` are tagged with their side and partitioned by
+    * `keys`; delta rows sort first, then by `deltaOrder`, so row 1 of a
+    * key is its winning delta row. A key clashes when both sides hold it
+    * and none of its columns is null (a null never matches, as in an
+    * equi-join). Every target row and the winning delta row survive,
+    * except that a clash drops the target rows if `deltaWins` and the
+    * delta row otherwise. Columns in target order. */
+  private def mergeOnKeys(target: DataFrame, delta: DataFrame, keys: Seq[String],
+                          deltaOrder: Seq[Column], deltaWins: Boolean): DataFrame = {
+    val side = col("__graft_side")
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(side.desc +: deltaOrder: _*)
+    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val isDelta = side === 1
+    val winner = col("__graft_rn") === 1
+    val clash = col("__graft_clash")
+    target.withColumn("__graft_side", lit(0))
+      .unionByName(delta.withColumn("__graft_side", lit(1)))
+      .withColumns(Map(
+        "__graft_rn" -> row_number().over(w),
+        "__graft_clash" -> (keys.map(k => col(k).isNotNull).reduce(_ && _) &&
+          min(side).over(whole) =!= max(side).over(whole))))
+      .filter(
+        if (deltaWins) when(isDelta, winner).otherwise(!clash)
+        else !isDelta || (winner && !clash))
+      .drop("__graft_side", "__graft_rn", "__graft_clash")
   }
 
   /** Keyed update (UPDATE .. WHERE key): overwrite `setCols` of target rows
@@ -67,10 +100,21 @@ object Merge {
     joined.select(projected.toIndexedSeq: _*)
   }
 
-  /** The reference's miss-warning (load.py:123-124): update keys that hit no
-    * target row. */
-  def updateMisses(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
-    updates.join(target, keys, "left_anti")
+  /** The reference's miss-warning (load.py:123-124): the distinct update
+    * keys that hit no target row, as the `keys` columns. One aggregate over
+    * the union of both key sets, so one shuffle and no broadcast: a key is
+    * a miss when an update holds it and either no target row does or one
+    * of its columns is null (a null never matches). */
+  def updateMisses(target: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame = {
+    val side = col("__graft_side")
+    target.select(keys.map(col) :+ lit(0).as("__graft_side"): _*)
+      .unionByName(updates.select(keys.map(col) :+ lit(1).as("__graft_side"): _*))
+      .groupBy(keys.map(col): _*)
+      .agg(min(side).as("__graft_lo"), max(side).as("__graft_hi"))
+      .filter(col("__graft_hi") === 1 &&
+        (col("__graft_lo") === 1 || keys.map(k => col(k).isNull).reduce(_ || _)))
+      .select(keys.map(col): _*)
+  }
 
   /** SCD Type 2: build a versioned dimension (validity intervals) from a
     * change log. Consecutive rows per key with unchanged `attrCols` are
@@ -159,7 +203,6 @@ object Merge {
   def scd2FromChanges(changes: DataFrame, keys: Seq[String], tsCol: String,
                       attrCols: Seq[String],
                       orderCols: Seq[Column] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ord = if (orderCols.nonEmpty) orderCols else Seq(col(tsCol).asc)
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
     val attrs = struct(attrCols.map(col): _*)
@@ -202,7 +245,6 @@ object Merge {
                    minOf: Seq[String] = Nil,
                    maxOf: Seq[String] = Nil,
                    latestBy: Option[(String, Seq[String])] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val picked = mostFrequent ++ longest ++ minOf ++ maxOf ++
       latestBy.map(_._2).getOrElse(Nil)
     require(picked.nonEmpty, "goldenRecord needs at least one strategy column")

@@ -25,13 +25,20 @@ object TsePipelines {
 
   /** seed_parties (load.py:10-28): project party columns, dedup on
     * NR_PARTIDO keeping first occurrence, cast/rename, upsert into
-    * `existing` on party_number. */
+    * `existing` on party_number.
+    *
+    * The keep-first groups by (party_number, NR_PARTIDO), the same groups
+    * as NR_PARTIDO alone since the cast is a function of it, over rows
+    * hash-partitioned by party_number. That partitioning also clusters
+    * the upsert's window, so the parties lineage shuffles once. */
   def seedParties(raw: DataFrame, existing: DataFrame, fileOrder: String): DataFrame = {
     val parties = Dedup.keepFirst(
-      raw.select(col("NR_PARTIDO"), col("SG_PARTIDO"), col("NM_PARTIDO"), col(fileOrder)),
-      Seq("NR_PARTIDO"), Seq(col(fileOrder)))
+      raw.select(col("NR_PARTIDO").cast("long").as("party_number"), col("NR_PARTIDO"),
+          col("SG_PARTIDO"), col("NM_PARTIDO"), col(fileOrder))
+        .repartition(col("party_number")),
+      Seq("party_number", "NR_PARTIDO"), Seq(col(fileOrder)))
       .select(
-        col("NR_PARTIDO").cast("long").as("party_number"),
+        col("party_number"),
         col("SG_PARTIDO").as("initials"),
         col("NM_PARTIDO").as("party_name"),
         col(fileOrder).as("__ord"))
@@ -112,10 +119,10 @@ object TsePipelines {
   }
 
   /** The miss-warning count (load.py:123-124): vote keys with no
-    * candidacy row. */
+    * candidacy row, one row per key. */
   def resultMisses(votes: DataFrame, candidacies: DataFrame): DataFrame =
     Merge.updateMisses(
       candidacies.select("sq_candidate_tse"),
-      votes.select(col("SQ_CANDIDATO").cast("string").as("sq_candidate_tse")).distinct(),
+      votes.select(col("SQ_CANDIDATO").cast("string").as("sq_candidate_tse")),
       Seq("sq_candidate_tse"))
 }

@@ -82,8 +82,12 @@ object Sinks {
   }
 
   /** Upsert-to-storage: read current state, apply Merge.upsert, rewrite.
-    * At scale, pair with `partitionBy` on the merge key's partition column
-    * and [[overwritePartitions]]. */
+    * The stored table is an unpartitioned parquet directory, as this sink
+    * writes it; its schema comes from one data file's footer
+    * ([[storedTable]]), so the upsert runs no schema-inference job, and a
+    * stored table whose columns differ from `updates` fails the merge
+    * before anything is written. At scale, pair with `partitionBy` on the
+    * merge key's partition column and [[overwritePartitions]]. */
   def upsertParquet(updates: DataFrame, path: String, keys: Seq[String],
                     tiebreak: Seq[org.apache.spark.sql.Column]): Unit = {
     val spark = updates.sparkSession
@@ -97,12 +101,45 @@ object Sinks {
     recoverInterruptedSwap(fs, dst, tmp, old)
     val merged =
       if (fs.exists(dst))
-        graft.operators.Merge.upsert(spark.read.parquet(path), updates, keys, tiebreak)
+        graft.operators.Merge.upsert(storedTable(spark, fs, dst), updates, keys, tiebreak)
       else updates
     // write via temp dir then swap: parquet sinks can't read-and-overwrite
     // the same path in one job
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     promoteSwap(fs, dst, tmp, old)
+  }
+
+  /** The parquet table at `dir`, read with the schema of the footer of its
+    * first data file by name (a top-level file whose name does not start
+    * with `_` or `.`). That is the file Spark's own non-merging inference
+    * reads, and the frame has the schema `spark.read.parquet` infers, but
+    * the footer is read here on the driver instead of in a one-task job. */
+  private[sources] def storedTable(spark: org.apache.spark.sql.SparkSession,
+                                   fs: org.apache.hadoop.fs.FileSystem,
+                                   dir: org.apache.hadoop.fs.Path): DataFrame = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val data = fs.listStatus(dir).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+    val file = if (data.isEmpty) throw new java.io.FileNotFoundException(
+      s"no parquet data file in $dir to read the stored table's schema from")
+      else data.minBy(_.getPath.getName)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf)
+      .withMetadataFilter(
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      .build()
+    val reader = ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf), options)
+    val footer = try reader.getFooter finally reader.close()
+    val sqlConf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(sqlConf))
+    spark.read.schema(schema).parquet(dir.toString)
   }
 
   /** In-place compaction of a (possibly partitioned) parquet table: rewrite

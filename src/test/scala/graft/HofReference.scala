@@ -4,13 +4,39 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.operators.Dedup
 import graft.plans.JaroWinkler
 
 /** Interpreted higher-order-function reference forms of native kernels,
-  * and brute-force all-pairs references of the similarity joins. The
-  * differential specs pin each kernel or join to its form here: same
-  * fold order, same null semantics, bit-identical results. */
+  * brute-force all-pairs references of the similarity joins, and the
+  * anti-join forms of the merges. The differential specs pin each kernel,
+  * join or merge to its form here: same fold order, same null semantics,
+  * bit-identical results. */
 object HofReference {
+
+  /** [[graft.operators.Merge.upsert]] as keep-last plus anti-join: the
+    * target rows whose key no update holds, then the last update row per
+    * key under `tiebreak`. */
+  def upsertAntiJoin(target: DataFrame, updates: DataFrame, keys: Seq[String],
+                     tiebreak: Seq[Column]): DataFrame = {
+    val lastPerKey = Dedup.keepFirst(updates, keys, tiebreak.map(_.desc))
+    target.join(lastPerKey, keys, "left_anti").unionByName(lastPerKey)
+  }
+
+  /** [[graft.operators.Merge.insertIfAbsent]] as keep-first plus
+    * anti-join: every target row, then the first insert row per key under
+    * `tiebreak` whose key no target row holds. */
+  def insertIfAbsentAntiJoin(target: DataFrame, inserts: DataFrame, keys: Seq[String],
+                             tiebreak: Seq[Column]): DataFrame = {
+    val firstPerKey = Dedup.keepFirst(inserts, keys, tiebreak)
+    target.unionByName(firstPerKey.join(target, keys, "left_anti"))
+  }
+
+  /** [[graft.operators.Merge.updateMisses]] as an anti-join: the update
+    * rows whose key no target row holds, duplicates included. */
+  def updateMissesAntiJoin(target: DataFrame, updates: DataFrame,
+                           keys: Seq[String]): DataFrame =
+    updates.join(target, keys, "left_anti")
 
   /** [[VectorFunctions.cosine]] as `zip_with` + `aggregate`. */
   def cosineHof(a: Column, b: Column): Column =

@@ -95,4 +95,22 @@ class TsePipelinesSpec extends SparkSpec {
       .as[String].collect().toSeq
     assert(misses == Seq("9999"))
   }
+
+  test("resultMisses counts in one aggregate over both key sets") {
+    val parties = TsePipelines.seedParties(cand, emptyParties, "ord")
+    val politicians = TsePipelines.seedPoliticians(cand,
+      Seq.empty[(String, String)].toDF("full_name", "nickname"), "ord")
+    val candidacies = TsePipelines.seedCandidacies(cand, parties, politicians,
+      TsePipelines.deriveElections(cand))
+    var misses = -1L
+    val jobs = jobsSubmittedBy {
+      misses = TsePipelines.resultMisses(votes, candidacies).count()
+    }
+    assert(misses == 1L)
+    // AQE runs each shuffle-map stage as a job: two for each broadcast
+    // dimension (its shuffle, then the broadcast), the key aggregate's
+    // shuffle, count()'s own shuffle and its result stage; no job shuffles
+    // or broadcasts the candidacies keys
+    assert(jobs == 9)
+  }
 }

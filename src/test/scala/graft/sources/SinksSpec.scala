@@ -130,4 +130,82 @@ class SinksSpec extends SparkSpec {
       "pre-crash rows must survive the retry")
     assert(!old.exists() && !tmpDir.exists())
   }
+
+  test("storedTable reads one footer: the schema spark.read.parquet infers, nullability included") {
+    val p = tmp()
+    val df = spark.range(4).select(
+      col("id"),                                   // long, not nullable in the frame
+      concat(lit("s"), col("id")).as("s"),
+      col("id").cast("int").as("i"),
+      date_add(lit("2024-01-01").cast("date"), col("id").cast("int")).as("d"),
+      lit(null).cast("long").as("nothing"))        // every value null
+      .repartition(3)                              // several data files
+    Sinks.upsertParquet(df, p, Seq("id"), Seq(col("i")))
+    val dir = new org.apache.hadoop.fs.Path(p)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val inferred = spark.read.parquet(p).schema
+    var stored: org.apache.spark.sql.DataFrame = null
+    assert(jobsSubmittedBy { stored = Sinks.storedTable(spark, fs, dir) } == 0)
+    assert(stored.schema == inferred)
+    assert(stored.schema.fields.map(_.nullable).toSeq == inferred.fields.map(_.nullable).toSeq)
+    assert(stored.schema.fieldNames.toSeq == Seq("id", "s", "i", "d", "nothing"))
+    assert(stored.orderBy("id").collect().toSeq == spark.read.parquet(p).orderBy("id").collect().toSeq)
+  }
+
+  test("upsertParquet throws on a stored table with an extra or a missing column; table intact") {
+    def stored(p: String) = spark.read.parquet(p).orderBy("k").collect().toSeq
+    // stored (k, v, ver) vs updates (k, v): the stored table has an extra column
+    val extra = tmp()
+    Sinks.upsertParquet(Seq((1L, "a", 1), (2L, "b", 1)).toDF("k", "v", "ver"),
+      extra, Seq("k"), Seq(col("k")))
+    val before = stored(extra)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Sinks.upsertParquet(Seq((2L, "B")).toDF("k", "v"), extra, Seq("k"), Seq(col("k")))
+    }
+    assert(stored(extra) == before)
+    // stored (k, v) vs updates (k, v, ver): the stored table misses a column
+    val missing = tmp()
+    Sinks.upsertParquet(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), missing, Seq("k"), Seq(col("k")))
+    val beforeMissing = stored(missing)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Sinks.upsertParquet(Seq((2L, "B", 2)).toDF("k", "v", "ver"), missing, Seq("k"), Seq(col("k")))
+    }
+    assert(stored(missing) == beforeMissing)
+    for (p <- Seq(extra, missing)) {
+      assert(!new java.io.File(p + "__graft_tmp").exists())
+      assert(!new java.io.File(p + "__graft_old").exists())
+    }
+  }
+
+  test("upsertParquet over a directory with no data file fails with a clear message") {
+    val p = tmp()
+    val dir = new java.io.File(p)
+    assert(dir.mkdirs())
+    new java.io.FileWriter(new java.io.File(dir, "_SUCCESS")).close()
+    val e = intercept[java.io.FileNotFoundException] {
+      Sinks.upsertParquet(Seq((1L, "a", 1)).toDF("k", "v", "ver"), p, Seq("k"), Seq(col("ver")))
+    }
+    assert(e.getMessage.contains("no parquet data file in") && e.getMessage.contains(p),
+      e.getMessage)
+    assert(dir.list().toSeq == Seq("_SUCCESS"), "the directory is left as it was")
+  }
+
+  test("upsertParquet over a stored table: no schema-inference job, the delta computed once") {
+    val p = tmp()
+    Sinks.upsertParquet(Seq((1L, 10L), (2L, 20L)).toDF("k", "total"), p, Seq("k"), Seq(col("total")))
+    // every source row the delta's lineage reads passes through `tap`
+    val reads = spark.sparkContext.longAccumulator("delta source rows")
+    val tap = udf { (k: Long) => reads.add(1); k }
+    val source = Seq((2L, 1L), (2L, 2L), (3L, 3L), (4L, 4L), (4L, 5L), (5L, 6L)).toDF("k", "x")
+    val delta = source.select(tap(col("k")).as("k"), col("x"))
+      .groupBy("k").agg(sum("x").as("total"))
+    val jobs = jobsSubmittedBy(Sinks.upsertParquet(delta, p, Seq("k"), Seq(col("total"))))
+    // AQE runs each shuffle-map stage as a job: the delta's groupBy shuffle,
+    // the merge window's shuffle over stored ∪ delta, then the write; no
+    // job reads the stored schema
+    assert(jobs == 3)
+    assert(reads.value == 6L, "each source row is read once")
+    val out = spark.read.parquet(p).orderBy("k").as[(Long, Long)].collect().toSeq
+    assert(out == Seq((1L, 10L), (2L, 3L), (3L, 3L), (4L, 9L), (5L, 6L)))
+  }
 }
