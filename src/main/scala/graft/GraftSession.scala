@@ -9,8 +9,10 @@ import org.apache.spark.sql.SparkSession
   * shared [[SparkSession]] configured once. Settings here are chosen for the
   * 100 TB design point and scale down to local mode:
   *
-  *  - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
-  *    and dynamic join selection replace any hand-tuned partition counts.
+  *  - AQE on (Spark's default, pinned by GraftSessionSpec with the runtime
+  *    bloom filter's): runtime coalescing of shuffle partitions, skew-join
+  *    splitting and dynamic join selection replace any hand-tuned
+  *    partition counts.
   *  - Broadcast threshold left at default (10 MB): dimension tables
   *    (region/nation/customer-like) broadcast automatically, mirroring the
   *    reference's driver-side dimension dict caches (load.py:56-57,66).
@@ -25,18 +27,7 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // Runtime bloom-filter pushdown: a selective fact-fact join builds a
-      // bloom filter from the filtered side and prunes the probe side's
-      // scan at the row-group level — the AQE-era replacement for manual
-      // pre-filter staging on 100 TB joins. (Creation thresholds are the
-      // defaults — 10 MB build side / 10 GB probe side — so it only kicks
-      // in where it pays; BloomFilterJoinSpec lowers them to assert the
-      // injected filter end-to-end.)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       // testdata events.ts is parquet TIMESTAMP(NANOS); read as long ns
       // and normalize in sources.Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

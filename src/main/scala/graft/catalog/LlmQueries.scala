@@ -44,11 +44,11 @@ object LlmQueries {
   }
 
   /** INVARIANT (Bench sweep contract): a cached index's plans must
-    * never depend on [[graft.operators.Materialize]] blocks —
-    * graft.Bench calls `Materialize.release` after every timed query,
-    * which drops exactly the RDDs `Materialize` created, so a
-    * cross-query cached object built over one would hit missing-block
-    * failures mid-board. The cached Index persists its own centroid/
+    * never depend on [[graft.operators.Materialize]] blocks, which are
+    * every local checkpoint the engine takes — graft.Bench calls
+    * `Materialize.release` after every timed query, which drops
+    * exactly the RDDs `Materialize` created, so a cross-query cached
+    * object built over one would hit missing-block failures mid-board. The cached Index persists its own centroid/
     * assignment Datasets via cache()/persist() (swept only at
     * application end), which `release` never touches. */
   private[graft] def cachedIvfIndex(s: SparkSession, d: String)(

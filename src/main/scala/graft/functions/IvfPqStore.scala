@@ -55,10 +55,6 @@ object IvfPqStore {
   private val CountsPrefix = "_graft_pq_counts"
   private val ResidualPrefix = "_graft_pq_residual"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Both layers present: the IVF store AND the codebook manifest. */
   def pqLayerExists(spark: SparkSession, store: String): Boolean =
     IvfStore.storeExists(spark, store) &&
@@ -213,9 +209,7 @@ object IvfPqStore {
     graft.sources.Manifest.clear(spark, store, "_graft_pq_meta")
     graft.sources.Manifest.clear(spark, store, CountsPrefix)
     graft.sources.Manifest.clear(spark, store, ResidualPrefix)
-    val cp = new org.apache.hadoop.fs.Path(codesPath(store))
-    val fs = fsOf(spark, store)
-    if (fs.exists(cp)) fs.delete(cp, true)
+    graft.sources.Manifest.deleteDirs(spark, Seq(codesPath(store)))
     IvfStore.build(vectors, vecCol, idCol, store, k, iterations,
       baseBatchId)
     val meta = IvfStore.readMeta(spark, store)
@@ -243,8 +237,9 @@ object IvfPqStore {
   def append(vectors: DataFrame, store: String, batchId: Long): Unit = {
     val spark = vectors.sparkSession
     require(pqLayerExists(spark, store), s"no IVF×PQ store at $store")
+    IvfStore.requireAppendId(batchId) // before any codes are written
     val meta = IvfStore.readMeta(spark, store)
-    if (meta.batches.contains(batchId) || meta.retired.contains(batchId))
+    if (meta.ledger.isReplay(batchId))
       return // completed replay (possibly folded away by a compaction)
     val cb = PqIndex.loadCodebooks(spark, store)
     val cents = IvfStore.centroidsDf(spark, store)
@@ -420,15 +415,7 @@ object IvfPqStore {
     // still-served index keeps metadata resolution) AND the new gen
     recordCounts(spark, store, meta.batches, Seq(gen))
     IvfStore.retrainCommit(spark, store, m2) // both layers flip here
-    val fs = fsOf(spark, store)
-    val root = new org.apache.hadoop.fs.Path(codesPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
+    graft.sources.Manifest.sweep(spark, Seq(codesPath(store)), gen)
   }
 
   /** Compact BOTH layers into one negative generation: codes fold
@@ -439,7 +426,7 @@ object IvfPqStore {
   def compactStore(spark: SparkSession, store: String): Unit = {
     require(pqLayerExists(spark, store), s"no IVF×PQ store at $store")
     val meta = IvfStore.readMeta(spark, store)
-    val gen = math.min(0L, meta.batches.min) - 1L
+    val gen = meta.ledger.compacted.visible.head
     val folded = spark.read.parquet(codesPath(store))
       .filter(col("ab").isin(meta.batches: _*))
       .select(col(meta.idCol), col(CodesCol), lit(gen).as("ab"),
@@ -449,14 +436,6 @@ object IvfPqStore {
       Seq("ab", "cluster"))
     recordCounts(spark, store, meta.batches, Seq(gen))
     IvfStore.compactStore(spark, store)
-    val fs = fsOf(spark, store)
-    val root = new org.apache.hadoop.fs.Path(codesPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
+    graft.sources.Manifest.sweep(spark, Seq(codesPath(store)), gen)
   }
 }

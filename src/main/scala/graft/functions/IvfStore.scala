@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Manifest
+
 /** PERSISTED incremental IVF vector index — the serving half
   * [[IvfIndex]] lacks: `IvfIndex.build` returns in-session frames, so
   * a 100 TB embedding corpus would have to re-cluster every session.
@@ -39,31 +41,23 @@ object IvfStore {
   private[graft] def vectorsPath(store: String) = store + "/vectors"
   private val MetaPrefix                 = "_graft_ivf_meta"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-
-  /** Manifest: pinned geometry + column names + visible batches +
-    * frozen centroids (cluster ids 1..k, the [[IvfIndex.build]]
-    * seeding convention). `retired` holds batch ids superseded by a
-    * compaction — tombstones that keep replayed appends recognizable
-    * as no-ops (the streaming-sink idempotency contract survives
-    * compaction) without making superseded `ab=` dirs visible to
-    * data reads. */
+  /** Manifest: pinned geometry + column names + the batch ledger
+    * ([[graft.sources.Manifest.Batches]]) + frozen centroids (cluster
+    * ids 1..k, the [[IvfIndex.build]] seeding convention). */
   private[graft] final case class Meta(k: Int, dim: Int, idCol: String,
-                                       vecCol: String, batches: Seq[Long],
-                                       cents: Array[Array[Double]],
-                                       retired: Seq[Long] = Nil)
+                                       vecCol: String,
+                                       ledger: Manifest.Batches,
+                                       cents: Array[Array[Double]]) {
+    def batches: Seq[Long] = ledger.visible
+    def retired: Seq[Long] = ledger.retired
+  }
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Manifest.exists(spark, store, MetaPrefix)
 
   private[graft] def readMeta(spark: SparkSession, store: String): Meta = {
     require(storeExists(spark, store), s"no persisted IVF index at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
+    val lines = Manifest.read(spark, store, MetaPrefix).trim.split("\n")
     val head = lines(0).trim.split("\\s+")
     val (k, dim) = (head(0).toInt, head(1).toInt)
     require(lines.length == 1 + k,
@@ -74,23 +68,19 @@ object IvfStore {
         s"corrupt IVF manifest at $store: centroid width ${row.length}, want $dim")
       row.map(b => java.lang.Double.longBitsToDouble(b.toLong))
     }
-    val ids = head.drop(4).toSeq
-    val (vis, ret) = ids.span(_ != "|")
-    Meta(k, dim, head(2), head(3), vis.map(_.toLong),
-      cents, ret.drop(1).map(_.toLong))
+    Meta(k, dim, head(2), head(3),
+      Manifest.Batches.parse(head.drop(4).mkString(" ")), cents)
   }
 
   private def writeMeta(spark: SparkSession, store: String, m: Meta): Unit = {
     val sb = new StringBuilder
-    sb.append(s"${m.k} ${m.dim} ${m.idCol} ${m.vecCol} " +
-      m.batches.mkString(" ") +
-      (if (m.retired.isEmpty) "" else " | " + m.retired.mkString(" ")))
+    sb.append(s"${m.k} ${m.dim} ${m.idCol} ${m.vecCol} " + m.ledger.line)
       .append("\n")
     m.cents.foreach { c =>
       sb.append(c.map(d => java.lang.Double.doubleToLongBits(d).toString)
         .mkString(" ")).append("\n")
     }
-    graft.sources.Manifest.write(spark, store, MetaPrefix, sb.toString)
+    Manifest.write(spark, store, MetaPrefix, sb.toString)
   }
 
   /** The frozen centroids as the (cluster_id, centroid) frame every
@@ -146,10 +136,8 @@ object IvfStore {
     Seq(idCol, vecCol).foreach(c => require(!c.exists(_.isWhitespace),
       s"column name '$c' must be whitespace-free (it rides the manifest)"))
     val spark = vectors.sparkSession
-    val fs = fsOf(spark, store)
-    graft.sources.Manifest.clear(spark, store, MetaPrefix)
-    if (fs.exists(hPath(vectorsPath(store))))
-      fs.delete(hPath(vectorsPath(store)), true)
+    Manifest.clear(spark, store, MetaPrefix)
+    Manifest.deleteDirs(spark, Seq(vectorsPath(store)))
     val idx = IvfIndex.build(vectors, vecCol, idCol, k, iterations)
     try {
       val cents = idx.centroids
@@ -163,8 +151,8 @@ object IvfStore {
       // ids are 1..k by construction — store positionally
       val byId = cents.toMap
       val kEff = cents.map(_._1).max.toInt
-      val m = Meta(kEff, dim, idCol, vecCol, Seq(baseBatchId),
-        Array.tabulate(kEff)(i => byId.getOrElse(i + 1L, Array.fill(dim)(0.0))))
+      val m = Meta(kEff, dim, idCol, vecCol,
+        Manifest.Batches.empty.add(baseBatchId), Array.tabulate(kEff)(i => byId.getOrElse(i + 1L, Array.fill(dim)(0.0))))
       writeBatch(vectors, m, store, baseBatchId)
       writeMeta(spark, store, m) // manifest LAST: now the store is visible
     } finally idx.close()
@@ -177,14 +165,17 @@ object IvfStore {
     * id disjointness across batches (the dedup-store contract). */
   def append(vectors: DataFrame, store: String, batchId: Long): Unit = {
     val spark = vectors.sparkSession
-    require(batchId > 0, s"batchId must be > 0, got $batchId (0 is the base" +
-      " build's manifest id, negative ids are compaction generations)")
+    requireAppendId(batchId)
     val m = readMeta(spark, store)
-    if (m.batches.contains(batchId) || m.retired.contains(batchId))
+    if (m.ledger.isReplay(batchId))
       return // completed replay (possibly folded away by a compaction)
     writeBatch(vectors, m, store, batchId)
-    writeMeta(spark, store, m.copy(batches = m.batches :+ batchId))
+    writeMeta(spark, store, m.copy(ledger = m.ledger.add(batchId)))
   }
+
+  private[functions] def requireAppendId(batchId: Long): Unit =
+    require(batchId > 0, s"batchId must be > 0, got $batchId (0 is the base" +
+      " build's manifest id, negative ids are compaction generations)")
 
   /** Every visible vector row: (cluster, <idCol>, <vecCol>). Manifested
     * batches only — orphans of a crashed append do not exist here. */
@@ -287,10 +278,9 @@ object IvfStore {
       s"retrain: cluster ids must be exactly 1..$kEff (contiguous, " +
         s"no gaps/dups), got ${cents.map(_._1).sorted.mkString(", ")}")
     val byId = cents.toMap
-    val gen = math.min(0L, m.batches.min) - 1L
-    val m2 = m.copy(k = kEff, batches = Seq(gen),
-      cents = Array.tabulate(kEff)(i => byId(i + 1L)),
-      retired = (m.retired ++ m.batches.filter(_ >= 0)).distinct)
+    val m2 = m.copy(k = kEff, ledger = m.ledger.compacted,
+      cents = Array.tabulate(kEff)(i => byId(i + 1L)))
+    val gen = m2.batches.head
     // re-assignment reads through the OLD manifest's visible batches
     // and writes under the new generation — invisible until the swap
     writeBatch(readVectors(spark, store).drop("cluster"), m2, store, gen)
@@ -302,16 +292,8 @@ object IvfStore {
     * dirs. */
   private[functions] def retrainCommit(spark: SparkSession, store: String,
                                        m2: Meta): Unit = {
-    val gen = m2.batches.head
     writeMeta(spark, store, m2)
-    val fs = fsOf(spark, store)
-    if (fs.exists(hPath(vectorsPath(store))))
-      fs.listStatus(hPath(vectorsPath(store))).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
+    Manifest.sweep(spark, Seq(vectorsPath(store)), m2.batches.head)
   }
 
   /** Fold every visible batch into ONE negative compaction generation —
@@ -322,22 +304,15 @@ object IvfStore {
     * and after — compaction moves bytes, not content. */
   def compactStore(spark: SparkSession, store: String): Unit = {
     val m = readMeta(spark, store)
-    val gen = math.min(0L, m.batches.min) - 1L
+    val next = m.ledger.compacted
+    val gen = next.visible.head
     val folded = spark.read.parquet(vectorsPath(store))
       .filter(col("ab").isin(m.batches: _*))
       .select(col(m.idCol), col(m.vecCol), lit(gen).as("ab"), col("cluster"))
       .repartition(col("cluster"))
     graft.sources.Sinks.overwritePartitions(folded, vectorsPath(store),
       Seq("ab", "cluster"))
-    writeMeta(spark, store, m.copy(batches = Seq(gen),
-      retired = (m.retired ++ m.batches.filter(_ >= 0)).distinct))
-    val fs = fsOf(spark, store)
-    if (fs.exists(hPath(vectorsPath(store))))
-      fs.listStatus(hPath(vectorsPath(store))).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
+    writeMeta(spark, store, m.copy(ledger = next))
+    Manifest.sweep(spark, Seq(vectorsPath(store)), gen)
   }
 }

@@ -17,13 +17,13 @@ import org.apache.spark.sql.functions._
   * inputs — the associativity discipline every oracle query in this
   * repo uses, which is precisely what makes partial merging exact.
   *
-  * Layout and crash contract are the [[Sketches]] protocol verbatim:
-  * `<store>/partials/ab=<batchId>/…`, versioned manifest
-  * ([[graft.sources.Manifest]]) pinning keys + value column + visible
-  * batches, manifest written LAST, batchId as the idempotency key
-  * (manifested id ⇒ completed replay ⇒ no-op), dynamic partition
-  * overwrite makes crashed-append orphans invisible and replay
-  * convergent. Single writer per store.
+  * Layout and crash contract are the [[graft.sources.PartialsStore]]
+  * skeleton over the [[graft.sources.Manifest]] ledger:
+  * `<store>/partials/ab=<batchId>/…`, versioned manifest pinning keys +
+  * value column + the batch ledger, manifest written LAST, batchId as
+  * the idempotency key (manifested id ⇒ completed replay ⇒ no-op),
+  * dynamic partition overwrite makes crashed-append orphans invisible
+  * and replay convergent. Single writer per store.
   *
   * Reference analog: the reference recomputes yearly aggregates by
   * re-querying the whole table after each load (load.py:71 upserts,
@@ -32,29 +32,15 @@ import org.apache.spark.sql.functions._
   */
 object AggStore {
 
-  private def partialsPath(store: String) = store + "/partials"
-  private val MetaPrefix                  = "_graft_agg_meta"
-
-  private[graft] case class AggMeta(keys: Seq[String], value: String,
-                                    batches: Seq[Long],
-                                    retired: Seq[Long] = Nil)
-
-  private[graft] def readMeta(spark: SparkSession, store: String): AggMeta = {
-    require(storeExists(spark, store), s"no aggregate store at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(
-      if (lines.length > 2) lines(2) else "")
-    AggMeta(lines(0).trim.split("\\s+").toSeq, lines(1).trim, vis, ret)
-  }
-
-  private def writeMeta(spark: SparkSession, store: String, m: AggMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
-      s"${m.keys.mkString(" ")}\n${m.value}\n" +
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired))
+  private val Store = new graft.sources.PartialsStore("aggregate store",
+    "_graft_agg_meta", "partials", "value",
+    "partials of different measures must not merge", pinFirst = false,
+    _ => Seq(sum(col("n")).as("n"),
+      sum(col("s")).cast("decimal(28,9)").as("s"),
+      min(col("vmin")).as("vmin"), max(col("vmax")).as("vmax")))
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Store.exists(spark, store)
 
   /** One batch's per-group partials: (keys…, n, s DECIMAL(28,9),
     * vmin, vmax) — map-side combined, one keyed shuffle. */
@@ -70,48 +56,17 @@ object AggStore {
   /** Append one ingest batch's partials; the [[Sketches.appendSketches]]
     * contract (idempotent replay, manifest-last, keys/value pinned). */
   def append(df: DataFrame, keys: Seq[String], valueCol: String,
-             store: String, batchId: Long): Unit = {
-    require(keys.nonEmpty, "keys must be non-empty")
-    val spark = df.sparkSession
-    val meta =
-      if (storeExists(spark, store)) {
-        val m = readMeta(spark, store)
-        require(m.keys == keys,
-          s"store $store is keyed by ${m.keys.mkString(", ")}, got ${keys.mkString(", ")}")
-        require(m.value == valueCol,
-          s"store $store aggregates '${m.value}', got '$valueCol' — " +
-            "partials of different measures must not merge")
-        m
-      } else AggMeta(keys, valueCol, Seq.empty)
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
-    // an empty batch writes nothing: on store creation a rows-less
-    // append would manifest an unreadable (schema-less) store, and
-    // later it only adds a skeleton dir (the SignatureStore guard)
-    if (df.isEmpty) return
-    graft.sources.Sinks.overwritePartitions(
-      partials(df, keys, valueCol).withColumn("ab", lit(batchId)),
-      partialsPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = meta.batches :+ batchId))
-  }
-
-  private def merged(spark: SparkSession, store: String): DataFrame = {
-    val meta = readMeta(spark, store)
-    spark.read.parquet(partialsPath(store))
-      .filter(col("ab").isin(meta.batches: _*))
-      .groupBy(meta.keys.map(col): _*)
-      .agg(sum(col("n")).as("n"),
-        sum(col("s")).cast("decimal(28,9)").as("s"),
-        min(col("vmin")).as("vmin"), max(col("vmax")).as("vmax"))
-  }
+             store: String, batchId: Long): Unit =
+    Store.append(df, keys, valueCol, store, batchId)(
+      partials(df, keys, valueCol))
 
   /** Exact per-group (n, total, mean, vmin, vmax) over EVERYTHING
     * ingested so far — O(groups × batches) partial rows read, zero raw
     * data touched. Identical to a one-pass aggregation of all batches'
     * rows (merging algebraic partials loses nothing). */
   def serve(spark: SparkSession, store: String): DataFrame = {
-    val meta = readMeta(spark, store)
-    merged(spark, store)
+    val meta = Store.readMeta(spark, store)
+    Store.merged(spark, store)
       .select(meta.keys.map(col) :+ col("n") :+
         round(col("s").cast("double"), 4).as("total") :+
         // mean divides as DOUBLE from the exact decimal total — decimal
@@ -122,30 +77,10 @@ object AggStore {
   }
 
   /** Fold all visible batches into ONE negative compaction generation
-    * ([[Sketches.compactStore]] protocol: manifest swap last,
+    * ([[graft.sources.Manifest]] ledger: manifest swap last,
     * superseded `ab=` dirs swept after). Merging is exact, so
     * [[serve]] is identical before and after; this bounds batch-dir
     * growth under streaming ingest. */
-  def compactStore(spark: SparkSession, store: String): Unit = {
-    val meta = readMeta(spark, store)
-    if (meta.batches.isEmpty) return
-    val gen = math.min(0L, meta.batches.min) - 1L
-    graft.sources.Sinks.overwritePartitions(
-      merged(spark, store).withColumn("ab", lit(gen)),
-      partialsPath(store), Seq("ab"))
-    // folded client ids become tombstones (generations, always < 0,
-    // need none — a replay can never arrive with a generation id)
-    writeMeta(spark, store, meta.copy(batches = Seq(gen),
-      retired = (meta.retired ++ meta.batches.filter(_ >= 0)).distinct))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(partialsPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
-  }
+  def compactStore(spark: SparkSession, store: String): Unit =
+    Store.compact(spark, store)
 }

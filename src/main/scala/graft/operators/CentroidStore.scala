@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.SquaredL2
+import graft.sources.Manifest
 
 /** Incremental centroid store — streaming serving for cluster
   * centroids: anchors (the assignment centroids) are FROZEN at
@@ -31,11 +32,12 @@ import graft.plans.SquaredL2
   * assignment bit-for-bit). Anchor components round to the 4-grid at
   * creation for the same reason.
   *
-  * Layout and crash contract are the [[AggStore]] protocol verbatim:
-  * `<store>/anchors` parquet + `<store>/partials/ab=<batchId>/…`,
-  * versioned manifest pinning dim + visible batches, manifest written
-  * LAST, batchId idempotency (manifested ⇒ replay no-op), dynamic
-  * partition overwrite makes crashed-append orphans invisible.
+  * Layout and crash contract are the [[graft.sources.Manifest]]
+  * ledger's, as in [[AggStore]]: `<store>/anchors` parquet +
+  * `<store>/partials/ab=<batchId>/…`, versioned manifest pinning dim +
+  * the batch ledger, manifest written LAST, batchId idempotency
+  * (manifested ⇒ replay no-op), dynamic partition overwrite makes
+  * crashed-append orphans invisible.
   * Partials are stored EXPLODED — (cluster_id, i, s, bn) — so k
   * clusters × dim dimensions × batches rows, never vector-typed
   * aggregation state. Single writer per store.
@@ -46,27 +48,25 @@ object CentroidStore {
   private def partialsPath(store: String) = store + "/partials"
   private val MetaPrefix                  = "_graft_centroid_meta"
 
-  private[graft] case class CentroidMeta(dim: Int, batches: Seq[Long],
-                                         retired: Seq[Long] = Nil)
+  private[graft] case class CentroidMeta(dim: Int,
+                                         ledger: Manifest.Batches) {
+    def batches: Seq[Long] = ledger.visible
+  }
 
   private[graft] def readMeta(spark: SparkSession,
                               store: String): CentroidMeta = {
     require(storeExists(spark, store), s"no centroid store at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(
-      if (lines.length > 1) lines(1) else "")
-    CentroidMeta(lines(0).trim.toInt, vis, ret)
+    val lines = Manifest.read(spark, store, MetaPrefix).trim.split("\n")
+    CentroidMeta(lines(0).trim.toInt,
+      Manifest.Batches.parse(if (lines.length > 1) lines(1) else ""))
   }
 
   private def writeMeta(spark: SparkSession, store: String,
                         m: CentroidMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
-      s"${m.dim}\n" +
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired))
+    Manifest.write(spark, store, MetaPrefix, s"${m.dim}\n" + m.ledger.line)
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Manifest.exists(spark, store, MetaPrefix)
 
   /** Create the store: pin the assignment anchors (k small rows
     * (cluster_id, centroid)) on the 4-grid. Anchors are immutable for
@@ -93,7 +93,8 @@ object CentroidStore {
       s"duplicate cluster_id ${dup.headOption.map(_.getLong(0))
         .getOrElse(-1L)} in anchors")
     anchors.write.mode("errorifexists").parquet(anchorsPath(store))
-    writeMeta(spark, store, CentroidMeta(dims(0).getInt(0), Seq.empty))
+    writeMeta(spark, store,
+      CentroidMeta(dims(0).getInt(0), Manifest.Batches.empty))
   }
 
   /** The pinned 4-grid anchors: (cluster_id, centroid). */
@@ -111,9 +112,9 @@ object CentroidStore {
              batchId: Long): Unit = {
     val spark = df.sparkSession
     val meta = readMeta(spark, store)
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
-    if (df.isEmpty) return                     // the AggStore guard
+    val ledger = meta.ledger.add(batchId)
+    if (meta.ledger.isReplay(batchId)) return // completed replay
+    if (df.isEmpty) return                    // the AggStore guard
     val vecs = df.filter(col(vecCol).isNotNull)
       .select(transform(col(vecCol), x => x.cast("double")).as("__v"))
       // assert_true inside the Filter is load-bearing — a pruned
@@ -139,7 +140,7 @@ object CentroidStore {
     graft.sources.Sinks.overwritePartitions(
       partials.withColumn("ab", lit(batchId)),
       partialsPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = meta.batches :+ batchId))
+    writeMeta(spark, store, meta.copy(ledger = ledger))
   }
 
   private def grid(spark: SparkSession, store: String): DataFrame = {
@@ -186,28 +187,19 @@ object CentroidStore {
           .as("centroid_norm"))
 
   /** Fold visible batches into one negative compaction generation
-    * (the [[AggStore.compactStore]] protocol: manifest swap last,
+    * (the [[graft.sources.Manifest]] ledger: manifest swap last,
     * superseded dirs swept). Merging is exact, so [[serve]] never
     * moves. */
   def compactStore(spark: SparkSession, store: String): Unit = {
     val meta = readMeta(spark, store)
     if (meta.batches.isEmpty) return
-    val gen = math.min(0L, meta.batches.min) - 1L
+    val next = meta.ledger.compacted
+    val gen = next.visible.head
     graft.sources.Sinks.overwritePartitions(
       grid(spark, store).withColumnRenamed("n", "bn")
         .withColumn("ab", lit(gen)),
       partialsPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = Seq(gen),
-      retired = (meta.retired ++ meta.batches.filter(_ >= 0)).distinct))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(partialsPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(st.getPath, true)
-      }
+    writeMeta(spark, store, meta.copy(ledger = next))
+    Manifest.sweep(spark, Seq(partialsPath(store)), gen)
   }
 }

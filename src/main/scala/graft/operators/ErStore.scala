@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Manifest
+
 /** Persisted incremental ENTITY REGISTRY — the store twin of the
   * end-to-end ER pipeline (q273): new record batches fuzzy-link
   * against the persisted corpus through [[JwJoin]]'s bounded
@@ -81,32 +83,25 @@ object ErStore {
   private def keysPath(store: String)     = store + "/keys"
   private def entitiesPath(store: String) = store + "/entities"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private[graft] final case class Meta(threshold: Double, maxLen: Int,
                                        d: Int, numBuckets: Int,
                                        idCol: String, nameCol: String,
                                        blockCols: Seq[String],
-                                       batches: Seq[Long],
-                                       retired: Seq[Long])
+                                       ledger: Manifest.Batches) {
+    def batches: Seq[Long] = ledger.visible
+  }
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Manifest.exists(spark, store, MetaPrefix)
 
   private[graft] def readMeta(spark: SparkSession, store: String): Meta = {
     require(storeExists(spark, store), s"no entity registry at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
+    val lines = Manifest.read(spark, store, MetaPrefix).trim.split("\n")
     val h = lines(0).trim.split("\\s+")
     val nBlock = h(6).toInt
-    val ids = lines(1).trim.split("\\s+").filter(_.nonEmpty).toSeq
-    val (vis, ret) = ids.span(_ != "|")
     Meta(java.lang.Double.longBitsToDouble(h(0).toLong), h(1).toInt,
       h(2).toInt, h(3).toInt, h(4), h(5),
-      h.slice(7, 7 + nBlock).toSeq,
-      vis.map(_.toLong), ret.drop(1).map(_.toLong))
+      h.slice(7, 7 + nBlock).toSeq, Manifest.Batches.parse(lines(1)))
   }
 
   private def writeMeta(spark: SparkSession, store: String, m: Meta): Unit = {
@@ -114,10 +109,8 @@ object ErStore {
     sb.append(s"${java.lang.Double.doubleToLongBits(m.threshold)} " +
       s"${m.maxLen} ${m.d} ${m.numBuckets} ${m.idCol} ${m.nameCol} " +
       s"${m.blockCols.length} ${m.blockCols.mkString(" ")}").append("\n")
-    sb.append(m.batches.mkString(" ") +
-      (if (m.retired.isEmpty) "" else " | " + m.retired.mkString(" ")))
-      .append("\n")
-    graft.sources.Manifest.write(spark, store, MetaPrefix, sb.toString)
+    sb.append(m.ledger.line).append("\n")
+    Manifest.write(spark, store, MetaPrefix, sb.toString)
   }
 
   /** Prep a record frame against the pinned geometry: JwJoin's
@@ -198,7 +191,7 @@ object ErStore {
         "the threshold or lower maxLen (high-threshold short-string " +
         "linkage is the registry's domain).")
     val m = Meta(threshold, maxLen, d, numBuckets, idCol, nameCol,
-      blockCols, Seq(baseBatchId), Nil)
+      blockCols, Manifest.Batches.empty.add(baseBatchId))
     val p = Materialize(prepped(df, m))
     val keys = keyed(p, m)
     val edges = JwJoin.gateJw(
@@ -225,13 +218,13 @@ object ErStore {
     require(batchId > 0, s"batchId must be > 0, got $batchId (0 is the " +
       "base build's manifest id, negative ids are compaction generations)")
     val m = readMeta(spark, store)
-    if (m.batches.contains(batchId) || m.retired.contains(batchId))
+    if (m.ledger.isReplay(batchId))
       return // completed replay (possibly folded away by a compaction)
     // entities() folds label deltas latest-ab-wins, so append order must
     // match id order: a fresh batch with an id BELOW an applied one would
     // write labels that lose the fold to stale higher-ab rows. The
     // streaming sink's batchId+1 keys satisfy this by construction.
-    val applied = m.batches ++ m.retired
+    val applied = m.batches ++ m.ledger.retired
     require(applied.forall(_ < batchId),
       s"batchId must exceed every applied batch id (max ${applied.max}), " +
         s"got $batchId — label deltas fold latest-id-wins, so appends " +
@@ -269,7 +262,7 @@ object ErStore {
     writeLayer(keys, keysPath(store), batchId, Seq("bucket"))
     writeLayer(newLabels.select(col("id").as("__id"),
       col("component").as("entity")), entitiesPath(store), batchId)
-    writeMeta(spark, store, m.copy(batches = m.batches :+ batchId))
+    writeMeta(spark, store, m.copy(ledger = m.ledger.add(batchId)))
   }
 
   /** The registry: (idCol, entity) — latest-ab-wins fold over the
@@ -290,7 +283,8 @@ object ErStore {
     * compaction discipline — readable at every crash point). */
   def compact(spark: SparkSession, store: String): Unit = {
     val m = readMeta(spark, store)
-    val gen = math.min(0L, m.batches.min) - 1L
+    val next = m.ledger.compacted
+    val gen = next.visible.head
     val recs = storedRecords(spark, store, m)
     graft.sources.Sinks.overwritePartitions(
       recs.withColumn("ab", lit(gen)), recordsPath(store), Seq("ab"))
@@ -304,19 +298,8 @@ object ErStore {
       .select(col(m.idCol).as("__id"), col("entity"), lit(gen).as("ab"))
     graft.sources.Sinks.overwritePartitions(ents, entitiesPath(store),
       Seq("ab"))
-    writeMeta(spark, store, m.copy(batches = Seq(gen),
-      retired = (m.retired ++ m.batches.filter(_ >= 0)).distinct))
-    val fs = fsOf(spark, store)
-    for (layer <- Seq(recordsPath(store), keysPath(store),
-        entitiesPath(store))) {
-      val root = new org.apache.hadoop.fs.Path(layer)
-      if (fs.exists(root))
-        fs.listStatus(root).foreach { s =>
-          val name = s.getPath.getName
-          if (s.isDirectory && name.startsWith("ab=") &&
-              name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-            fs.delete(s.getPath, true)
-        }
-    }
+    writeMeta(spark, store, m.copy(ledger = next))
+    Manifest.sweep(spark,
+      Seq(recordsPath(store), keysPath(store), entitiesPath(store)), gen)
   }
 }

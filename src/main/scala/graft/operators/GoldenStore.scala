@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Manifest
+
 /** Incremental golden-record store — [[Merge.goldenRecord]]'s streaming
   * twin, closing the last batch-only step in the ER serving path
   * ([[ErStore]] labels entities incrementally; survivorship should not
@@ -30,13 +32,13 @@ import org.apache.spark.sql.functions._
   * spec-pinned identical to [[Merge.goldenRecord]] over the union of
   * all appended batches.
   *
-  * Layout and crash contract are the [[AggStore]] protocol verbatim:
-  * `<store>/partials/ab=<id>` + `<store>/modal_<col>/ab=<id>`,
-  * versioned manifest pinning entity column + strategy spec + visible
-  * batches, manifest written LAST, batchId as the idempotency key
-  * (manifested id ⇒ completed replay ⇒ no-op), dynamic partition
-  * overwrite makes crashed-append orphans invisible and replay
-  * convergent. Single writer per store. */
+  * Layout and crash contract are the [[graft.sources.Manifest]]
+  * ledger's, as in [[AggStore]]: `<store>/partials/ab=<id>` +
+  * `<store>/modal_<col>/ab=<id>`, versioned manifest pinning entity
+  * column + strategy spec + the batch ledger, manifest written LAST,
+  * batchId as the idempotency key (manifested id ⇒ completed replay ⇒
+  * no-op), dynamic partition overwrite makes crashed-append orphans
+  * invisible and replay convergent. Single writer per store. */
 object GoldenStore {
 
   private def partialsPath(store: String) = store + "/partials"
@@ -50,17 +52,14 @@ object GoldenStore {
                                        maxOf: Seq[String],
                                        latestOrd: Option[String],
                                        latestCols: Seq[String],
-                                       batches: Seq[Long],
                                        // DataType.json per mostFrequent
                                        // column — lets serve type an
                                        // all-null modal column whose
                                        // delta dir was never created
-                                       modalTypes: Seq[String] = Nil,
-                                       // tombstones: client batch ids
-                                       // folded away by compactStore —
-                                       // replay stays a no-op (the
-                                       // IvfStore convention)
-                                       retired: Seq[Long] = Nil)
+                                       modalTypes: Seq[String],
+                                       ledger: Manifest.Batches) {
+    def batches: Seq[Long] = ledger.visible
+  }
 
   private def fmt(xs: Seq[String]) = xs.mkString(" ")
   private def parse(s: String): Seq[String] =
@@ -69,37 +68,24 @@ object GoldenStore {
   private[graft] def readMeta(spark: SparkSession,
                               store: String): GoldenMeta = {
     require(storeExists(spark, store), s"no golden store at $store")
-    val ls = graft.sources.Manifest.read(spark, store, MetaPrefix)
+    val ls = Manifest.read(spark, store, MetaPrefix)
       .split("\n", -1).map(_.trim)
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(ls(7))
     GoldenMeta(ls(0), parse(ls(1)), parse(ls(2)), parse(ls(3)),
       parse(ls(4)), parse(ls(5)).headOption, parse(ls(6)),
-      vis,
       if (ls.length > 8 && ls(8).nonEmpty) ls(8).split("\t").toSeq
       else Nil,
-      ret)
+      Manifest.Batches.parse(ls(7)))
   }
 
   private def writeMeta(spark: SparkSession, store: String,
                         m: GoldenMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
+    Manifest.write(spark, store, MetaPrefix,
       Seq(m.entity, fmt(m.mostFrequent), fmt(m.longest), fmt(m.minOf),
         fmt(m.maxOf), m.latestOrd.getOrElse(""), fmt(m.latestCols),
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired),
-        m.modalTypes.mkString("\t")).mkString("\n"))
-
-  /** True when `dir` holds at least one `ab=` batch partition — an
-    * all-empty-batches overwrite leaves only a _SUCCESS skeleton,
-    * which parquet cannot infer a schema from. */
-  private def hasBatchDirs(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(s =>
-      s.isDirectory && s.getPath.getName.startsWith("ab="))
-  }
+        m.ledger.line, m.modalTypes.mkString("\t")).mkString("\n"))
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Manifest.exists(spark, store, MetaPrefix)
 
   /** One batch's per-entity algebraic partials (`__n` presence count +
     * one tie-folded struct/extreme per strategy column) — map-side
@@ -140,18 +126,18 @@ object GoldenStore {
       mostFrequent.map(c => df.schema(c).dataType.json)
     val asked = GoldenMeta(entityCol, mostFrequent, longest, minOf,
       maxOf, latestBy.map(_._1), latestBy.map(_._2).getOrElse(Nil),
-      Seq.empty, modalTypes)
+      modalTypes, Manifest.Batches.empty)
     val meta =
       if (storeExists(spark, store)) {
         val m = readMeta(spark, store)
-        require(m.copy(batches = Seq.empty, retired = Seq.empty) == asked,
+        require(m.copy(ledger = Manifest.Batches.empty) == asked,
           s"store $store survivorship spec differs from this append's — " +
             "partials of different specs (or drifted modal column " +
             "types) must not merge")
         m
       } else asked
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
+    val ledger = meta.ledger.add(batchId)
+    if (meta.ledger.isReplay(batchId)) return // completed replay
     // an empty batch writes nothing: on store creation a rows-less
     // append would manifest an unreadable (schema-less) store, and
     // later it only adds a skeleton dir (the SignatureStore guard)
@@ -167,7 +153,7 @@ object GoldenStore {
         counts.withColumn("ab", lit(batchId)),
         modalPath(store, c), Seq("ab"))
     }
-    writeMeta(spark, store, meta.copy(batches = meta.batches :+ batchId))
+    writeMeta(spark, store, meta.copy(ledger = ledger))
   }
 
   private def mergedPartials(spark: SparkSession, store: String,
@@ -201,7 +187,7 @@ object GoldenStore {
     m.mostFrequent.zipWithIndex.foldLeft(base) { case (acc, (c, i)) =>
       // a column null in EVERY batch never wrote a delta dir — the
       // golden value is null everywhere, typed from the manifest
-      if (!hasBatchDirs(spark, modalPath(store, c)))
+      if (!Manifest.hasBatchDirs(spark, modalPath(store, c)))
         acc.withColumn(c, lit(null).cast(
           org.apache.spark.sql.types.DataType.fromJson(m.modalTypes(i))))
       else {
@@ -220,18 +206,20 @@ object GoldenStore {
   }
 
   /** Fold all visible batches into ONE negative compaction generation
-    * ([[AggStore.compactStore]] protocol: manifest swap last,
+    * ([[graft.sources.Manifest]] ledger: manifest swap last,
     * superseded `ab=` dirs swept after). Merging is exact, so
     * [[serve]] is identical before and after; this bounds batch-dir
     * growth under streaming ingest. */
   def compactStore(spark: SparkSession, store: String): Unit = {
     val m = readMeta(spark, store)
     if (m.batches.isEmpty) return
-    val gen = math.min(0L, m.batches.min) - 1L
+    val next = m.ledger.compacted
+    val gen = next.visible.head
     graft.sources.Sinks.overwritePartitions(
       mergedPartials(spark, store, m).withColumn("ab", lit(gen)),
       partialsPath(store), Seq("ab"))
-    m.mostFrequent.filter(c => hasBatchDirs(spark, modalPath(store, c)))
+    m.mostFrequent
+      .filter(c => Manifest.hasBatchDirs(spark, modalPath(store, c)))
       .foreach { c =>
         graft.sources.Sinks.overwritePartitions(
           spark.read.parquet(modalPath(store, c))
@@ -241,20 +229,8 @@ object GoldenStore {
             .withColumn("ab", lit(gen)),
           modalPath(store, c), Seq("ab"))
       }
-    writeMeta(spark, store, m.copy(batches = Seq(gen),
-      retired = (m.retired ++ m.batches.filter(_ >= 0)).distinct))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (partialsPath(store) +: m.mostFrequent.map(modalPath(store, _)))
-      .foreach { dir =>
-        val root = new org.apache.hadoop.fs.Path(dir)
-        if (fs.exists(root))
-          fs.listStatus(root).foreach { s =>
-            val name = s.getPath.getName
-            if (s.isDirectory && name.startsWith("ab=") &&
-                name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-              fs.delete(s.getPath, true)
-          }
-      }
+    writeMeta(spark, store, m.copy(ledger = next))
+    Manifest.sweep(spark,
+      partialsPath(store) +: m.mostFrequent.map(modalPath(store, _)), gen)
   }
 }

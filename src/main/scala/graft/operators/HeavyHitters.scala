@@ -17,37 +17,25 @@ import graft.plans.FreqSketch
   * (the exact regime the oracle exercises) — and merge without losing
   * those bounds.
   *
-  * Layout + crash contract: identical to [[Quantiles]]/[[Sketches]]
-  * (`ab=` batch partitions, versioned `_graft_freq_meta.<n>` manifest
-  * pinning maxMapSize + keys written LAST, replay-idempotent appends,
+  * Layout + crash contract: the [[graft.sources.PartialsStore]]
+  * skeleton it shares with [[Quantiles]]/[[Sketches]] (`ab=` batch
+  * partitions, versioned `_graft_freq_meta.<n>` manifest pinning
+  * maxMapSize + keys written LAST, replay-idempotent appends,
   * invisible orphans, negative compaction generations).
   */
 object HeavyHitters {
 
-  private def sketchesPath(store: String) = store + "/sketches"
-  private val MetaPrefix                  = "_graft_freq_meta"
+  private val Store = new graft.sources.PartialsStore("heavy-hitters store",
+    "_graft_freq_meta", "sketches", "maxMapSize",
+    "mixed map sizes shift the error bound, refuse instead",
+    pinFirst = true,
+    size => Seq(FreqSketch.merge(col("freq"), size.toInt).as("freq")))
 
-  private[graft] case class FreqMeta(maxMapSize: Int, keys: Seq[String],
-                                     batches: Seq[Long],
-                                     retired: Seq[Long] = Nil)
-
-  private[graft] def readMeta(spark: SparkSession, store: String): FreqMeta = {
-    require(storeExists(spark, store), s"no heavy-hitters store at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
-    val head = lines(0).trim.split("\\s+")
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(
-      if (lines.length > 2) lines(2) else "")
-    FreqMeta(head(0).toInt, lines(1).trim.split("\\s+").toSeq, vis, ret)
-  }
-
-  private def writeMeta(spark: SparkSession, store: String, m: FreqMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
-      s"${m.maxMapSize}\n${m.keys.mkString(" ")}\n" +
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired))
+  private[graft] def readMeta(spark: SparkSession, store: String) =
+    Store.readMeta(spark, store)
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Store.exists(spark, store)
 
   /** Per-group frequent-items sketch of `itemCol` — one-pass batch
     * form (map-side combined). */
@@ -61,39 +49,13 @@ object HeavyHitters {
     * no-op, single writer). */
   def appendSketches(df: DataFrame, keys: Seq[String], itemCol: String,
                      store: String, batchId: Long,
-                     maxMapSize: Int = FreqSketch.DefaultMaxMapSize): Unit = {
-    require(keys.nonEmpty, "keys must be non-empty")
-    val spark = df.sparkSession
-    val meta =
-      if (storeExists(spark, store)) {
-        val m = readMeta(spark, store)
-        require(m.keys == keys,
-          s"store $store is keyed by ${m.keys.mkString(", ")}, got ${keys.mkString(", ")}")
-        require(m.maxMapSize == maxMapSize,
-          s"store $store pins maxMapSize=${m.maxMapSize}, got $maxMapSize — " +
-            "mixed map sizes shift the error bound, refuse instead")
-        m
-      } else FreqMeta(maxMapSize, keys, Seq.empty)
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
-    // an empty batch writes nothing: on store creation a rows-less
-    // append would manifest an unreadable (schema-less) store, and
-    // later it only adds a skeleton dir (the SignatureStore guard)
-    if (df.isEmpty) return
-    graft.sources.Sinks.overwritePartitions(
-      freqSketches(df, keys, itemCol, maxMapSize).withColumn("ab", lit(batchId)),
-      sketchesPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = meta.batches :+ batchId))
-  }
+                     maxMapSize: Int = FreqSketch.DefaultMaxMapSize): Unit =
+    Store.append(df, keys, maxMapSize.toString, store, batchId)(
+      freqSketches(df, keys, itemCol, maxMapSize))
 
   /** Per-group merged sketches over the manifested batches. */
-  def mergedSketches(spark: SparkSession, store: String): DataFrame = {
-    val meta = readMeta(spark, store)
-    spark.read.parquet(sketchesPath(store))
-      .filter(col("ab").isin(meta.batches: _*))
-      .groupBy(meta.keys.map(col): _*)
-      .agg(FreqSketch.merge(col("freq"), meta.maxMapSize).as("freq"))
-  }
+  def mergedSketches(spark: SparkSession, store: String): DataFrame =
+    Store.merged(spark, store)
 
   /** Top-k heavy hitters per group over EVERYTHING ingested so far,
     * one output row per (group, rank): (keys…, rank 1-based, item,
@@ -116,23 +78,6 @@ object HeavyHitters {
     * protocol). Misra-Gries merge is deterministic, so answers are
     * identical before and after whenever the merged sketch is — and in
     * the exact regime (no purges) they are exact either way. */
-  def compactStore(spark: SparkSession, store: String): Unit = {
-    val meta = readMeta(spark, store)
-    if (meta.batches.isEmpty) return
-    val gen = math.min(0L, meta.batches.min) - 1L
-    val folded = mergedSketches(spark, store).withColumn("ab", lit(gen))
-    graft.sources.Sinks.overwritePartitions(folded, sketchesPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = Seq(gen),
-      retired = (meta.retired ++ meta.batches.filter(_ >= 0)).distinct))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(sketchesPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
-  }
+  def compactStore(spark: SparkSession, store: String): Unit =
+    Store.compact(spark, store)
 }

@@ -17,40 +17,25 @@ import graft.plans.KllSketch
   * cost — and `n`/`min`/`max` ride in the image EXACTLY, whatever the
   * compaction did to the retained items.
   *
-  * Layout (shared store contract — [[Sketches]]/[[TextIndex]]/
-  * [[SignatureStore]]): `<store>/sketches/ab=<batchId>/…` parquet rows
-  * (group keys…, kll binary); `<store>/_graft_kll_meta.<n>` versioned
-  * manifest pinning `k` (mixed-k merges silently adopt the weaker
-  * guarantee, so the store refuses them) and the visible batch list.
-  * Manifest written LAST; replay by batchId idempotent; orphans of a
-  * crashed append invisible; dynamic partition overwrite convergent.
+  * Layout (the [[graft.sources.PartialsStore]] skeleton it shares with
+  * [[Sketches]], [[HeavyHitters]] and [[AggStore]]):
+  * `<store>/sketches/ab=<batchId>/…` parquet rows (group keys…, kll
+  * binary); `<store>/_graft_kll_meta.<n>` versioned manifest pinning
+  * `k` (mixed-k merges silently adopt the weaker guarantee, so the
+  * store refuses them) and the batch ledger. Manifest written LAST;
+  * replay by batchId idempotent; orphans of a crashed append
+  * invisible; dynamic partition overwrite convergent.
   */
 object Quantiles {
 
-  private def sketchesPath(store: String) = store + "/sketches"
-  private val MetaPrefix                  = "_graft_kll_meta"
-
-  private[graft] case class KllMeta(k: Int, keys: Seq[String],
-                                    batches: Seq[Long],
-                                    retired: Seq[Long] = Nil)
-
-  private[graft] def readMeta(spark: SparkSession, store: String): KllMeta = {
-    require(storeExists(spark, store), s"no quantile store at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
-    val head = lines(0).trim.split("\\s+")
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(
-      if (lines.length > 2) lines(2) else "")
-    KllMeta(head(0).toInt, lines(1).trim.split("\\s+").toSeq, vis, ret)
-  }
-
-  private def writeMeta(spark: SparkSession, store: String, m: KllMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
-      s"${m.k}\n${m.keys.mkString(" ")}\n" +
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired))
+  private val Store = new graft.sources.PartialsStore("quantile store",
+    "_graft_kll_meta", "sketches", "k",
+    "mixed-k merges adopt the weaker error bound, refuse instead",
+    pinFirst = true,
+    k => Seq(KllSketch.merge(col("kll"), k.toInt).as("kll")))
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Store.exists(spark, store)
 
   /** Per-group KLL sketch of `valueCol` — the one-pass batch form
     * (map-side combined; serialization only at shuffle boundaries). */
@@ -65,40 +50,14 @@ object Quantiles {
     * replay, no-op). Single writer per store. */
   def appendSketches(df: DataFrame, keys: Seq[String], valueCol: String,
                      store: String, batchId: Long,
-                     k: Int = KllSketch.DefaultK): Unit = {
-    require(keys.nonEmpty, "keys must be non-empty")
-    val spark = df.sparkSession
-    val meta =
-      if (storeExists(spark, store)) {
-        val m = readMeta(spark, store)
-        require(m.keys == keys,
-          s"store $store is keyed by ${m.keys.mkString(", ")}, got ${keys.mkString(", ")}")
-        require(m.k == k,
-          s"store $store pins k=${m.k}, got $k — mixed-k merges adopt the " +
-            "weaker error bound, refuse instead")
-        m
-      } else KllMeta(k, keys, Seq.empty)
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
-    // an empty batch writes nothing: on store creation a rows-less
-    // append would manifest an unreadable (schema-less) store, and
-    // later it only adds a skeleton dir (the SignatureStore guard)
-    if (df.isEmpty) return
-    graft.sources.Sinks.overwritePartitions(
-      kllSketches(df, keys, valueCol, k).withColumn("ab", lit(batchId)),
-      sketchesPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = meta.batches :+ batchId))
-  }
+                     k: Int = KllSketch.DefaultK): Unit =
+    Store.append(df, keys, k.toString, store, batchId)(
+      kllSketches(df, keys, valueCol, k))
 
   /** Per-group merged sketches over the manifested batches:
     * (keys…, kll). */
-  def mergedSketches(spark: SparkSession, store: String): DataFrame = {
-    val meta = readMeta(spark, store)
-    spark.read.parquet(sketchesPath(store))
-      .filter(col("ab").isin(meta.batches: _*))
-      .groupBy(meta.keys.map(col): _*)
-      .agg(graft.plans.KllSketch.merge(col("kll"), meta.k).as("kll"))
-  }
+  def mergedSketches(spark: SparkSession, store: String): DataFrame =
+    Store.merged(spark, store)
 
   /** Quantiles at `ranks` per group over EVERYTHING ingested so far,
     * plus the exact stream facts the image carries: (keys…, n, min_v,
@@ -106,7 +65,7 @@ object Quantiles {
     * zero raw data touched. */
   def groupQuantiles(spark: SparkSession, store: String,
                      ranks: Seq[Double]): DataFrame = {
-    val meta = readMeta(spark, store)
+    val meta = Store.readMeta(spark, store)
     mergedSketches(spark, store)
       .withColumn("__st", graft.plans.KllSketch.stats(col("kll")))
       .select(meta.keys.map(col) ++ Seq(
@@ -116,32 +75,15 @@ object Quantiles {
   }
 
   /** Fold all manifested batches into ONE negative compaction
-    * generation (the shared store protocol: appends positive, base 0,
-    * generations negative; manifest swap LAST; superseded dirs swept
-    * after). In exact mode (every group's total n <= k) the fold is
-    * lossless and [[groupQuantiles]] answers are bit-identical before
-    * and after; over capacity, KLL compaction is RANDOMIZED (an
-    * unbiased coin per compaction — the library's variance-control
-    * design), so the folded image is a fresh unbiased draw within the
-    * same rank-error bound, not a byte-identical one. n/min/max are
-    * exact either way. */
-  def compactStore(spark: SparkSession, store: String): Unit = {
-    val meta = readMeta(spark, store)
-    if (meta.batches.isEmpty) return
-    val gen = math.min(0L, meta.batches.min) - 1L
-    val folded = mergedSketches(spark, store).withColumn("ab", lit(gen))
-    graft.sources.Sinks.overwritePartitions(folded, sketchesPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = Seq(gen),
-      retired = (meta.retired ++ meta.batches.filter(_ >= 0)).distinct))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(sketchesPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
-  }
+    * generation (the [[graft.sources.Manifest]] ledger: appends
+    * non-negative, generations negative; manifest swap LAST;
+    * superseded dirs swept after). In exact mode (every group's total
+    * n <= k) the fold is lossless and [[groupQuantiles]] answers are
+    * bit-identical before and after; over capacity, KLL compaction is
+    * RANDOMIZED (an unbiased coin per compaction — the library's
+    * variance-control design), so the folded image is a fresh unbiased
+    * draw within the same rank-error bound, not a byte-identical one.
+    * n/min/max are exact either way. */
+  def compactStore(spark: SparkSession, store: String): Unit =
+    Store.compact(spark, store)
 }

@@ -21,39 +21,25 @@ import org.apache.spark.sql.functions._
   *
   * Layout: `<store>/sketches/ab=<batchId>/…` parquet rows
   * (group keys…, hll binary), one partition dir per ingest batch;
-  * `<store>/_graft_hll_meta.<n>` versioned manifest
-  * ([[graft.sources.Manifest]] swap protocol) pinning `lgK` (sketches
-  * of different lgK must not merge blind) and the visible batch list —
-  * the [[TextIndex]] crash contract: manifest written LAST, orphans of
-  * a crashed append invisible, replay by batchId idempotent, dynamic
-  * partition overwrite convergent.
+  * `<store>/_graft_hll_meta.<n>` versioned manifest pinning `lgK`
+  * (sketches of different lgK must not merge blind) and the batch
+  * ledger — the [[graft.sources.PartialsStore]] skeleton and crash
+  * contract: manifest written LAST, orphans of a crashed append
+  * invisible, replay by batchId idempotent, dynamic partition overwrite
+  * convergent.
   */
 object Sketches {
 
-  private def sketchesPath(store: String) = store + "/sketches"
-  private val MetaPrefix                  = "_graft_hll_meta"
+  private val Store = new graft.sources.PartialsStore("sketch store",
+    "_graft_hll_meta", "sketches", "lgK",
+    "sketches of different precision must not merge", pinFirst = true,
+    _ => Seq(hll_union_agg(col("hll")).as("hll")))
 
-  private[graft] case class HllMeta(lgK: Int, keys: Seq[String],
-                                    batches: Seq[Long],
-                                    retired: Seq[Long] = Nil)
-
-  private[graft] def readMeta(spark: SparkSession, store: String): HllMeta = {
-    require(storeExists(spark, store), s"no sketch store at $store")
-    val lines = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\n")
-    val head = lines(0).trim.split("\\s+")
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(
-      if (lines.length > 2) lines(2) else "")
-    HllMeta(head(0).toInt, lines(1).trim.split("\\s+").toSeq, vis, ret)
-  }
-
-  private def writeMeta(spark: SparkSession, store: String, m: HllMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
-      s"${m.lgK}\n${m.keys.mkString(" ")}\n" +
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired))
+  private[graft] def readMeta(spark: SparkSession, store: String) =
+    Store.readMeta(spark, store)
 
   def storeExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Store.exists(spark, store)
 
   /** Per-group HLL sketch of `valueCol` — the one-pass batch form
     * (map-side combined, bytes per group). */
@@ -72,40 +58,14 @@ object Sketches {
     * invisible and get dynamically overwritten on replay. Single
     * writer per store. */
   def appendSketches(df: DataFrame, keys: Seq[String], valueCol: String,
-                     store: String, batchId: Long, lgK: Int = 12): Unit = {
-    require(keys.nonEmpty, "keys must be non-empty")
-    val spark = df.sparkSession
-    val meta =
-      if (storeExists(spark, store)) {
-        val m = readMeta(spark, store)
-        require(m.keys == keys,
-          s"store $store is keyed by ${m.keys.mkString(", ")}, got ${keys.mkString(", ")}")
-        require(m.lgK == lgK,
-          s"store $store pins lgK=${m.lgK}, got $lgK — sketches of different " +
-            "precision must not merge")
-        m
-      } else HllMeta(lgK, keys, Seq.empty)
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
-    // an empty batch writes nothing: on store creation a rows-less
-    // append would manifest an unreadable (schema-less) store, and
-    // later it only adds a skeleton dir (the SignatureStore guard)
-    if (df.isEmpty) return
-    graft.sources.Sinks.overwritePartitions(
-      hllSketches(df, keys, valueCol, lgK).withColumn("ab", lit(batchId)),
-      sketchesPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = meta.batches :+ batchId))
-  }
+                     store: String, batchId: Long, lgK: Int = 12): Unit =
+    Store.append(df, keys, lgK.toString, store, batchId)(
+      hllSketches(df, keys, valueCol, lgK))
 
   /** Per-group sketches of the manifested batches, merged:
     * (keys…, hll). */
-  def mergedSketches(spark: SparkSession, store: String): DataFrame = {
-    val meta = readMeta(spark, store)
-    spark.read.parquet(sketchesPath(store))
-      .filter(col("ab").isin(meta.batches: _*))
-      .groupBy(meta.keys.map(col): _*)
-      .agg(hll_union_agg(col("hll")).as("hll"))
-  }
+  def mergedSketches(spark: SparkSession, store: String): DataFrame =
+    Store.merged(spark, store)
 
   /** Distinct-count estimates per group over EVERYTHING ingested so
     * far: O(groups × batches) sketch rows read, zero raw data
@@ -118,36 +78,14 @@ object Sketches {
   }
 
   /** Fold all manifested batches into ONE negative compaction
-    * generation (the [[TextIndex.compactIndex]] protocol: appends are
-    * positive, generations negative; manifest swap LAST via the
-    * versioned-marker protocol, superseded `ab=` dirs swept after).
-    * Sketch union is exact, so [[distinctCounts]] is identical before
-    * and after — this bounds batch-dir/file growth under streaming
-    * ingest, shrinking the query-time merge from O(batches) rows per
-    * group to one. */
-  def compactStore(spark: SparkSession, store: String): Unit = {
-    val meta = readMeta(spark, store)
-    if (meta.batches.isEmpty) return
-    val gen = math.min(0L, meta.batches.min) - 1L
-    val folded = spark.read.parquet(sketchesPath(store))
-      .filter(col("ab").isin(meta.batches: _*))
-      .groupBy(meta.keys.map(col): _*)
-      .agg(hll_union_agg(col("hll")).as("hll"))
-      .withColumn("ab", lit(gen))
-    graft.sources.Sinks.overwritePartitions(folded, sketchesPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = Seq(gen),
-      retired = (meta.retired ++ meta.batches.filter(_ >= 0)).distinct))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(sketchesPath(store))
-    if (fs.exists(root))
-      fs.listStatus(root).foreach { s =>
-        val name = s.getPath.getName
-        if (s.isDirectory && name.startsWith("ab=") &&
-            name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-          fs.delete(s.getPath, true)
-      }
-  }
+    * generation (the [[graft.sources.Manifest]] ledger: appends are
+    * non-negative, generations negative; manifest swap LAST,
+    * superseded `ab=` dirs swept after). Sketch union is exact, so
+    * [[distinctCounts]] is identical before and after — this bounds
+    * batch-dir/file growth under streaming ingest, shrinking the
+    * query-time merge from O(batches) rows per group to one. */
+  def compactStore(spark: SparkSession, store: String): Unit =
+    Store.compact(spark, store)
 
   /** Count-min bucket for hash row `j` — the 52-bit md5 uniform's
     * integer form mod `width` (the one hash every engine here shares),

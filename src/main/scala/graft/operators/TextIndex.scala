@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.sources.Manifest
 
 /** Lexical retrieval over a document corpus: postings, BM25 scoring, and
   * reciprocal-rank fusion with a dense ranking — the sparse half of a
@@ -128,12 +129,6 @@ object TextIndex {
   private def lensPath(store: String)     = store + "/lens"
   private val MetaPrefix                  = "_graft_index_meta"
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-
   /** xxhash64 (Spark's builtin, seed 42) of a term, evaluated driver-side
     * so the read path computes the SAME bucket the write path's
     * `pmod(xxhash64(token), n)` column produced. */
@@ -150,19 +145,18 @@ object TextIndex {
     (((tokenHash(term) % numBuckets) + numBuckets) % numBuckets).toInt
 
   private[graft] case class IndexMeta(numBuckets: Int, nDocs: Long,
-                                      sumDl: Long, batches: Seq[Long],
-                                      retired: Seq[Long] = Nil)
+                                      sumDl: Long, ledger: Manifest.Batches) {
+    def batches: Seq[Long] = ledger.visible
+  }
 
   /** The HIGHEST-version manifest (the [[graft.sources.Manifest]]
     * versioned-swap protocol — more than one version can momentarily
     * exist after a crash; highest wins). */
   private[graft] def readMeta(spark: SparkSession, store: String): IndexMeta = {
     require(indexExists(spark, store), s"no persisted index at $store")
-    val parts = graft.sources.Manifest.read(spark, store, MetaPrefix)
-      .trim.split("\\s+")
-    val (vis, ret) = graft.sources.Manifest.parseBatchLine(
-      parts.drop(3).mkString(" "))
-    IndexMeta(parts(0).toInt, parts(1).toLong, parts(2).toLong, vis, ret)
+    val parts = Manifest.read(spark, store, MetaPrefix).trim.split("\\s+")
+    IndexMeta(parts(0).toInt, parts(1).toLong, parts(2).toLong,
+      Manifest.Batches.parse(parts.drop(3).mkString(" ")))
   }
 
   /** The marker is the index MANIFEST: bucket modulus, exact corpus
@@ -174,15 +168,14 @@ object TextIndex {
     * one manifest (the r7 delete-then-rename zero-manifest window is
     * closed by construction). */
   private def writeMeta(spark: SparkSession, store: String, m: IndexMeta): Unit =
-    graft.sources.Manifest.write(spark, store, MetaPrefix,
-      s"${m.numBuckets} ${m.nDocs} ${m.sumDl} " +
-        graft.sources.Manifest.fmtBatchLine(m.batches, m.retired))
+    Manifest.write(spark, store, MetaPrefix,
+      s"${m.numBuckets} ${m.nDocs} ${m.sumDl} " + m.ledger.line)
 
   /** True once a meta marker is durable. The marker is written LAST on
     * [[persistPostings]]: a crash mid-write leaves the index invisible
     * (the SignatureStore crash-safety contract). */
   def indexExists(spark: SparkSession, store: String): Boolean =
-    graft.sources.Manifest.exists(spark, store, MetaPrefix)
+    Manifest.exists(spark, store, MetaPrefix)
 
   /** Build and persist the inverted index of `docs` at `store`:
     *
@@ -217,13 +210,11 @@ object TextIndex {
     require(baseBatchId >= 0, s"baseBatchId must be >= 0, got $baseBatchId" +
       " (negative ids are compaction generations)")
     val spark = docs.sparkSession
-    val fs = fsOf(spark, store)
-    graft.sources.Manifest.clear(spark, store, MetaPrefix)
-    Seq(postingsPath(store), lensPath(store)).foreach { d =>
-      if (fs.exists(hPath(d))) fs.delete(hPath(d), true)
-    }
+    Manifest.clear(spark, store, MetaPrefix)
+    Manifest.deleteDirs(spark, Seq(postingsPath(store), lensPath(store)))
     val (nDocs, sumDl) = writeBatch(docs, idCol, textCol, store, numBuckets, baseBatchId)
-    writeMeta(spark, store, IndexMeta(numBuckets, nDocs, sumDl, Seq(baseBatchId)))
+    writeMeta(spark, store, IndexMeta(numBuckets, nDocs, sumDl,
+      Manifest.Batches.empty.add(baseBatchId)))
   }
 
   /** One batch's postings + lens land under `ab=<batchId>` via DYNAMIC
@@ -272,12 +263,11 @@ object TextIndex {
     require(indexExists(spark, store),
       s"no persisted index at $store — build one with persistPostings first")
     val meta = readMeta(spark, store)
-    if (meta.batches.contains(batchId) ||
-        meta.retired.contains(batchId)) return // completed replay
+    if (meta.ledger.isReplay(batchId)) return // completed replay
     val (nDocs, sumDl) =
       writeBatch(docs, idCol, textCol, store, meta.numBuckets, batchId)
     writeMeta(spark, store, meta.copy(nDocs = meta.nDocs + nDocs,
-      sumDl = meta.sumDl + sumDl, batches = meta.batches :+ batchId))
+      sumDl = meta.sumDl + sumDl, ledger = meta.ledger.add(batchId)))
   }
 
   /** Fold every visible batch into ONE compaction generation — the
@@ -306,7 +296,8 @@ object TextIndex {
   def compactIndex(spark: SparkSession, store: String): Unit = {
     require(indexExists(spark, store), s"no persisted index at $store")
     val meta = readMeta(spark, store)
-    val gen = math.min(0L, meta.batches.min) - 1L
+    val next = meta.ledger.compacted
+    val gen = next.visible.head
     val post = spark.read.parquet(postingsPath(store))
       .filter(col("ab").isin(meta.batches: _*))
       .select(col("token"), col("doc_id"), col("tf"), col("positions"),
@@ -318,18 +309,8 @@ object TextIndex {
       .select(col("doc_id"), col("dl"), lit(gen).as("ab"))
       .repartition(8)
     graft.sources.Sinks.overwritePartitions(lens, lensPath(store), Seq("ab"))
-    writeMeta(spark, store, meta.copy(batches = Seq(gen),
-      retired = (meta.retired ++ meta.batches.filter(_ >= 0)).distinct))
-    val fs = fsOf(spark, store)
-    Seq(postingsPath(store), lensPath(store)).foreach { root =>
-      if (fs.exists(hPath(root)))
-        fs.listStatus(hPath(root)).foreach { s =>
-          val name = s.getPath.getName
-          if (s.isDirectory && name.startsWith("ab=") &&
-              name.stripPrefix("ab=").toLongOption.exists(_ != gen))
-            fs.delete(s.getPath, true)
-        }
-    }
+    writeMeta(spark, store, meta.copy(ledger = next))
+    Manifest.sweep(spark, Seq(postingsPath(store), lensPath(store)), gen)
   }
 
   /** Postings rows of `terms` only — `tb` is a partition column, so the

@@ -2,15 +2,27 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** VERSIONED single-file manifest for persistent stores — the crash-safe
-  * visibility protocol shared by the inverted index
-  * ([[graft.operators.TextIndex]]) and the HLL sketch store
-  * ([[graft.operators.Sketches]]): the manifest is the LAST write of
+/** VERSIONED single-file manifest for persistent stores, and the batch
+  * ledger it carries. It serves the ten incremental stores:
+  * [[graft.operators.Sketches]], [[graft.operators.Quantiles]],
+  * [[graft.operators.HeavyHitters]] and [[graft.operators.AggStore]]
+  * (through [[PartialsStore]]), [[graft.operators.CentroidStore]],
+  * [[graft.operators.GoldenStore]], [[graft.operators.ErStore]],
+  * [[graft.operators.TextIndex]], [[graft.functions.IvfStore]] and
+  * [[graft.functions.IvfPqStore]].
+  *
+  * The crash-safe visibility protocol: the manifest is the LAST write of
   * every ingest path (data without a manifest entry is invisible and
   * replay-convergent), and a swap writes version n+1 BEFORE deleting n,
   * so there is never an instant with zero visible manifests — readers
   * pick the highest version, and a crash between the two steps just
   * leaves a stale lower version for the next swap to sweep.
+  *
+  * The ledger rules ([[Batches]], [[sweep]]): client batch ids are
+  * non-negative, compaction generations negative; a compaction folds
+  * every visible batch into the next generation, retires the folded
+  * client ids as tombstones, swaps the manifest, and sweeps the
+  * superseded `ab=` partition dirs last.
   */
 private[graft] object Manifest {
 
@@ -71,22 +83,91 @@ private[graft] object Manifest {
     versions(fs, dir, prefix).foreach { case (_, p) => fs.delete(p, false) }
   }
 
-  /** One manifest line holding the VISIBLE batch ids plus the RETIRED
-    * tombstones ("v1 v2 | r1 r2" — the [[graft.functions.IvfStore]]
-    * convention): `retired` keeps batch ids superseded by a compaction
-    * recognizable as completed replays, so a micro-batch replayed after
-    * its partials were folded into a compaction generation stays a
-    * no-op instead of double-counting (the streaming-sink idempotency
-    * contract must survive [[compactStore]]). Old manifests without the
-    * separator parse as (ids, empty). */
-  def fmtBatchLine(batches: Seq[Long], retired: Seq[Long]): String =
-    batches.mkString(" ") +
-      (if (retired.isEmpty) "" else " | " + retired.mkString(" "))
+  /** Delete the data directories `dirs` recursively — a rebuild-in-place
+    * drops its layers after clearing the manifest that made them
+    * visible. */
+  def deleteDirs(spark: SparkSession, dirs: Seq[String]): Unit =
+    dirs.map(hPath).foreach { d =>
+      val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(d)) fs.delete(d, true)
+    }
 
-  /** Inverse of [[fmtBatchLine]]: (visible, retired). */
-  def parseBatchLine(line: String): (Seq[Long], Seq[Long]) = {
-    val toks = line.trim.split("\\s+").toSeq.filter(_.nonEmpty)
-    val (vis, rest) = toks.span(_ != "|")
-    (vis.map(_.toLong), rest.drop(1).map(_.toLong))
+  /** A store's batch ledger: the VISIBLE batch ids and the RETIRED
+    * tombstones. Client appends carry ids >= 0 (a Spark micro-batch id
+    * as is, or a base build's 0); compaction generations are < 0.
+    * `retired` keeps client ids a compaction folded away recognizable as
+    * completed replays, so a micro-batch replayed after its data was
+    * folded stays a no-op instead of double-counting (the streaming-sink
+    * idempotency contract survives compaction). */
+  final case class Batches(visible: Seq[Long], retired: Seq[Long] = Nil) {
+
+    /** `id` was applied already: visible, or folded into a generation. */
+    def isReplay(id: Long): Boolean =
+      visible.contains(id) || retired.contains(id)
+
+    /** The ledger after a client append of `id`. A negative id would
+      * collide with a compaction generation, so it is refused. */
+    def add(id: Long): Batches = {
+      require(id >= 0, s"batchId must be >= 0, got $id (negative ids " +
+        "are compaction generations)")
+      copy(visible = visible :+ id)
+    }
+
+    /** The ledger after folding every visible batch into the next
+      * generation, `min(0, min visible) - 1`: that generation is the one
+      * visible batch, and the folded client ids join the tombstones
+      * (generations need none — a replay never carries one). */
+    def compacted: Batches =
+      Batches(Seq((0L +: visible).min - 1L),
+        (retired ++ visible.filter(_ >= 0)).distinct)
+
+    /** The manifest line: "v1 v2 | r1 r2", or "v1 v2" with no
+      * tombstones. */
+    def line: String =
+      visible.mkString(" ") +
+        (if (retired.isEmpty) "" else " | " + retired.mkString(" "))
   }
+
+  object Batches {
+    val empty: Batches = Batches(Nil)
+
+    /** Inverse of [[Batches.line]]. Old manifests without the separator
+      * parse as (ids, no tombstones). */
+    def parse(line: String): Batches = {
+      val toks = line.trim.split("\\s+").toSeq.filter(_.nonEmpty)
+      val (vis, rest) = toks.span(_ != "|")
+      Batches(vis.map(_.toLong), rest.drop(1).map(_.toLong))
+    }
+  }
+
+  /** The `ab=<id>` batch partition dirs directly under `dir`. */
+  private def batchDirs(spark: SparkSession,
+                        dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val fs = fsOf(spark, dir)
+    val root = hPath(dir)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("ab="))
+  }
+
+  /** True when `dir` holds at least one `ab=` batch partition — an
+    * all-empty-batches overwrite leaves only a _SUCCESS skeleton, which
+    * parquet cannot infer a schema from. */
+  def hasBatchDirs(spark: SparkSession, dir: String): Boolean =
+    batchDirs(spark, dir).nonEmpty
+
+  /** The last, best-effort step of a compaction, after the manifest swap
+    * made generation `keep` the only visible batch: delete every numeric
+    * `ab=<id>` dir under `roots` except `ab=<keep>`. Files and
+    * non-numeric names stay. A crash here leaves unreachable orphans for
+    * the next compaction. */
+  def sweep(spark: SparkSession, roots: Seq[String], keep: Long): Unit =
+    roots.foreach { root =>
+      val fs = fsOf(spark, root)
+      batchDirs(spark, root).foreach { s =>
+        if (s.getPath.getName.stripPrefix("ab=").toLongOption
+            .exists(_ != keep))
+          fs.delete(s.getPath, true)
+      }
+    }
 }

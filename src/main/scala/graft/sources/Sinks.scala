@@ -99,10 +99,12 @@ object Sinks {
     val tmp = new org.apache.hadoop.fs.Path(path + "__graft_tmp")
     val old = new org.apache.hadoop.fs.Path(path + "__graft_old")
     recoverInterruptedSwap(fs, dst, tmp, old)
+    // the first write stores the key columns first too, the order every
+    // later merge writes, so a table's column order never changes
     val merged =
       if (fs.exists(dst))
         graft.operators.Merge.upsert(storedTable(spark, fs, dst), updates, keys, tiebreak)
-      else updates
+      else updates.select((keys ++ updates.columns.filterNot(keys.contains)).map(col): _*)
     // write via temp dir then swap: parquet sinks can't read-and-overwrite
     // the same path in one job
     merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)

@@ -133,4 +133,89 @@ class StoreReplaySpec extends SparkSpec {
       "replayed batch must not double nDocs/sumDl")
     assert(rows(TextIndex.bm25FromIndex(spark, store, Seq("spark"))) == before)
   }
+
+  test("AggStore: a negative batch id is rejected before anything is " +
+    "written, on a fresh store and on a compacted one") {
+    val store = tmp("aggnegative")
+    val hot = Seq(("a", 99.0)).toDF("g", "v")
+    // a fresh store: -1 would later fold into generation -2 untombstoned
+    intercept[IllegalArgumentException] {
+      AggStore.append(hot, Seq("g"), "v", store, -1L)
+    }
+    assert(!AggStore.storeExists(spark, store))
+    // Spark's first micro-batch id, 0, stays a valid client id
+    AggStore.append(Seq(("a", 1.0)).toDF("g", "v"), Seq("g"), "v", store, 0L)
+    AggStore.append(Seq(("b", 2.0)).toDF("g", "v"), Seq("g"), "v", store, 1L)
+    AggStore.compactStore(spark, store)
+    val compacted = rows(AggStore.serve(spark, store))
+    // the live generation is -1: a client -1 is neither a replay nor data
+    intercept[IllegalArgumentException] {
+      AggStore.append(hot, Seq("g"), "v", store, -1L)
+    }
+    assert(rows(AggStore.serve(spark, store)) == compacted)
+    assert(new java.io.File(store + "/partials").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSeq == Seq("ab=-1"))
+  }
+
+  test("HLL / KLL / Misra-Gries / golden / centroid stores reject a " +
+    "negative batch id on a compacted store instead of skipping it") {
+    val g = Seq(("a", 1), ("a", 2)).toDF("g", "v")
+    val hll = tmp("hllnegative")
+    Sketches.appendSketches(g, Seq("g"), "v", hll, 0L)
+    Sketches.compactStore(spark, hll)
+    intercept[IllegalArgumentException] {
+      Sketches.appendSketches(Seq(("a", 7)).toDF("g", "v"),
+        Seq("g"), "v", hll, -1L)
+    }
+    val kll = tmp("kllnegative")
+    Quantiles.appendSketches(g, Seq("g"), "v", kll, 0L)
+    Quantiles.compactStore(spark, kll)
+    intercept[IllegalArgumentException] {
+      Quantiles.appendSketches(g, Seq("g"), "v", kll, -1L)
+    }
+    val freq = tmp("freqnegative")
+    HeavyHitters.appendSketches(g, Seq("g"), "v", freq, 0L)
+    HeavyHitters.compactStore(spark, freq)
+    intercept[IllegalArgumentException] {
+      HeavyHitters.appendSketches(g, Seq("g"), "v", freq, -1L)
+    }
+    val golden = tmp("goldennegative")
+    val votes = Seq((1L, "x")).toDF("id", "status")
+    GoldenStore.append(votes, "id", golden, 0L, mostFrequent = Seq("status"))
+    GoldenStore.compactStore(spark, golden)
+    intercept[IllegalArgumentException] {
+      GoldenStore.append(votes, "id", golden, -1L,
+        mostFrequent = Seq("status"))
+    }
+    val cent = tmp("centroidnegative")
+    CentroidStore.create(Seq((0L, Seq(0.0, 0.0))).toDF("cluster_id",
+      "centroid"), cent)
+    intercept[IllegalArgumentException] {
+      CentroidStore.append(Seq(Tuple1(Seq(1.0, 1.0))).toDF("vec"),
+        "vec", cent, -1L)
+    }
+    assert(CentroidStore.readMeta(spark, cent).batches.isEmpty)
+    // the folded id 0 stays a completed replay everywhere
+    Sketches.appendSketches(Seq(("a", 7)).toDF("g", "v"),
+      Seq("g"), "v", hll, 0L)
+    assert(rows(Sketches.distinctCounts(spark, hll)) == Set("[a,2]"))
+  }
+
+  test("IvfPqStore: a negative batch id is refused before any codes " +
+    "are written, on a fresh store and on a compacted one") {
+    import graft.functions.IvfPqStore
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val store = tmp("ivfpqnegative")
+    IvfPqStore.build(emb.filter($"vec_id" < 300), "embedding", "vec_id",
+      store, k = 4, m = 8, ksub = 16)
+    def codeDirs = new java.io.File(store + "/codes").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    val batch = emb.filter($"vec_id" >= 300 && $"vec_id" < 320)
+    intercept[IllegalArgumentException](IvfPqStore.append(batch, store, -1L))
+    assert(codeDirs == Set("ab=0"))
+    IvfPqStore.compactStore(spark, store)
+    // the live generation is -1 now: not a replay, not a client id
+    intercept[IllegalArgumentException](IvfPqStore.append(batch, store, -1L))
+    assert(codeDirs == Set("ab=-1"))
+  }
 }

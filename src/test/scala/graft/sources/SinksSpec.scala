@@ -43,6 +43,18 @@ class SinksSpec extends SparkSpec {
     assert(!new java.io.File(p + "__graft_old").exists())
   }
 
+  test("upsertParquet stores the key columns first from the first write on") {
+    val p = tmp()
+    Sinks.upsertParquet(Seq(("a", 1L, 1), ("b", 2L, 1)).toDF("v", "k", "ver"),
+      p, Seq("k"), Seq(col("ver")))
+    assert(spark.read.parquet(p).columns.toSeq == Seq("k", "v", "ver"))
+    Sinks.upsertParquet(Seq(("B2", 2L, 2)).toDF("v", "k", "ver"),
+      p, Seq("k"), Seq(col("ver")))
+    assert(spark.read.parquet(p).columns.toSeq == Seq("k", "v", "ver"))
+    assert(spark.read.parquet(p).orderBy("k").as[(Long, String, Int)]
+      .collect().toSeq == Seq((1L, "a", 1), (2L, "B2", 2)))
+  }
+
   test("upsertJdbc round-trips with Merge.upsert conflict semantics (embedded Derby)") {
     val dbDir = java.nio.file.Files.createTempDirectory("derby").toString
     val url = s"jdbc:derby:$dbDir/db;create=true"
