@@ -381,23 +381,23 @@ object VectorFunctions {
     * dies, e.g. token-token co-occurrence with d = vocab); each
     * iteration is one j-keyed join against the d-row vector, one i-keyed
     * sum, one 1-row norm broadcast. Per-iteration lineage truncation as
-    * the Graph loops (`reliable` = durable checkpoints). A zero matrix
+    * the Graph loops (durable once the session has a checkpoint
+    * directory). A zero matrix
     * fixes at the zero vector rather than dividing by zero. */
-  def powerIteration(cov: DataFrame, iterations: Int = 10,
-                     reliable: Boolean = false): DataFrame = {
+  def powerIteration(cov: DataFrame, iterations: Int = 10): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // eager: the lazy form measured a wash here (r18 dead ends)
     val dec9 = (c: Column) => round(c, 9).cast("decimal(28,9)")
     val m = Materialize(cov.select(col("i"), col("j"), col("cov")).union(
       cov.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("cov"))),
-      eager = true, reliable = reliable)
+      eager = true)
     val dims = m.select(col("i").as("dim")).distinct()
     val d = dims.count()
     require(d > 0, "powerIteration needs a non-empty matrix")
     var v = Materialize(dims.select(col("dim"),
       round(lit(1.0) / sqrt(lit(d.toDouble)), 9).as("__v")),
-      eager = true, reliable = reliable)
+      eager = true)
     for (_ <- 1 to iterations) {
       val y = m.join(v, m("j") === v("dim"))
         .groupBy(m("i").as("ydim"))
@@ -410,7 +410,7 @@ object VectorFunctions {
             round(col("__y").cast("double") /
               sqrt(col("__n2").cast("double")), 9))
             .otherwise(lit(0.0)).as("__v")),
-        eager = true, reliable = reliable)
+        eager = true)
     }
     v.select(col("dim"), round(col("__v"), 6).as("loading"))
   }

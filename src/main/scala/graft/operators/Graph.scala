@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * here is LAZY (r18): the round's own convergence action or the next
   * round's first job materializes it, so an eager checkpoint's
   * dedicated job per round was pure scheduling overhead at toy scale
-  * and a redundant extra pass at cluster scale. `reliable = true`
-  * passes through to [[Materialize]] (checkpoint-dir-backed truncation
-  * that survives executor loss).
+  * and a redundant extra pass at cluster scale. Whether a truncation
+  * is local or durable is [[Materialize]]'s call: durable once the
+  * session has a checkpoint directory.
   */
 object Graph {
 
@@ -82,26 +82,24 @@ object Graph {
     * Nodes of `nodes` (optional, column `idCol`) that appear in no edge
     * come back as singleton components of themselves — callers pass the
     * full corpus so isolated documents aren't dropped from the output.
-    */
-  /** `reliable = true` switches the per-round lineage truncation from
+    *
+    * Per-round lineage truncation ([[Materialize]]) goes to
     * executor-local blocks (fast, but on a real cluster a lost executor
-    * makes the truncated lineage unrecoverable mid-loop) to the
-    * session's checkpoint directory (replicated/distributed storage
-    * survives node loss — the production path for long CC runs).
-    * Requires `sparkContext.setCheckpointDir` to have been called; set
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` to reap
-    * superseded round files. */
+    * makes the truncated lineage unrecoverable mid-loop) unless the
+    * session has a checkpoint directory, in which case every round is
+    * written there and survives node loss — the production path for
+    * long runs; set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+    * to reap superseded round files. */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
                           dstCol: String = "dst",
                           nodes: Option[(DataFrame, String)] = None,
-                          maxIter: Int = 25,
-                          reliable: Boolean = false): DataFrame = {
+                          maxIter: Int = 25): DataFrame = {
     // the convergence fingerprint is a full scan, so letting IT
     // materialize the lazy checkpoint folds two actions (checkpoint job +
     // fingerprint job) into one pass per round
     var e = Materialize(canonical(edges.select(
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))),
-      reliable = reliable)
+        col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))))
     var sig = fingerprint(e)
     var converged = sig.head == 0L
     var iter = 0
@@ -123,10 +121,10 @@ object Graph {
       // scheduled job's cost at every scale tried). Convergence is
       // checked every TWO rounds: worst case one redundant fixpoint
       // round, paid once.
-      val half1 = Materialize(largeStar(e).distinct(), reliable = reliable)
-      val next1 = Materialize(smallStar(half1).distinct(), reliable = reliable)
-      val half2 = Materialize(largeStar(next1).distinct(), reliable = reliable)
-      val next = Materialize(smallStar(half2).distinct(), reliable = reliable)
+      val half1 = Materialize(largeStar(e).distinct())
+      val next1 = Materialize(smallStar(half1).distinct())
+      val half2 = Materialize(largeStar(next1).distinct())
+      val next = Materialize(smallStar(half2).distinct())
       val nextSig = fingerprint(next)
       converged = nextSig == sig
       e = next
@@ -177,8 +175,7 @@ object Graph {
     * dst-keyed sum shuffle, one left join back to the node set —
     * O(edges) work, O(log-free) fixed rounds. `localCheckpoint` per
     * iteration truncates lineage exactly as [[connectedComponents]]
-    * does (and with the same executor-loss caveat; pass
-    * `reliable = true` for checkpoint-dir-backed truncation).
+    * does (local unless the session has a checkpoint directory).
     *
     * Returns (id, pagerank) for every node (edge endpoints ∪ optional
     * `nodes`). Ranks sum to ~1 (grid rounding leaves ~1e-9·N slack). */
@@ -186,7 +183,6 @@ object Graph {
                dstCol: String = "dst", iterations: Int = 10,
                damping: Double = 0.85,
                nodes: Option[(DataFrame, String)] = None,
-               reliable: Boolean = false,
                weightCol: Option[String] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping >= 0.0 && damping <= 1.0,
@@ -209,11 +205,10 @@ object Graph {
       nodes.fold(fromEdges) { case (df, c) =>
         fromEdges.union(df.select(col(c).cast("long").as("id")))
       }.distinct()
-    }, reliable = reliable)
+    })
     val n = nodeIds.count().toDouble
     val outdeg = Materialize(
-      e.groupBy("src").agg(sum(col("__w")).cast("double").as("__deg")),
-      reliable = reliable)
+      e.groupBy("src").agg(sum(col("__w")).cast("double").as("__deg")))
     val dec9 = (c: org.apache.spark.sql.Column) =>
       round(c, 9).cast("decimal(28,9)")
     var ranks = nodeIds.select(col("id"),
@@ -235,8 +230,7 @@ object Graph {
           .select(col("id"),
             round(lit(1.0 - damping) / lit(n) + lit(damping) *
               (coalesce(col("__in").cast("double"), lit(0.0)) +
-                col("__dang").cast("double") / lit(n)), 9).as("pagerank")),
-        reliable = reliable)
+                col("__dang").cast("double") / lit(n)), 9).as("pagerank")))
     }
     ranks
   }
@@ -267,8 +261,7 @@ object Graph {
                            srcCol: String = "src", dstCol: String = "dst",
                            seedCol: String = "id", iterations: Int = 10,
                            damping: Double = 0.85,
-                           nodes: Option[(DataFrame, String)] = None,
-                           reliable: Boolean = false): DataFrame = {
+                           nodes: Option[(DataFrame, String)] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping >= 0.0 && damping <= 1.0,
       s"damping must be in [0,1], got $damping")
@@ -280,10 +273,10 @@ object Graph {
       nodes.fold(fromEdges) { case (df, c) =>
         fromEdges.union(df.select(col(c).cast("long").as("id")))
       }.distinct()
-    }, reliable = reliable)
+    })
     val seedIds = Materialize(
       seeds.select(col(seedCol).cast("long").as("id")).distinct()
-        .join(nodeIds, Seq("id"), "left_semi"), reliable = reliable)
+        .join(nodeIds, Seq("id"), "left_semi"))
     val sCount = seedIds.count()
     require(sCount >= 1,
       "personalizedPageRank needs at least one seed present in the graph")
@@ -292,11 +285,9 @@ object Graph {
           seedIds.select(col("id"),
             round(lit(1.0) / lit(sCount.toDouble), 9).as("__tele")),
           Seq("id"), "left")
-        .select(col("id"), coalesce(col("__tele"), lit(0.0)).as("__tele")),
-      reliable = reliable)
+        .select(col("id"), coalesce(col("__tele"), lit(0.0)).as("__tele")))
     val outdeg = Materialize(
-      e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg")),
-      reliable = reliable)
+      e.groupBy("src").agg(count(lit(1)).cast("double").as("__deg")))
     val dec9 = (c: org.apache.spark.sql.Column) =>
       round(c, 9).cast("decimal(28,9)")
     var ranks = tele.select(col("id"), col("__tele").as("pagerank"))
@@ -317,7 +308,7 @@ object Graph {
             round(lit(1.0 - damping) * col("__tele") + lit(damping) *
               (coalesce(col("__in").cast("double"), lit(0.0)) +
                 col("__dang").cast("double") * col("__tele")), 9)
-              .as("pagerank")), reliable = reliable)
+              .as("pagerank")))
     }
     ranks
   }
@@ -402,8 +393,7 @@ object Graph {
   def incrementalComponents(components: DataFrame, newEdges: DataFrame,
                             srcCol: String = "src", dstCol: String = "dst",
                             newNodes: Option[(DataFrame, String)] = None,
-                            maxIter: Int = 25,
-                            reliable: Boolean = false): DataFrame = {
+                            maxIter: Int = 25): DataFrame = {
     val starEdges = components
       .select(col("component").cast("long").as("src"), col("id").cast("long").as("dst"))
     val newE = newEdges.select(
@@ -420,7 +410,7 @@ object Graph {
       })
     connectedComponents(starEdges.union(newE), "src", "dst",
       nodes = Some((allNodes, "id")),
-      maxIter = maxIter, reliable = reliable)
+      maxIter = maxIter)
   }
 
   /** Single-source (or multi-source) shortest hop distances — BFS over a
@@ -437,21 +427,19 @@ object Graph {
     * nodes, never the full visited set) against the edge list, anti-joins
     * out already-visited nodes, and stops early when the frontier
     * empties. Work per round is O(frontier out-edges); total O(edges
-    * within the horizon). Per-round `localCheckpoint` (or reliable
-    * `checkpoint`) truncates lineage exactly as [[connectedComponents]];
+    * within the horizon). Per-round [[Materialize]] truncates lineage
+    * exactly as [[connectedComponents]];
     * the empty-frontier test rides the checkpoint's materialization
     * (one action per round). Self-loops and duplicate edges are
     * harmless: a revisited node is anti-joined away. */
   def hopDistances(edges: DataFrame, sources: DataFrame,
                    srcCol: String = "src", dstCol: String = "dst",
-                   sourceCol: String = "id", maxHops: Int = 20,
-                   reliable: Boolean = false): DataFrame = {
+                   sourceCol: String = "id", maxHops: Int = 20): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     var frontier = Materialize(
-      sources.select(col(sourceCol).cast("long").as("id")).distinct(),
-      reliable = reliable)
+      sources.select(col(sourceCol).cast("long").as("id")).distinct())
     var dist = frontier.select(col("id"), lit(0L).as("dist"))
     var hop = 0
     var frontierEmpty = frontier.limit(1).isEmpty
@@ -460,7 +448,7 @@ object Graph {
       val next = Materialize(
         frontier.join(e, frontier("id") === e("src"))
           .select(col("dst").as("id")).distinct()
-          .join(dist, Seq("id"), "left_anti"), reliable = reliable)
+          .join(dist, Seq("id"), "left_anti"))
       frontierEmpty = next.limit(1).isEmpty
       if (!frontierEmpty) {
         // the visited set re-materializes per level — the Pregel
@@ -470,8 +458,7 @@ object Graph {
         // per level, and measured ~1.5× SLOWER at sf0.1 (scheduling
         // dominates tiny scans); depth is bounded by maxHops either way
         dist = Materialize(
-          dist.union(next.select(col("id"), lit(hop.toLong).as("dist"))),
-          reliable = reliable)
+          dist.union(next.select(col("id"), lit(hop.toLong).as("dist"))))
         frontier = next
       }
     }
@@ -496,12 +483,10 @@ object Graph {
     * corpus-wide single-partition step), with per-round lineage
     * truncation as in [[connectedComponents]]. */
   def kCore(edges: DataFrame, k: Int, srcCol: String = "src",
-            dstCol: String = "dst", maxIter: Int = 30,
-            reliable: Boolean = false): DataFrame = {
+            dstCol: String = "dst", maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     var e = Materialize(canonical(edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))),
-      reliable = reliable)
+      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))))
     var nEdges = e.count()
     var converged = nEdges == 0L
     var iter = 0
@@ -512,7 +497,7 @@ object Graph {
       val next = Materialize(
         e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst"), reliable = reliable)
+          .select("src", "dst"))
       val n = next.count()
       converged = n == nEdges
       e = next
@@ -545,15 +530,14 @@ object Graph {
     * each node's vote via `min_by(label, (-cnt, label))`; both
     * partial-aggregate (a row_number window could not). A left join
     * against the node set keeps isolated nodes. Per-round
-    * `localCheckpoint` (or reliable `checkpoint`) truncates lineage.
+    * [[Materialize]] truncates lineage.
     * Labels are node ids (longs) — `min_by` on the (-cnt, label) struct
     * is exact integer comparison, no float grids involved.
     *
     * Output: (id, label) — nodes sharing a label form one community. */
   def labelPropagation(edges: DataFrame, srcCol: String = "src",
                        dstCol: String = "dst", iterations: Int = 5,
-                       nodes: Option[(DataFrame, String)] = None,
-                       reliable: Boolean = false): DataFrame = {
+                       nodes: Option[(DataFrame, String)] = None): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     // undirected neighbor list, self-loops dropped, parallel edges
     // collapsed (a duplicate edge must not double a vote)
@@ -564,7 +548,7 @@ object Graph {
       nodes.fold(fromEdges) { case (df, c) =>
         fromEdges.union(df.select(col(c).cast("long").as("id"))).distinct()
       }
-    }, reliable = reliable)
+    })
     var labels = nodeIds.select(col("id"), col("id").as("label"))
     for (_ <- 1 to iterations) {
       val votes = e.join(labels, e("dst") === labels("id"))
@@ -575,8 +559,7 @@ object Graph {
           struct((col("__cnt") * -1).as("nc"), col("__l"))).as("__new"))
       labels = Materialize(
         labels.join(votes, labels("id") === votes("__v"), "left")
-          .select(col("id"), coalesce(col("__new"), col("label")).as("label")),
-        reliable = reliable)
+          .select(col("id"), coalesce(col("__new"), col("label")).as("label")))
     }
     labels
   }
@@ -809,9 +792,8 @@ object Graph {
     * the SCC-DAG chain depth and propagation with the directed
     * diameter (the known bounds for label-propagation SCC — there is
     * no O(log n) pointer-doubling trick on directed reachability).
-    * Every step is a keyed join/agg; per-step lineage truncation and
-    * the `reliable` checkpoint switch follow the [[connectedComponents]]
-    * discipline; fixpoints detect via xxhash64 fingerprints /
+    * Every step is a keyed join/agg; per-step lineage truncation
+    * follows the [[connectedComponents]] discipline; fixpoints detect via xxhash64 fingerprints /
     * monotone counts, never a collect of the frontier.
     *
     * Contract: self-loops and duplicate edges tolerated (a self-loop
@@ -821,7 +803,7 @@ object Graph {
   def stronglyConnectedComponents(edges: DataFrame,
       srcCol: String = "src", dstCol: String = "dst",
       nodes: Option[(DataFrame, String)] = None,
-      maxIter: Int = 100, reliable: Boolean = false): DataFrame = {
+      maxIter: Int = 100): DataFrame = {
     // LAZY checkpoints throughout (r18): each was an EAGER one — a
     // scheduled job of its own — but every one of these frames is
     // followed by a count()/fingerprint or consumed by the next round's
@@ -835,9 +817,9 @@ object Graph {
     // the vertex set keeps self-loop-only nodes; the edge set drops
     // self-loops (never cycle-forming) before everything
     var rem = Materialize(raw.select(col("src").as("id"))
-      .union(raw.select(col("dst").as("id"))).distinct(), reliable = reliable)
+      .union(raw.select(col("dst").as("id"))).distinct())
     var e = Materialize(
-      raw.filter(col("src") =!= col("dst")).distinct(), reliable = reliable)
+      raw.filter(col("src") =!= col("dst")).distinct())
     var doneParts = List.empty[DataFrame]
     var outer = 0
     var remCount = rem.count()
@@ -846,17 +828,15 @@ object Graph {
       val dsts = e.select(col("dst").as("id")).distinct()
       val trimmed = Materialize(
         rem.join(srcs, Seq("id"), "left_anti")
-          .union(rem.join(dsts, Seq("id"), "left_anti")).distinct(),
-        reliable = reliable)
+          .union(rem.join(dsts, Seq("id"), "left_anti")).distinct())
       doneParts ::= trimmed.select(col("id"), col("id").as("component"))
-      val rem2 = Materialize(rem.join(trimmed, Seq("id"), "left_anti"),
-        reliable = reliable)
+      val rem2 = Materialize(rem.join(trimmed, Seq("id"), "left_anti"))
       val rem2Count = rem2.count()
       if (rem2Count > 0) {
         val e2 = Materialize(e
           .join(rem2.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .join(rem2.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")), reliable = reliable)
+          .select(col("src"), col("dst")))
         // forward min-id coloring to fixpoint. TWO propagation steps
         // per materialized round, each intermediate a LAZY checkpoint
         // materialized through the convergence fingerprint — one
@@ -876,14 +856,13 @@ object Graph {
         def colorSig(c: DataFrame): Seq[Any] =
           c.agg(count(lit(1)), sum(xxhash64(col("id"), col("c"))
             .cast("decimal(38,0)"))).collect()(0).toSeq
-        var colors = Materialize(rem2.select(col("id"), col("id").as("c")),
-          reliable = reliable)
+        var colors = Materialize(rem2.select(col("id"), col("id").as("c")))
         var sig = colorSig(colors)
         var stable = false
         var cIter = 0
         while (!stable && cIter < maxIter) {
-          val half = Materialize(colorStep(colors), reliable = reliable)
-          val next = Materialize(colorStep(half), reliable = reliable)
+          val half = Materialize(colorStep(colors))
+          val next = Materialize(colorStep(half))
           val nextSig = colorSig(next)
           stable = nextSig == sig
           colors = next; sig = nextSig
@@ -905,13 +884,13 @@ object Graph {
           m.union(step).distinct()
         }
         var marked = Materialize(colors.filter(col("id") === col("c"))
-          .select(col("id"), col("c").as("component")), reliable = reliable)
+          .select(col("id"), col("c").as("component")))
         var mCount = marked.count()
         var grown = true
         var mIter = 0
         while (grown && mIter < maxIter) {
-          val half = Materialize(markStep(marked), reliable = reliable)
-          val next = Materialize(markStep(half), reliable = reliable)
+          val half = Materialize(markStep(marked))
+          val next = Materialize(markStep(half))
           val nCount = next.count()
           grown = nCount != mCount
           marked = next; mCount = nCount
@@ -920,15 +899,14 @@ object Graph {
         if (grown) throw new IllegalStateException(
           s"SCC backward marking did not converge in $maxIter rounds")
         doneParts ::= marked
-        rem = Materialize(rem2.join(marked, Seq("id"), "left_anti"),
-          reliable = reliable)
+        rem = Materialize(rem2.join(marked, Seq("id"), "left_anti"))
         e = Materialize(e2
           .join(marked.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(marked.select(col("id").as("dst")), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst")), reliable = reliable)
+          .select(col("src"), col("dst")))
       } else {
         rem = rem2
-        e = Materialize(e.limit(0), reliable = reliable)
+        e = Materialize(e.limit(0))
       }
       remCount = rem.count()
       outer += 1

@@ -6,14 +6,19 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** The engine's one lineage-truncation primitive: every iterative loop
   * and every multi-referenced intermediate goes through here, so the
-  * local-vs-reliable decision, its checkpoint-dir guard and the cleanup
-  * of the blocks it leaves live in one place.
+  * local-vs-durable decision and the cleanup of the blocks it leaves
+  * live in one place.
   *
-  * `Materialize(df, eager, reliable)` mirrors `Dataset.localCheckpoint
-  * (eager)`. `reliable = true` writes to the session's checkpoint
-  * directory instead (`checkpoint(eager)`): slower, but the truncated
-  * lineage survives a lost executor, which a local checkpoint's
-  * executor-held blocks do not.
+  * The session's checkpoint directory is the only switch, as in Spark's
+  * own `PeriodicCheckpointer`: with none set (the default), a
+  * truncation is a local checkpoint held in executor blocks; once
+  * `sparkContext.setCheckpointDir(<durable path>)` is called (or the
+  * session starts with Spark's `spark.checkpoint.dir`), every
+  * truncation is written there instead (`checkpoint`): slower, but the
+  * truncated lineage survives a lost executor, which a local
+  * checkpoint's executor-held blocks do not. Set
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` to reap the
+  * files of superseded loop rounds.
   *
   * A lazy frame form is lazy only above its last shuffle: under AQE,
   * `Dataset.checkpoint` runs the map stages of every shuffle in the plan
@@ -29,15 +34,12 @@ object Materialize {
 
   private[operators] val Tag = "graft.Materialize"
 
-  def apply(df: DataFrame, eager: Boolean = false,
-            reliable: Boolean = false): DataFrame = {
-    // fail before any Spark job: the callers' first Materialize precedes
-    // their first action, so a missing dir surfaces at call time
-    if (reliable && df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      throw new IllegalStateException(
-        "reliable materialization needs a reliable checkpoint location: " +
-        "call sparkContext.setCheckpointDir(<durable path>) first")
-    val out = if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+  /** `Dataset.checkpoint(eager)` or `Dataset.localCheckpoint(eager)`. */
+  def apply(df: DataFrame, eager: Boolean = false): DataFrame = {
+    val out =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(eager)
+      else df.localCheckpoint(eager)
     out.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.setName(Tag)
       case _ =>
@@ -45,10 +47,14 @@ object Materialize {
     out
   }
 
-  /** The RDD form, for loops that run on RDDs: a lazy local checkpoint
-    * (`rdd.localCheckpoint()`), tagged like the frame form. The first job
-    * that computes the RDD stores its blocks and truncates its lineage. */
-  def apply[T](rdd: RDD[T]): RDD[T] = rdd.setName(Tag).localCheckpoint()
+  /** The RDD form, for loops that run on RDDs: a lazy `rdd.checkpoint()`
+    * or `rdd.localCheckpoint()`, tagged like the frame form. The first
+    * job that computes the RDD truncates its lineage. */
+  def apply[T](rdd: RDD[T]): RDD[T] = {
+    rdd.setName(Tag)
+    if (rdd.sparkContext.getCheckpointDir.isDefined) { rdd.checkpoint(); rdd }
+    else rdd.localCheckpoint()
+  }
 
   /** Unpersist every RDD [[apply]] created in this session: lazy, eager
     * and never-materialized ones alike. Dataset caches (`persist()`)

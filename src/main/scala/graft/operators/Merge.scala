@@ -116,16 +116,6 @@ object Merge {
       .select(keys.map(col): _*)
   }
 
-  /** SCD Type 2: build a versioned dimension (validity intervals) from a
-    * change log. Consecutive rows per key with unchanged `attrCols` are
-    * collapsed (no-op updates create no version); each surviving version
-    * is valid from its own timestamp until the next version's
-    * (`valid_to` NULL = current). One shuffle on the key; at 100 TB this
-    * recompute runs per affected key-partition and lands via
-    * [[graft.sources.Sinks.overwritePartitions]].
-    *
-    * `orderCols` must totally order changes within a key (e.g. ts +
-    * change id) or version boundaries are nondeterministic. */
   /** Point-in-time (as-of) lookup against an SCD2 dimension: each fact
     * row picks the dimension version whose validity interval covers its
     * timestamp — key match, `valid_from <= ts < valid_to`, open
@@ -200,6 +190,16 @@ object Merge {
       .filter(col(opCol) =!= "D")
   }
 
+  /** SCD Type 2: build a versioned dimension (validity intervals) from a
+    * change log. Consecutive rows per key with unchanged `attrCols` are
+    * collapsed (no-op updates create no version); each surviving version
+    * is valid from its own timestamp until the next version's
+    * (`valid_to` NULL = current). One shuffle on the key; at 100 TB this
+    * recompute runs per affected key-partition and lands via
+    * [[graft.sources.Sinks.overwritePartitions]].
+    *
+    * `orderCols` must totally order changes within a key (e.g. ts +
+    * change id) or version boundaries are nondeterministic. */
   def scd2FromChanges(changes: DataFrame, keys: Seq[String], tsCol: String,
                       attrCols: Seq[String],
                       orderCols: Seq[Column] = Nil): DataFrame = {

@@ -18,6 +18,29 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf(name: String): String = s"/root/testdata/$name"
 
+  /** `body` with a fresh temp dir as the session's checkpoint dir, so
+    * every `Materialize` inside it is durable. The dir is unset and
+    * deleted afterwards, also on failure: in local mode
+    * `setCheckpointDir(null)` stores `None`, so no later suite on the
+    * shared context runs durable. */
+  def withCheckpointDir[A](body: java.nio.file.Path => A): A = {
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    sc.setCheckpointDir(dir.toString)
+    try body(dir)
+    finally {
+      sc.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  /** Regular files under `dir`, at any depth. */
+  def filesUnder(dir: java.nio.file.Path): Long = {
+    val paths = java.nio.file.Files.walk(dir)
+    try paths.filter(java.nio.file.Files.isRegularFile(_)).count()
+    finally paths.close()
+  }
+
   /** Spark jobs `body` submits on this thread, counted with a listener.
     * The listener bus is asynchronous but ordered: once a sentinel job
     * submitted after `body` is seen, every job of `body` has been. */

@@ -110,77 +110,51 @@ class GraphSpec extends SparkSpec {
     assert(kept == Seq(1L, 9L))
   }
 
-  test("reliable checkpoint path: every reliable operator fails fast without a dir and matches its local result") {
+  test("a checkpoint dir makes every loop durable, with the local run's rows") {
     // a directed graph with a cycle, a chain, a dense core and an
     // isolated pair — every operator below has work to do on it
     val edges = (Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L),
         (5L, 6L), (6L, 4L), (4L, 7L), (100L, 101L)) ++
       (0L until 12L).map(i => (20L + i, 21L + i)))
       .toDF("src", "dst")
+    val weighted = edges.withColumn("w", (col("src") + col("dst")) % 3 + 1)
+    val chain = ((0L until 63L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
+      .toDF("src", "dst")
     val seeds = Seq(1L).toDF("id")
     val vecs = Seq((0L, Seq(3.0f, 4.0f, 1.0f)), (1L, Seq(-3.0f, -2.0f, 0.0f)),
       (2L, Seq(6.0f, 8.0f, 2.0f)), (3L, Seq(-1.0f, -8.0f, 0.5f)))
       .toDF("vec_id", "embedding")
     val cov = graft.functions.VectorFunctions.covarianceMatrix(vecs, "embedding")
-    val operators: Seq[(String, Boolean => org.apache.spark.sql.DataFrame)] = Seq(
-      "connectedComponents" -> (r => Graph.connectedComponents(edges, reliable = r)),
-      "pageRank" -> (r => Graph.pageRank(edges, iterations = 3, reliable = r)),
-      "personalizedPageRank" -> (r =>
-        Graph.personalizedPageRank(edges, seeds, iterations = 3, reliable = r)),
-      "hopDistances" -> (r => Graph.hopDistances(edges, seeds, reliable = r)),
-      "kCore" -> (r => Graph.kCore(edges, k = 2, reliable = r)),
-      "labelPropagation" -> (r =>
-        Graph.labelPropagation(edges, iterations = 3, reliable = r)),
-      "stronglyConnectedComponents" -> (r =>
-        Graph.stronglyConnectedComponents(edges, reliable = r)),
-      "powerIteration" -> (r => graft.functions.VectorFunctions.powerIteration(
-        cov, iterations = 3, reliable = r)))
-    val expected = operators.map { case (name, op) =>
-      name -> op(false).collect().map(_.toString).sorted.toSeq
-    }.toMap
+    val docs = Seq("low lower lowest low", "newer newest new wider",
+      "lower newer lowest newest").zipWithIndex.map(_.swap).toDF("doc_id", "text")
+    val operators: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (() => Graph.connectedComponents(edges)),
+      "connectedComponents on a 64-node chain" -> (() => Graph.connectedComponents(chain)),
+      "pageRank" -> (() => Graph.pageRank(edges, iterations = 3)),
+      "personalizedPageRank" -> (() =>
+        Graph.personalizedPageRank(edges, seeds, iterations = 3)),
+      "hopDistances" -> (() => Graph.hopDistances(edges, seeds)),
+      "kCore" -> (() => Graph.kCore(edges, k = 2)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, iterations = 3)),
+      "stronglyConnectedComponents" -> (() => Graph.stronglyConnectedComponents(edges)),
+      "powerIteration" -> (() =>
+        graft.functions.VectorFunctions.powerIteration(cov, iterations = 3)),
+      "shortestPaths" -> (() => Graph.shortestPaths(weighted, source = 1L)),
+      "hits" -> (() => Graph.hits(edges, iterations = 3)),
+      "Bpe.learnMerges" -> (() => Bpe.learnMerges(docs, "text", numMerges = 5)))
+    def rows(op: () => org.apache.spark.sql.DataFrame) =
+      op().collect().map(_.toString).sorted.toSeq
     val sc = spark.sparkContext
-    // without a checkpoint dir the reliable path must fail fast, not fall
-    // back to non-durable truncation, and throw before its first job.
-    // The dir cannot be unset on the shared context, so this half runs
-    // only while no earlier suite has set one.
-    if (sc.getCheckpointDir.isEmpty) {
+    assert(sc.getCheckpointDir.isEmpty, "the local run needs a session without a dir")
+    val local = operators.map { case (name, op) => name -> rows(op) }.toMap
+    withCheckpointDir { dir =>
       operators.foreach { case (name, op) =>
-        val jobs = jobsSubmittedBy {
-          val e = intercept[IllegalStateException](op(true))
-          assert(e.getMessage.contains("setCheckpointDir"), s"$name: ${e.getMessage}")
-        }
-        assert(jobs == 0, s"$name(reliable = true) started $jobs Spark job(s) before failing")
+        val before = filesUnder(dir)
+        assert(rows(op) == local(name), s"$name: durable and local checkpointing must agree")
+        assert(filesUnder(dir) > before, s"$name wrote no checkpoint files")
       }
     }
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    sc.setCheckpointDir(dir)
-    operators.foreach { case (name, op) =>
-      val got = op(true).collect().map(_.toString).sorted.toSeq
-      assert(got == expected(name), s"$name: reliable and local checkpointing must agree")
-    }
-    // rounds actually hit durable storage
-    assert(new java.io.File(dir).listFiles().nonEmpty)
-  }
-
-  test("reliable checkpoint path yields identical components (and requires a dir)") {
-    val edges = ((0L until 63L).map(i => (i, i + 1)) ++ Seq((100L, 101L)))
-      .toDF("src", "dst")
-    val expected = Graph.connectedComponents(edges).as[(Long, Long)].collect().toMap
-    val sc = spark.sparkContext
-    // without a checkpoint dir the reliable path must fail fast, not fall
-    // back to non-durable truncation
-    if (sc.getCheckpointDir.isEmpty) {
-      intercept[IllegalStateException] {
-        Graph.connectedComponents(edges, reliable = true)
-      }
-    }
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    sc.setCheckpointDir(dir)
-    val out = Graph.connectedComponents(edges, reliable = true)
-      .as[(Long, Long)].collect().toMap
-    assert(out == expected, "reliable and local checkpointing must agree")
-    // rounds actually hit durable storage
-    assert(new java.io.File(dir).listFiles().nonEmpty)
+    assert(sc.getCheckpointDir.isEmpty, "the dir is unset again for later suites")
   }
 
   test("pageRank: cycle is uniform, hubs outrank spokes, dangling mass redistributes, sums to 1") {
