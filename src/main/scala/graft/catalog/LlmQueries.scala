@@ -19,31 +19,45 @@ object LlmQueries {
 
   import Catalog._
 
-  /** Session-scoped IVF index cache for q76 (see there). Entries pin
-    * persisted centroid blocks, so the cache must not outlive its session:
-    * the first insert for a session registers an application-end listener
-    * that closes and drops every entry of that session (ADVICE r2 — the
-    * unbounded map otherwise held stopped sessions and un-closed indexes
-    * for the JVM lifetime). */
-  private[graft] val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), graft.functions.IvfIndex.Index]()
-  private val ivfListenerRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  /** Values that live as long as their session. The first insert for a
+    * session registers an application-end listener that evicts every
+    * entry of that session (ADVICE r2 — an unbounded map otherwise held
+    * stopped sessions and their values for the JVM lifetime); `evict`
+    * says what eviction does to a value, and its failures are swallowed
+    * because the context may already be down. */
+  private[graft] final class SessionCache[K, V](evict: V => Unit) {
+    val entries = new java.util.concurrent.ConcurrentHashMap[(SparkSession, K), V]()
+    private val listening =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
-  /** Drop + close every cached index belonging to `s`. */
-  private[graft] def evictIvfForSession(s: SparkSession): Unit = {
-    ivfListenerRegistered.remove(s)
-    val it = ivfCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try e.getValue.close() catch { case _: Throwable => () } // context may already be down
-        it.remove()
+    /** Evict every entry belonging to `s`. */
+    def evictSession(s: SparkSession): Unit = {
+      listening.remove(s)
+      val it = entries.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey._1 eq s) {
+          try evict(e.getValue) catch { case _: Throwable => () }
+          it.remove()
+        }
       }
+    }
+
+    def getOrBuild(s: SparkSession, key: K)(build: => V): V = {
+      if (listening.add(s))
+        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onApplicationEnd(
+              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+            evictSession(s)
+        })
+      entries.computeIfAbsent((s, key), _ => build)
     }
   }
 
-  /** INVARIANT (Bench sweep contract): a cached index's plans must
+  /** IVF indexes for q76 (see there), closed on eviction: entries pin
+    * persisted centroid blocks.
+    *
+    * INVARIANT (Bench sweep contract): a cached index's plans must
     * never depend on [[graft.operators.Materialize]] blocks, which are
     * every local checkpoint the engine takes — graft.Bench calls
     * `Materialize.release` after every timed query, which drops
@@ -51,20 +65,21 @@ object LlmQueries {
     * object built over one would hit missing-block failures mid-board. The cached Index persists its own centroid/
     * assignment Datasets via cache()/persist() (swept only at
     * application end), which `release` never touches. */
-  private[graft] def cachedIvfIndex(s: SparkSession, d: String)(
-      build: => graft.functions.IvfIndex.Index): graft.functions.IvfIndex.Index = {
-    if (ivfListenerRegistered.add(s))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictIvfForSession(s)
-      })
-    ivfCache.computeIfAbsent((s, d), _ => build)
-  }
+  private val ivfIndexes =
+    new SessionCache[String, graft.functions.IvfIndex.Index](_.close())
 
-  /** Session-scoped cache for on-disk store demos (IVF/PQ/sketch/agg/
-    * index lifecycle queries): one temp store per (session, dataset,
-    * tag), built once by `build`, swept recursively on application end.
+  private[graft] def ivfCache = ivfIndexes.entries
+
+  private[graft] def evictIvfForSession(s: SparkSession): Unit =
+    ivfIndexes.evictSession(s)
+
+  private[graft] def cachedIvfIndex(s: SparkSession, d: String)(
+      build: => graft.functions.IvfIndex.Index): graft.functions.IvfIndex.Index =
+    ivfIndexes.getOrBuild(s, d)(build)
+
+  /** On-disk store demos (IVF/PQ/sketch/agg/index lifecycle queries):
+    * one temp store per (session, dataset, tag), built once by `build`,
+    * its temp dir deleted recursively on eviction.
     * Same Bench-sweep INVARIANT as [[cachedIvfIndex]]: these are paths
     * to on-DISK stores (no in-session plan state), so they are immune
     * to Bench's per-query `Materialize.release` by construction (it
@@ -74,45 +89,22 @@ object LlmQueries {
     * result-identical to a rebuild — without leaking one store tree per
     * bench/verify invocation (ADVICE r9 on q260, generalized to every
     * createTempDirectory query). */
-  private[graft] val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), String]()
-  private val storeListenerRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  private[graft] def evictStoresForSession(s: SparkSession): Unit = {
-    storeListenerRegistered.remove(s)
-    val it = storeCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try {
-          val root = new java.io.File(e.getValue).getParentFile
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(); ()
-          }
-          rm(root)
-        } catch { case _: Throwable => () }
-        it.remove()
-      }
+  private val stores = new SessionCache[(String, String), String]({ p =>
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(); ()
     }
-  }
+    rm(new java.io.File(p).getParentFile)
+  })
 
   private[graft] def cachedStore(s: SparkSession, d: String, tag: String)(
-      build: String => Unit): String = {
-    if (storeListenerRegistered.add(s))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          evictStoresForSession(s)
-      })
-    storeCache.computeIfAbsent((s, d, tag), _ => {
+      build: String => Unit): String =
+    stores.getOrBuild(s, (d, tag)) {
       val p = java.nio.file.Files
         .createTempDirectory(s"graft-$tag").toString + "/s"
       build(p)
       p
-    })
-  }
+    }
 
   /** Stopword list shared by query and oracle (subset of the testdata
     * vocabulary so ratios are non-trivial). */

@@ -199,9 +199,10 @@ object TextIndex {
     *
     * `baseBatchId` is the manifest id the base build registers under
     * (default 0 — RESERVED for base builds; [[appendToIndex]] ids must be
-    * positive). [[graft.streaming.StreamOps.indexAppendSink]] passes its
-    * first micro-batch's id here so a post-crash replay of that batch is
-    * recognized as already ingested. */
+    * positive). [[graft.streaming.StreamOps.indexAppendSink]] passes the
+    * ledger id of its first non-empty micro-batch here (`StreamOps
+    * .ledgerId`, the stream's batchId + 1), so a post-crash replay of
+    * that batch is recognized as already ingested. */
   def persistPostings(docs: DataFrame, idCol: String, textCol: String,
                       store: String,
                       numBuckets: Int = DefaultIndexBuckets,

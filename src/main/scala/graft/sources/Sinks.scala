@@ -27,19 +27,14 @@ object Sinks {
 
   /** Overwrite only the partitions present in `df` (dynamic partition
     * overwrite) — the scalable form of the reference's keyed UPDATE: the
-    * merge plan recomputes affected partitions, this lands them. */
-  def overwritePartitions(df: DataFrame, path: String, partitionBy: Seq[String]): Unit = {
-    val conf = df.sparkSession.conf
-    val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path)
-    finally {
-      prev match {
-        case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None    => conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+    * merge plan recomputes affected partitions, this lands them. The mode
+    * is a per-write option, which takes precedence over the session's
+    * `spark.sql.sources.partitionOverwriteMode`, so concurrent writers
+    * (each streaming query runs its batches on its own thread) never see
+    * each other's mode. */
+  def overwritePartitions(df: DataFrame, path: String, partitionBy: Seq[String]): Unit =
+    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionBy: _*).parquet(path)
 
   private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
                             src: org.apache.hadoop.fs.Path,
@@ -267,10 +262,10 @@ object Sinks {
     * standard answer for a 100 TB fact table repeatedly joined on one
     * key (orders ⋈ lineitem): pay the bucketed write once, skip the
     * dominant exchange on every subsequent join — where
-    * [[clusteredParquet]]/[[zOrderedParquet]] optimize SCAN pruning,
-    * bucketing optimizes JOIN placement; the same hash-layout idea the
-    * engine's own stores use (SignatureStore / TextIndex token
-    * buckets), surfaced for general tables.
+    * [[clusteredParquet]]/[[graft.operators.ZOrder.writeZOrdered]]
+    * optimize SCAN pruning, bucketing optimizes JOIN placement; the same
+    * hash-layout idea the engine's own stores use (SignatureStore /
+    * TextIndex token buckets), surfaced for general tables.
     *
     * Bucketing metadata lives in the session catalog (`saveAsTable` —
     * plain `parquet(path)` cannot carry it); `path` makes the table
@@ -290,61 +285,5 @@ object Sinks {
     val w = if (sortKeys.nonEmpty) base.sortBy(sortKeys.head, sortKeys.tail: _*)
             else base
     w.saveAsTable(table)
-  }
-
-  /** Z-value of numeric columns: each column quantizes to a 16-bit
-    * ordinal on its OWN [min, max] (the bounds ride as literals —
-    * compute them once with one tiny agg), and the ordinals' bits
-    * interleave. Nearby z-values are nearby in EVERY dimension, which is
-    * the whole point of [[zOrderedParquet]]. Codegen'd builtins only
-    * (per-column affine map + a 16-step shift/or fold); nulls map to
-    * ordinal 0. */
-  def zValue(colsWithBounds: Seq[(org.apache.spark.sql.Column, Double, Double)]): org.apache.spark.sql.Column = {
-    require(colsWithBounds.size >= 2, "z-ordering needs >= 2 columns")
-    require(colsWithBounds.size <= 4, "16-bit ordinals × >4 dims overflow a long")
-    val ordinals = colsWithBounds.map { case (c, lo, hi) =>
-      val span = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
-      least(greatest(
-        floor((coalesce(c.cast("double"), lit(lo)) - lit(lo)) / lit(span) * lit(65535.0))
-          .cast("long"), lit(0L)), lit(65535L))
-    }
-    val d = ordinals.size
-    // bit i of ordinal k lands at position i*d + k — the classic Morton
-    // interleave, unrolled to a codegen'd shift/or chain
-    (0 until 16).flatMap { i =>
-      ordinals.zipWithIndex.map { case (o, k) =>
-        shiftleft(o.bitwiseAND(lit(1L << i)).cast("long"), i * (d - 1) + k)
-      }
-    }.reduce(_.bitwiseOR(_))
-  }
-
-  /** Morton/z-order-clustered parquet layout — the MULTI-key sibling of
-    * [[clusteredParquet]]: range layout makes filters on the FIRST key
-    * skip files but leaves every other key scattered across all files;
-    * interleaving the keys' bits into one z-value and range-writing on
-    * THAT gives every participating key locality, so parquet min/max
-    * stats skip files for filters on ANY of them (at mildly reduced
-    * per-key selectivity — the standard multi-dimensional trade,
-    * Delta/Iceberg OPTIMIZE ZORDER semantics). Bounds per column come
-    * from one tiny min/max agg; rows are range-partitioned and sorted by
-    * z-value so each file covers a compact z-range = a small hyper-box.
-    * ZOrderSpec measures the per-file min/max spread of BOTH columns
-    * shrinking vs a single-key layout. */
-  def zOrderedParquet(df: DataFrame, path: String, layoutKeys: Seq[String],
-                      files: Int): Unit = {
-    val aggCols = layoutKeys.flatMap(k => Seq(
-      min(col(k).cast("double")).as(s"__min_$k"),
-      max(col(k).cast("double")).as(s"__max_$k")))
-    val boundsRow = df.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-    val bounds = layoutKeys.map { k =>
-      (col(k),
-        Option(boundsRow.getAs[java.lang.Double](s"__min_$k")).map(_.toDouble).getOrElse(0.0),
-        Option(boundsRow.getAs[java.lang.Double](s"__max_$k")).map(_.toDouble).getOrElse(0.0))
-    }
-    df.withColumn("__zv", zValue(bounds))
-      .repartitionByRange(files, col("__zv"))
-      .sortWithinPartitions(col("__zv"))
-      .drop("__zv")
-      .write.mode(SaveMode.Overwrite).parquet(path)
   }
 }

@@ -1,7 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.functions.{IvfPqStore, IvfStore}
+import graft.operators.{AggStore, CentroidStore, ErStore, GoldenStore,
+  HeavyHitters, Quantiles, SignatureStore, Sketches, TextIndex}
 
 /** Structured-Streaming surface of the engine.
   *
@@ -98,6 +103,73 @@ object StreamOps {
       "left_outer")
   }
 
+  /** The engine's one streaming-sink runner: run `each` on every
+    * micro-batch of `stream` (its id is Spark's batchId), with the
+    * source offsets checkpointed under `checkpoint`. A micro-batch whose
+    * commit did not reach the checkpoint before a crash runs again under
+    * the same id, so every sink here makes its batch idempotent. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      each: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(each)
+      .start()
+
+  /** The ledger id a store sink files micro-batch `batchId` under: the
+    * stream's ids start at 1, because id 0 is reserved for a store's
+    * pre-built base. */
+  private def ledgerId(batchId: Long): Long = batchId + 1
+
+  /** Compact the store after every `compactEvery`-th ledger id
+    * (`compactEvery > 0`), if it exists. Each append adds a batch
+    * directory tree, so a long stream otherwise grows an unbounded file
+    * count: listing cost, not data volume, becomes the bottleneck.
+    * Compaction runs after the batch's writes and is keyed on the id, so
+    * a replayed batch compacts at the same points. */
+  private def compactOnSchedule(spark: SparkSession, storePath: String,
+                                id: Long, compactEvery: Int,
+                                exists: (SparkSession, String) => Boolean,
+                                compact: (SparkSession, String) => Unit): Unit =
+    if (compactEvery > 0 && id % compactEvery == 0 && exists(spark, storePath))
+      compact(spark, storePath)
+
+  /** The store-sink form of [[eachBatch]], which the ten sinks that file
+    * micro-batches in an incremental store's batch ledger (index, sketch,
+    * aggregate, vector, entity, golden and centroid stores) call. It owns
+    * three rules:
+    *
+    *  - Ledger id: micro-batch `batchId` lands under [[ledgerId]]. A
+    *    store no-ops on an id its manifest already lists (visible or
+    *    retired), and a crashed append stays invisible until its
+    *    manifest is written, so a replayed micro-batch converges:
+    *    effectively-once on top of the checkpointed source offsets.
+    *  - Create or append: without `create`, `append` creates the store
+    *    on first use (the centroid store is pinned before the stream
+    *    starts) and writes nothing for an empty batch. With
+    *    `create` (stores whose build cannot take an empty batch: it
+    *    fails, or manifests a store with no files), the first
+    *    non-empty micro-batch to find no store builds it under its own
+    *    ledger id, so a replay of that batch is recognized as ingested;
+    *    an empty one is skipped.
+    *  - Compaction: [[compactOnSchedule]] after the batch lands.
+    */
+  private def storeSink(stream: DataFrame, checkpoint: String,
+                        storePath: String, compactEvery: Int)(
+      exists: (SparkSession, String) => Boolean,
+      compact: (SparkSession, String) => Unit,
+      append: (DataFrame, Long) => Unit,
+      create: Option[(DataFrame, Long) => Unit] = None): StreamingQuery =
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val id = ledgerId(batchId)
+      create match {
+        case Some(build) if !exists(spark, storePath) =>
+          if (!batch.isEmpty) build(batch, id)
+        case _ => append(batch, id)
+      }
+      compactOnSchedule(spark, storePath, id, compactEvery, exists, compact)
+    }
+
   /** Continuous upsert sink: each micro-batch merges into the parquet
     * target through [[graft.sources.Sinks.upsertParquet]] — the streaming
     * form of the reference's ON CONFLICT upsert loading (load.py:18-22).
@@ -105,14 +177,10 @@ object StreamOps {
     * micro-batch (failure recovery) converges to the same state:
     * effectively-once per key on top of the checkpointed source offsets. */
   def upsertSink(updates: DataFrame, path: String, keys: Seq[String],
-                 tiebreak: Seq[Column], checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Sinks.upsertParquet(batch, path, keys, tiebreak)
-      }
-      .start()
+                 tiebreak: Seq[Column], checkpoint: String): StreamingQuery =
+    eachBatch(updates, checkpoint) { (batch, _) =>
+      graft.sources.Sinks.upsertParquet(batch, path, keys, tiebreak)
+    }
 
   /** Continuous upsert into a LIVE DATABASE — the streaming form of the
     * reference's actual sink (Postgres INSERT .. ON CONFLICT, load.py:
@@ -133,18 +201,14 @@ object StreamOps {
                      keys: Seq[String], tiebreak: Seq[Column],
                      checkpoint: String,
                      properties: java.util.Properties = new java.util.Properties(),
-                     writePartitions: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val lastPerKey = graft.operators.Dedup.keepFirst(
-          batch, keys, tiebreak.map(_.desc))
-        graft.sources.Sinks.upsertJdbc(
-          lastPerKey.repartition(writePartitions, keys.map(col): _*),
-          url, table, keys, properties = properties)
-      }
-      .start()
+                     writePartitions: Int = 4): StreamingQuery =
+    eachBatch(updates, checkpoint) { (batch, _) =>
+      val lastPerKey = graft.operators.Dedup.keepFirst(
+        batch, keys, tiebreak.map(_.desc))
+      graft.sources.Sinks.upsertJdbc(
+        lastPerKey.repartition(writePartitions, keys.map(col): _*),
+        url, table, keys, properties = properties)
+    }
 
   /** Streaming near-duplicate filter: each micro-batch is deduped against
     * the growing signature store ([[graft.operators.Dedup
@@ -165,202 +229,109 @@ object StreamOps {
     * the landed output stays. Output rows carry the extra `ingest_batch`
     * column (also a useful lineage/backfill handle).
     *
-    * `compactEvery = n` (> 0) compacts the signature store after every
-    * n-th micro-batch ([[graft.operators.SignatureStore.compact]]): each
-    * append adds one file set per bucket, so a week-long stream otherwise
-    * accumulates unbounded small files — listing cost, not data volume,
-    * becomes the bottleneck. Compaction runs AFTER the batch's two writes
-    * (it is pure maintenance: crash-safe swap, content-identical), keyed
-    * on batchId so a replayed batch compacts at the same points. */
+    * `compactEvery` compacts the signature store
+    * ([[graft.operators.SignatureStore.compact]]) on the
+    * [[compactOnSchedule]] rule. */
   def nearDupFilterSink(docs: DataFrame, idCol: String, textCol: String,
                         storePath: String, outPath: String, checkpoint: String,
                         bands: Int = 8, rowsPerBand: Int = 4,
-                        compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.dedupAgainstStore(
-          batch, idCol, textCol, storePath, bands, rowsPerBand,
-          land = kept => graft.sources.Sinks.overwritePartitions(
-            kept.withColumn("ingest_batch", lit(batchId)),
-            outPath, Seq("ingest_batch")))
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.SignatureStore.exists(batch.sparkSession, storePath))
-          graft.operators.SignatureStore.compact(batch.sparkSession, storePath)
-        ()
-      }
-      .start()
+                        compactEvery: Int = 0): StreamingQuery =
+    eachBatch(docs, checkpoint) { (batch, batchId) =>
+      graft.operators.Dedup.dedupAgainstStore(
+        batch, idCol, textCol, storePath, bands, rowsPerBand,
+        land = kept => graft.sources.Sinks.overwritePartitions(
+          kept.withColumn("ingest_batch", lit(batchId)),
+          outPath, Seq("ingest_batch")))
+      compactOnSchedule(batch.sparkSession, storePath, ledgerId(batchId),
+        compactEvery, SignatureStore.exists, SignatureStore.compact)
+    }
 
   /** Streaming ingest into a persisted inverted index — the retrieval
     * twin of [[nearDupFilterSink]]: each micro-batch lands through
     * [[graft.operators.TextIndex.appendToIndex]], so a live corpus is
     * searchable ([[graft.operators.TextIndex.bm25FromIndex]]) as it
-    * arrives, with work per batch O(batch), never a rebuild.
-    *
-    * Effectively-once via the manifest: `batchId + 1` is the idempotency
-    * key (+1 keeps 0 reserved for pre-built base indexes). The first
-    * micro-batch to find no index CREATES it — `persistPostings` with
-    * that key as the base id, ONE atomic manifest write, so a post-crash
-    * replay of the creating batch is recognized as already ingested
-    * rather than double-counted. A crash anywhere else leaves either no
-    * manifest entry (the replay dynamically overwrites its own `ab=`
-    * partitions with the same deterministic rows) or a completed entry
-    * (the replay no-ops).
-    *
-    * `compactEvery = n` (> 0) folds the accumulated per-batch directory
-    * trees into one generation every n micro-batches
-    * ([[graft.operators.TextIndex.compactIndex]]): each append adds an
-    * `ab=` tree, so a week-long stream otherwise grows an unbounded file
-    * count — listing cost, not data volume, becomes the bottleneck (the
-    * [[nearDupFilterSink]] compaction discipline). Keyed on batchId, so
-    * a replayed batch compacts at the same points. */
+    * arrives, with work per batch O(batch), never a rebuild. The first
+    * non-empty micro-batch creates the index with
+    * [[graft.operators.TextIndex.persistPostings]]; `compactEvery` folds
+    * the per-batch trees with [[graft.operators.TextIndex.compactIndex]]. */
   def indexAppendSink(docs: DataFrame, idCol: String, textCol: String,
                       storePath: String, checkpoint: String,
-                      numBuckets: Int = graft.operators.TextIndex.DefaultIndexBuckets,
-                      compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val key = batchId + 1
-        if (!graft.operators.TextIndex.indexExists(spark, storePath)) {
-          // an empty first batch must not create a file-less index tree
-          if (!batch.isEmpty)
-            graft.operators.TextIndex.persistPostings(batch, idCol, textCol,
-              storePath, numBuckets, baseBatchId = key)
-        } else
-          graft.operators.TextIndex.appendToIndex(batch, idCol, textCol,
-            storePath, key)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.TextIndex.indexExists(spark, storePath))
-          graft.operators.TextIndex.compactIndex(spark, storePath)
-        ()
-      }
-      .start()
+                      numBuckets: Int = TextIndex.DefaultIndexBuckets,
+                      compactEvery: Int = 0): StreamingQuery =
+    storeSink(docs, checkpoint, storePath, compactEvery)(
+      TextIndex.indexExists, TextIndex.compactIndex,
+      (batch, id) => TextIndex.appendToIndex(batch, idCol, textCol, storePath, id),
+      create = Some((batch, id) => TextIndex.persistPostings(batch, idCol,
+        textCol, storePath, numBuckets, baseBatchId = id)))
 
   /** Streaming ingest into the mergeable HLL cardinality store — the
     * sketch twin of [[indexAppendSink]]: each micro-batch's per-group
     * sketches land through [[graft.operators.Sketches.appendSketches]]
-    * (batchId + 1 as the manifest idempotency key; the first batch
-    * creates the store, pinning lgK and keys), so running distinct
-    * counts over the whole stream history cost O(groups) at any time
-    * ([[graft.operators.Sketches.distinctCounts]]) with zero raw data
-    * retained. `compactEvery = n` folds batch partitions into one
-    * generation every n micro-batches — sketch union is exact, so
-    * estimates never change across compaction. */
+    * (the first batch creates the store, pinning lgK and keys), so
+    * running distinct counts over the whole stream history cost
+    * O(groups) at any time ([[graft.operators.Sketches.distinctCounts]])
+    * with zero raw data retained. Sketch union is exact, so estimates
+    * never change across compaction. */
   def hllSink(rows: DataFrame, keys: Seq[String], valueCol: String,
               storePath: String, checkpoint: String, lgK: Int = 12,
-              compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty first batch must not create a file-less store tree
-        if (!batch.isEmpty)
-          graft.operators.Sketches.appendSketches(batch, keys, valueCol,
-            storePath, batchId + 1, lgK)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.Sketches.storeExists(batch.sparkSession, storePath))
-          graft.operators.Sketches.compactStore(batch.sparkSession, storePath)
-        ()
-      }
-      .start()
+              compactEvery: Int = 0): StreamingQuery =
+    storeSink(rows, checkpoint, storePath, compactEvery)(
+      Sketches.storeExists, Sketches.compactStore,
+      (batch, id) => Sketches.appendSketches(batch, keys, valueCol,
+        storePath, id, lgK))
 
   /** Streaming ingest into the mergeable KLL QUANTILE store — order
     * statistics over the whole stream history at O(groups × batches)
     * query cost ([[graft.operators.Quantiles.groupQuantiles]]): the
     * [[hllSink]] recipe with sketches that answer p50/p95/p99 instead
-    * of distinct counts. Same contract: batchId + 1 is the manifest
-    * idempotency key (replays no-op, crashed appends stay invisible),
-    * the first batch pins `k` and the group keys, and `compactEvery`
-    * bounds partition-dir growth (exact-mode folds are lossless;
-    * over-capacity folds stay within the pinned rank-error bound —
-    * [[graft.operators.Quantiles.compactStore]]). */
+    * of distinct counts. The first batch pins `k` and the group keys;
+    * exact-mode folds are lossless and over-capacity folds stay within
+    * the pinned rank-error bound
+    * ([[graft.operators.Quantiles.compactStore]]). */
   def kllSink(rows: DataFrame, keys: Seq[String], valueCol: String,
               storePath: String, checkpoint: String,
               k: Int = graft.plans.KllSketch.DefaultK,
-              compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty first batch must not create a file-less store tree
-        if (!batch.isEmpty)
-          graft.operators.Quantiles.appendSketches(batch, keys, valueCol,
-            storePath, batchId + 1, k)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.Quantiles.storeExists(batch.sparkSession, storePath))
-          graft.operators.Quantiles.compactStore(batch.sparkSession, storePath)
-        ()
-      }
-      .start()
+              compactEvery: Int = 0): StreamingQuery =
+    storeSink(rows, checkpoint, storePath, compactEvery)(
+      Quantiles.storeExists, Quantiles.compactStore,
+      (batch, id) => Quantiles.appendSketches(batch, keys, valueCol,
+        storePath, id, k))
 
   /** Streaming ingest into the mergeable heavy-hitters store — the
     * third sketch sink ([[hllSink]] = distinct counts, [[kllSink]] =
     * quantiles, this = top items): running "which items dominate each
-    * group" over a stream's whole history, same idempotency/compaction
-    * contract. */
+    * group" over a stream's whole history. */
   def freqSink(rows: DataFrame, keys: Seq[String], itemCol: String,
                storePath: String, checkpoint: String,
                maxMapSize: Int = graft.plans.FreqSketch.DefaultMaxMapSize,
-               compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty first batch must not create a file-less store tree
-        if (!batch.isEmpty)
-          graft.operators.HeavyHitters.appendSketches(batch, keys, itemCol,
-            storePath, batchId + 1, maxMapSize)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.HeavyHitters.storeExists(batch.sparkSession, storePath))
-          graft.operators.HeavyHitters.compactStore(batch.sparkSession, storePath)
-        ()
-      }
-      .start()
+               compactEvery: Int = 0): StreamingQuery =
+    storeSink(rows, checkpoint, storePath, compactEvery)(
+      HeavyHitters.storeExists, HeavyHitters.compactStore,
+      (batch, id) => HeavyHitters.appendSketches(batch, keys, itemCol,
+        storePath, id, maxMapSize))
 
   /** Streaming ingest into the EXACT aggregate store — incremental
     * materialized group-by maintenance over the stream's whole history
     * ([[graft.operators.AggStore]]: counts/DECIMAL sums/min/max merge
     * losslessly, so [[graft.operators.AggStore.serve]] equals a batch
-    * aggregation of everything streamed). Fourth store sink, same
-    * idempotency/compaction contract as [[hllSink]]/[[kllSink]]/
-    * [[freqSink]]. */
+    * aggregation of everything streamed). */
   def aggSink(rows: DataFrame, keys: Seq[String], valueCol: String,
               storePath: String, checkpoint: String,
-              compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty first batch must not create a file-less store tree
-        if (!batch.isEmpty)
-          graft.operators.AggStore.append(batch, keys, valueCol,
-            storePath, batchId + 1)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.AggStore.storeExists(batch.sparkSession, storePath))
-          graft.operators.AggStore.compactStore(batch.sparkSession, storePath)
-        ()
-      }
-      .start()
+              compactEvery: Int = 0): StreamingQuery =
+    storeSink(rows, checkpoint, storePath, compactEvery)(
+      AggStore.storeExists, AggStore.compactStore,
+      (batch, id) => AggStore.append(batch, keys, valueCol, storePath, id))
 
   /** Streaming embedding ingest into the PERSISTED IVF vector index —
     * the vector twin of [[indexAppendSink]]: the first non-empty
     * micro-batch TRAINS and creates the store
-    * ([[graft.functions.IvfStore.build]] with `batchId + 1` as the
-    * base manifest id, so a post-crash replay of the creating batch is
-    * recognized as already ingested), every later batch assigns its
+    * ([[graft.functions.IvfStore.build]]), every later batch assigns its
     * vectors against the FROZEN centroids and appends in O(batch)
-    * ([[graft.functions.IvfStore.append]] — same idempotency contract:
-    * manifest-listed batch ids no-op, crashed appends stay invisible).
-    * Probes ([[graft.functions.IvfStore.topK]]) stay partition-pruned
-    * throughout; `compactEvery = n` folds the accumulated `ab=` trees
-    * every n micro-batches to bound file growth. Centroid drift is the
-    * caller's policy knob: rebuild periodically from a maintenance job
-    * if the embedding distribution moves (the store is rebuild-in-place
-    * safe).
+    * ([[graft.functions.IvfStore.append]]). Probes
+    * ([[graft.functions.IvfStore.topK]]) stay partition-pruned
+    * throughout. Centroid drift is the caller's policy knob: rebuild
+    * periodically from a maintenance job if the embedding distribution
+    * moves (the store is rebuild-in-place safe).
     *
     * `k` stays a FIXED explicit default here — deliberately NOT the
     * `k = 0` auto-√n rule the batch builds ship (SCALE.md r16): the
@@ -373,25 +344,12 @@ object StreamOps {
   def ivfAppendSink(vectors: DataFrame, vecCol: String, idCol: String,
                     storePath: String, checkpoint: String,
                     k: Int = 16, iterations: Int = 2,
-                    compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!graft.functions.IvfStore.storeExists(spark, storePath)) {
-          // an empty first batch must not create a file-less store tree
-          if (!batch.isEmpty)
-            graft.functions.IvfStore.build(batch, vecCol, idCol, storePath,
-              k, iterations, baseBatchId = batchId + 1)
-        } else
-          graft.functions.IvfStore.append(batch, storePath, batchId + 1)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.functions.IvfStore.storeExists(spark, storePath))
-          graft.functions.IvfStore.compactStore(spark, storePath)
-        ()
-      }
-      .start()
+                    compactEvery: Int = 0): StreamingQuery =
+    storeSink(vectors, checkpoint, storePath, compactEvery)(
+      IvfStore.storeExists, IvfStore.compactStore,
+      (batch, id) => IvfStore.append(batch, storePath, id),
+      create = Some((batch, id) => IvfStore.build(batch, vecCol, idCol,
+        storePath, k, iterations, baseBatchId = id)))
 
   /** Streaming drift monitor — per-micro-batch PSI of `valCol` against
     * a reference distribution FROZEN at sink creation (decile bounds
@@ -405,8 +363,7 @@ object StreamOps {
     * non-null values log n = 0 with null psi. */
   def driftMonitorSink(stream: DataFrame, valCol: String,
                        ref: DataFrame, monitorPath: String,
-                       checkpoint: String, numBins: Int = 10)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                       checkpoint: String, numBins: Int = 10): StreamingQuery = {
     require(numBins >= 2, s"numBins must be >= 2, got $numBins")
     val ps = (1 until numBins).map(i => i.toDouble / numBins).mkString(", ")
     // freeze the reference ONCE: bounds + per-bin fractions
@@ -423,38 +380,34 @@ object StreamOps {
     val refTotal = refCounts.values.sum.toDouble
     val refFrac = (1 to numBins).map(b =>
       math.max(refCounts.getOrElse(b, 0L) / refTotal, 1e-6))
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val binned = batch.filter(col(valCol).isNotNull)
-          .select((lit(1) + size(filter(bArr,
-            b => col(valCol).cast("double") > b))).as("bin"))
-          .groupBy("bin").count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        val n = binned.values.sum
-        val psi: java.lang.Double =
-          if (n == 0L) null
-          else {
-            val terms = (1 to numBins).map { b =>
-              val q = math.max(binned.getOrElse(b, 0L).toDouble / n, 1e-6)
-              val p = refFrac(b - 1)
-              BigDecimal(math.rint((q - p) * math.log(q / p) * 1e9) / 1e9)
-            }
-            math.rint(terms.sum.toDouble * 1e6) / 1e6
+    eachBatch(stream, checkpoint) { (batch, batchId) =>
+      val binned = batch.filter(col(valCol).isNotNull)
+        .select((lit(1) + size(filter(bArr,
+          b => col(valCol).cast("double") > b))).as("bin"))
+        .groupBy("bin").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val n = binned.values.sum
+      val psi: java.lang.Double =
+        if (n == 0L) null
+        else {
+          val terms = (1 to numBins).map { b =>
+            val q = math.max(binned.getOrElse(b, 0L).toDouble / n, 1e-6)
+            val p = refFrac(b - 1)
+            BigDecimal(math.rint((q - p) * math.log(q / p) * 1e9) / 1e9)
           }
-        val spark = batch.sparkSession
-        import spark.implicits._
-        // partition-overwrite keyed on batch_id: a micro-batch replayed
-        // after a crash (foreachBatch ran, checkpoint commit didn't)
-        // converges instead of appending a duplicate monitor row — the
-        // effectively-once contract every other sink here maintains
-        graft.sources.Sinks.overwritePartitions(
-          Seq((batchId, n, Option(psi).map(_.doubleValue)))
-            .toDF("batch_id", "n", "psi"),
-          monitorPath, Seq("batch_id"))
-        ()
-      }
-      .start()
+          math.rint(terms.sum.toDouble * 1e6) / 1e6
+        }
+      val spark = batch.sparkSession
+      import spark.implicits._
+      // partition-overwrite keyed on batch_id: a micro-batch replayed
+      // after a crash (the batch ran, its checkpoint commit didn't)
+      // converges instead of appending a duplicate monitor row — the
+      // effectively-once contract every other sink here maintains
+      graft.sources.Sinks.overwritePartitions(
+        Seq((batchId, n, Option(psi).map(_.doubleValue)))
+          .toDF("batch_id", "n", "psi"),
+        monitorPath, Seq("batch_id"))
+    }
   }
 
   /** Streaming ingest into the persisted IVF×PQ store — the
@@ -462,10 +415,9 @@ object StreamOps {
     * the first non-empty micro-batch trains BOTH layers
     * ([[graft.functions.IvfPqStore.build]] — centroids, codebooks,
     * cluster-partitioned codes); every later batch assigns and
-    * encodes against the FROZEN layers in O(batch). Same idempotency
-    * contract (manifest-listed batch ids no-op, crashed appends
-    * invisible — the codebook manifest is the PQ layer's visibility
-    * gate); `compactEvery` folds both layers' `ab=` trees.
+    * encodes against the FROZEN layers in O(batch). The codebook
+    * manifest is the PQ layer's visibility gate, so the store exists
+    * once that layer does; compaction folds both layers' `ab=` trees.
     *
     * `k` stays FIXED here for the [[ivfAppendSink]] reason: auto-√n
     * sizing would train on the arbitrary FIRST micro-batch and freeze
@@ -476,63 +428,31 @@ object StreamOps {
                       storePath: String, checkpoint: String,
                       k: Int = 16, iterations: Int = 2,
                       m: Int = 8, ksub: Int = 16,
-                      compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!graft.functions.IvfPqStore.pqLayerExists(spark, storePath)) {
-          // register the base build under the stream's own id so a
-          // post-crash replay of this micro-batch is a recognized no-op
-          if (!batch.isEmpty)
-            graft.functions.IvfPqStore.build(batch, vecCol, idCol,
-              storePath, k, iterations, m, ksub,
-              baseBatchId = batchId + 1)
-        } else
-          graft.functions.IvfPqStore.append(batch, storePath, batchId + 1)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.functions.IvfPqStore.pqLayerExists(spark, storePath))
-          graft.functions.IvfPqStore.compactStore(spark, storePath)
-        ()
-      }
-      .start()
+                      compactEvery: Int = 0): StreamingQuery =
+    storeSink(vectors, checkpoint, storePath, compactEvery)(
+      IvfPqStore.pqLayerExists, IvfPqStore.compactStore,
+      (batch, id) => IvfPqStore.append(batch, storePath, id),
+      create = Some((batch, id) => IvfPqStore.build(batch, vecCol, idCol,
+        storePath, k, iterations, m, ksub, baseBatchId = id)))
 
   /** Streaming ingest into the persisted entity registry — the
     * [[ivfAppendSink]] twin for [[graft.operators.ErStore]]: the first
     * non-empty micro-batch builds the registry (bounded self-link +
-    * initial clustering, registered under the stream's own id so a
-    * post-crash replay no-ops); every later batch bounded-links
-    * against the stored corpus (bucket-pruned key probe) and folds
-    * into the clustering via incremental CC — per-batch work is
-    * O(batch + touched buckets + touched components), never
-    * O(corpus). Same idempotency contract (manifest-listed and
-    * retired batch ids no-op; crashed appends invisible);
-    * `compactEvery` folds the layer trees. */
+    * initial clustering); every later batch bounded-links against the
+    * stored corpus (bucket-pruned key probe) and folds into the
+    * clustering via incremental CC — per-batch work is O(batch +
+    * touched buckets + touched components), never O(corpus). */
   def erAppendSink(records: DataFrame, idCol: String, nameCol: String,
                    storePath: String, checkpoint: String,
                    threshold: Double, blockCols: Seq[String] = Nil,
                    maxLen: Int = 18, numBuckets: Int = 64,
-                   compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!graft.operators.ErStore.storeExists(spark, storePath)) {
-          // an empty first batch must not create a store tree
-          if (!batch.isEmpty)
-            graft.operators.ErStore.build(batch, idCol, nameCol,
-              storePath, threshold, blockCols, maxLen, numBuckets,
-              baseBatchId = batchId + 1)
-        } else
-          graft.operators.ErStore.append(batch, storePath, batchId + 1)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.ErStore.storeExists(spark, storePath))
-          graft.operators.ErStore.compact(spark, storePath)
-        ()
-      }
-      .start()
+                   compactEvery: Int = 0): StreamingQuery =
+    storeSink(records, checkpoint, storePath, compactEvery)(
+      ErStore.storeExists, ErStore.compact,
+      (batch, id) => ErStore.append(batch, storePath, id),
+      create = Some((batch, id) => ErStore.build(batch, idCol, nameCol,
+        storePath, threshold, blockCols, maxLen, numBuckets,
+        baseBatchId = id)))
 
   /** Streaming ingest into the incremental golden-record store — the
     * [[erAppendSink]] twin for [[graft.operators.GoldenStore]],
@@ -542,11 +462,9 @@ object StreamOps {
     * partials and modal count deltas — touched entities only, never a
     * corpus rescan — and `GoldenStore.serve` stays identical to a
     * batch [[graft.operators.Merge.goldenRecord]] over everything
-    * ingested (the store's spec-pinned contract). Same idempotency
-    * contract as the sibling sinks (manifested batch ids no-op on
-    * replay; crashed appends invisible); `compactEvery` bounds
-    * batch-dir growth. The first non-empty micro-batch fixes the
-    * survivorship spec in the store manifest. */
+    * ingested (the store's spec-pinned contract). The first non-empty
+    * micro-batch fixes the survivorship spec in the store manifest;
+    * every micro-batch, empty ones included, must match it. */
   def goldenAppendSink(records: DataFrame, entityCol: String,
                        storePath: String, checkpoint: String,
                        mostFrequent: Seq[String] = Nil,
@@ -554,23 +472,11 @@ object StreamOps {
                        minOf: Seq[String] = Nil,
                        maxOf: Seq[String] = Nil,
                        latestBy: Option[(String, Seq[String])] = None,
-                       compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // an empty first batch must not create a store tree
-        if (!batch.isEmpty)
-          graft.operators.GoldenStore.append(batch, entityCol,
-            storePath, batchId + 1, mostFrequent, longest, minOf,
-            maxOf, latestBy)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0 &&
-            graft.operators.GoldenStore.storeExists(spark, storePath))
-          graft.operators.GoldenStore.compactStore(spark, storePath)
-        ()
-      }
-      .start()
+                       compactEvery: Int = 0): StreamingQuery =
+    storeSink(records, checkpoint, storePath, compactEvery)(
+      GoldenStore.storeExists, GoldenStore.compactStore,
+      (batch, id) => GoldenStore.append(batch, entityCol, storePath, id,
+        mostFrequent, longest, minOf, maxOf, latestBy))
 
   /** Streaming ingest into the incremental centroid store — the
     * [[goldenAppendSink]] twin for
@@ -581,29 +487,16 @@ object StreamOps {
     * micro-batch), then every micro-batch assigns its vectors and
     * appends per-cluster partial sums — `CentroidStore.serve` stays
     * identical to a one-shot assignment+mean of everything ingested
-    * (the store's spec-pinned contract). Same idempotency contract
-    * as the sibling sinks (manifested or retired batch ids no-op on
-    * replay; crashed appends invisible); `compactEvery` bounds
-    * batch-dir growth. */
+    * (the store's spec-pinned contract). */
   def centroidAppendSink(records: DataFrame, vecCol: String,
                          storePath: String, checkpoint: String,
-                         compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(graft.operators.CentroidStore.storeExists(
-        records.sparkSession, storePath),
+                         compactEvery: Int = 0): StreamingQuery = {
+    require(CentroidStore.storeExists(records.sparkSession, storePath),
       s"no centroid store at $storePath — pin anchors with " +
         "CentroidStore.create before starting the stream")
-    records.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.operators.CentroidStore.append(batch, vecCol, storePath,
-          batchId + 1)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          graft.operators.CentroidStore.compactStore(spark, storePath)
-        ()
-      }
-      .start()
+    storeSink(records, checkpoint, storePath, compactEvery)(
+      CentroidStore.storeExists, CentroidStore.compactStore,
+      (batch, id) => CentroidStore.append(batch, vecCol, storePath, id))
   }
 
   /** Same running totals on the `transformWithState` API (Spark 4's

@@ -47,6 +47,19 @@ trait SparkSpec extends AnyFunSuite {
   def jobsSubmittedBy(body: => Any): Int = {
     val sc = spark.sparkContext
     val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    jobsInGroup(tag) {
+      sc.setJobGroup(tag, "counted")
+      try body finally sc.clearJobGroup()
+    }
+  }
+
+  /** Spark jobs of job group `group` submitted while `body` runs, on any
+    * thread: a streaming query runs its micro-batches on its own thread,
+    * in the job group named by its `runId`. Same sentinel as
+    * [[jobsSubmittedBy]]. */
+  def jobsInGroup(group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val sentinel = s"jobs-${java.util.UUID.randomUUID()}-sentinel"
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -56,15 +69,14 @@ trait SparkSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(tag, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-sentinel", "sentinel")
+      body
+      sc.setJobGroup(sentinel, "sentinel")
       try spark.range(1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains(s"$tag-sentinel") && System.nanoTime() < deadline)
+      while (!groups.contains(sentinel) && System.nanoTime() < deadline)
         Thread.sleep(5)
-      assert(groups.contains(s"$tag-sentinel"), "listener never saw the sentinel job")
-      groups.toArray.count(_ == tag)
+      assert(groups.contains(sentinel), "listener never saw the sentinel job")
+      groups.toArray.count(_ == group)
     } finally sc.removeSparkListener(listener)
   }
 }

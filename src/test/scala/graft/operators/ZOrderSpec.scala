@@ -75,4 +75,68 @@ class ZOrderSpec extends SparkSpec {
       s"z-order avg box span $zSpan not < 0.6x linear $linSpan")
     assert(linSpan > 0.4, s"sanity: linear layout should be loose, got $linSpan")
   }
+
+  // two independent uniform dimensions — the hard case for single-key
+  // clustering (sorting by one leaves the other fully scattered)
+  private def data = spark.range(0, 40000).select(
+    (col("id") % 200).as("a"),
+    pmod(col("id") * 2654435761L, lit(100000L)).as("b"))
+
+  private def perFileSpread(path: String, colName: String): Seq[Double] = {
+    val files = new java.io.File(path).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.toString).toSeq
+    files.map { f =>
+      val r = spark.read.parquet(f)
+        .agg(min(col(colName)).cast("double"), max(col(colName)).cast("double"))
+        .collect()(0)
+      r.getDouble(1) - r.getDouble(0)
+    }
+  }
+
+  test("z-order gives BOTH keys per-file locality; range layout only the first") {
+    val dir = java.nio.file.Files.createTempDirectory("zorder")
+    val rangePath = dir.toString + "/range"
+    val zPath = dir.toString + "/zorder"
+    graft.sources.Sinks.clusteredParquet(data, rangePath, Seq("a"), files = 16)
+    ZOrder.writeZOrdered(data, Seq("a", "b"), zPath, numFiles = 16)
+
+    // identical content either way
+    assert(spark.read.parquet(zPath).count() == 40000)
+    assert(spark.read.parquet(zPath).agg(sum("a"), sum("b")).collect()(0) ==
+      data.agg(sum("a"), sum("b")).collect()(0))
+
+    def avg(xs: Seq[Double]) = xs.sum / xs.size
+    val rangeA = avg(perFileSpread(rangePath, "a"))
+    val rangeB = avg(perFileSpread(rangePath, "b"))
+    val zA = avg(perFileSpread(zPath, "a"))
+    val zB = avg(perFileSpread(zPath, "b"))
+    info(f"per-file avg spread — range layout: a=$rangeA%.0f b=$rangeB%.0f; " +
+      f"z-order: a=$zA%.0f b=$zB%.0f (global: a=199, b≈100000)")
+    // range layout: first key tightly clustered, second key scattered
+    assert(rangeA < 40 && rangeB > 90000, s"range: a=$rangeA b=$rangeB")
+    // z-order: BOTH keys clustered well below their global span — 16
+    // files ≈ 2 bits per dimension ≈ a quarter of each range per file
+    assert(zA < 199 * 0.45 && zB < 100000 * 0.45, s"z: a=$zA b=$zB")
+    assert(zB < rangeB * 0.5,
+      "the second key must gain real file-skipping locality vs range layout")
+  }
+
+  test("zValue interleaves: ordering by z groups spatial neighbors; guards") {
+    // corners of a 2x2 grid: z-values must sort as (0,0) < (1,0) < (0,1) < (1,1)
+    // under bit-interleave with x at bit 0 (each ranked on its own 16-bit grid)
+    val pts = Seq((0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (1.0, 1.0))
+      .toDF("x", "y")
+    val zs = ZOrder.withZValue(pts, Seq("x", "y"))
+      .select(col("x"), col("y"), col("__z"))
+      .orderBy(col("__z"))
+      .as[(Double, Double, Long)].collect()
+    assert(zs.map(r => (r._1, r._2)).toSeq ==
+      Seq((0.0, 0.0), (1.0, 0.0), (0.0, 1.0), (1.0, 1.0)), zs.toSeq)
+    intercept[IllegalArgumentException] {
+      ZOrder.zValue(Seq(col("x")), 16)
+    }
+    intercept[IllegalArgumentException] {
+      ZOrder.zValue(Seq.fill(4)(col("x")), 16) // 64 bits overflow a long
+    }
+  }
 }

@@ -29,6 +29,26 @@ class SinksSpec extends SparkSpec {
     assert(out == Seq((2L, "b"), (9L, "A2")))
   }
 
+  test("overwritePartitions sets the dynamic mode on its own write, not on the session") {
+    // each streaming query writes from its own thread: a mode set on the
+    // shared session reaches every concurrent writer's tasks, and its
+    // restore can turn another writer's insert into a static overwrite
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    val seen = udf(() => org.apache.spark.sql.internal.SQLConf.get
+      .partitionOverwriteMode.toString).asNondeterministic()
+    val p = tmp()
+    Sinks.appendParquet(Seq((1L, "-", "x"), (2L, "-", "y"))
+      .toDF("k", "mode", "part"), p, Seq("part"))
+    Sinks.overwritePartitions(Seq((9L, "x")).toDF("k", "part")
+      .select(col("k"), seen().as("mode"), col("part")), p, Seq("part"))
+    val out = spark.read.parquet(p).orderBy("k").select("k", "mode")
+      .as[(Long, String)].collect().toSeq
+    // still a dynamic overwrite, but its task saw the session's own mode
+    assert(out == Seq((2L, "-"), (9L, before.toUpperCase)))
+    assert(spark.conf.get(key) == before)
+  }
+
   test("upsertParquet merges against existing state on disk") {
     val p = tmp()
     Sinks.upsertParquet(Seq((1L, "a", 1), (2L, "b", 1)).toDF("k", "v", "ver"),

@@ -3,7 +3,9 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
 import graft.functions.{IvfPqStore, IvfStore, PqIndex, VectorFunctions}
@@ -886,5 +888,114 @@ class StreamOpsSpec extends SparkSpec {
       "across a restart: no re-emission of batch 1, near-dup of stored doc filtered")
     assert(graft.operators.SignatureStore.allIds(spark, dir.toString + "/store")
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L, 11L))
+  }
+
+  test("store sinks: an empty first micro-batch writes nothing, the next " +
+      "lands under ledger id batchId + 1, and its replay is a no-op") {
+    implicit val sqlCtx = spark.sqlContext
+    import scala.jdk.CollectionConverters._
+    import graft.operators.CentroidStore
+    val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
+    val rows = emb.filter(col("vec_id") >= 1 && col("vec_id") < 200)
+      .collect().map { r =>
+        val id = r.getLong(0)
+        (id, s"g${id % 3}", f"Customer#$id%09d",
+          r.getList[Float](1).asScala.toSeq)
+      }.toSeq
+    val anchors = emb.filter(col("vec_id") < 4)
+      .select((col("vec_id") + 1L).as("cluster_id"),
+        col("embedding").as("centroid"))
+    type Start = (DataFrame, String, String) => StreamingQuery
+    val sinks: Seq[(String, Start)] = Seq(
+      "indexAppendSink" -> ((df, s, c) =>
+        StreamOps.indexAppendSink(df, "id", "text", s, c, numBuckets = 4)),
+      "hllSink" -> ((df, s, c) => StreamOps.hllSink(df, Seq("grp"), "id", s, c)),
+      "kllSink" -> ((df, s, c) => StreamOps.kllSink(df, Seq("grp"), "id", s, c)),
+      "freqSink" -> ((df, s, c) => StreamOps.freqSink(df, Seq("grp"), "text", s, c)),
+      "aggSink" -> ((df, s, c) => StreamOps.aggSink(df, Seq("grp"), "id", s, c)),
+      "ivfAppendSink" -> ((df, s, c) =>
+        StreamOps.ivfAppendSink(df, "vec", "id", s, c, k = 4)),
+      "ivfPqAppendSink" -> ((df, s, c) =>
+        StreamOps.ivfPqAppendSink(df, "vec", "id", s, c, k = 4)),
+      "erAppendSink" -> ((df, s, c) =>
+        StreamOps.erAppendSink(df, "id", "text", s, c, threshold = 0.97)),
+      "goldenAppendSink" -> ((df, s, c) =>
+        StreamOps.goldenAppendSink(df, "grp", s, c, maxOf = Seq("id"))),
+      "centroidAppendSink" -> { (df, s, c) =>
+        if (!CentroidStore.storeExists(spark, s)) CentroidStore.create(anchors, s)
+        StreamOps.centroidAppendSink(df, "vec", s, c)
+      })
+    for ((name, start) <- sinks) withClue(s"$name: ") {
+      val dir = java.nio.file.Files.createTempDirectory("store-sink")
+      val store = dir.resolve("s")
+      val ckpt = dir.resolve("ckpt")
+      def files(): Set[String] =
+        if (!java.nio.file.Files.exists(store)) Set.empty
+        else {
+          val walk = java.nio.file.Files.walk(store)
+          try walk.iterator.asScala.filter(java.nio.file.Files.isRegularFile(_))
+            .map(store.relativize(_).toString).toSet
+          finally walk.close()
+        }
+      def ledgerDirs() = files().flatMap(_.split('/').filter(_.startsWith("ab=")))
+      val mem = MemoryStream[(Long, String, String, Seq[Float])]
+      val df = mem.toDF().toDF("id", "grp", "text", "vec")
+      val q1 = start(df, store.toString, ckpt.toString)
+      val pinned = files() // the centroid store's anchors; nothing elsewhere
+      mem.addData() // micro-batch 0: empty
+      q1.processAllAvailable()
+      assert(files() == pinned, "an empty first micro-batch writes nothing")
+      mem.addData(rows: _*) // micro-batch 1
+      q1.processAllAvailable()
+      q1.stop()
+      assert(ledgerDirs() == Set("ab=2"), "micro-batch 1 lands under ledger id 2")
+      val landed = files()
+      // drop micro-batch 1's commit, so the restarted query runs it again
+      val commit = ckpt.resolve("commits")
+      Seq("1", ".1.crc").foreach(f => java.nio.file.Files.deleteIfExists(commit.resolve(f)))
+      val q2 = start(df, store.toString, ckpt.toString)
+      q2.processAllAvailable()
+      q2.stop()
+      assert(java.nio.file.Files.exists(commit.resolve("1")), "micro-batch 1 ran again")
+      assert(files() == landed, "replaying ledger id 2 is a no-op")
+    }
+  }
+
+  test("a non-empty hllSink micro-batch submits no empty-batch probe job") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("stream-hll-jobs")
+    val mem = MemoryStream[(String, Long)]
+    val q = StreamOps.hllSink(mem.toDF().toDF("grp", "v"), Seq("grp"), "v",
+      dir.toString + "/store", dir.toString + "/ckpt")
+    try {
+      mem.addData(("a", 1L), ("b", 2L)) // creates the store
+      q.processAllAvailable()
+      val jobs = jobsInGroup(q.runId.toString) {
+        mem.addData(("a", 3L), ("c", 4L))
+        q.processAllAvailable()
+      }
+      info(s"$jobs jobs for one appending micro-batch")
+      assert(jobs > 0, "the micro-batch's jobs are counted")
+      // the store append's own isEmpty is the batch's only probe job
+      assert(jobs <= 3, s"$jobs jobs")
+    } finally q.stop()
+    assert(graft.operators.Sketches.distinctCounts(spark, dir.toString + "/store")
+      .as[(String, Long)].collect().toMap == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
+  }
+
+  test("no file in src/main but StreamOps.scala calls foreachBatch, and it calls it once") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val main = Paths.get("src/main")
+    assert(Files.isDirectory(main), s"${main.toAbsolutePath}: run from the project root")
+    val home = main.resolve("scala/graft/streaming/StreamOps.scala")
+    val walk = Files.walk(main)
+    val files = try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList
+      finally walk.close()
+    def calls(f: java.nio.file.Path) =
+      "foreachBatch".r.findAllIn(Files.readString(f)).size
+    val elsewhere = files.filter(f => f != home && calls(f) > 0)
+    assert(elsewhere.isEmpty, elsewhere.mkString("\n"))
+    assert(calls(home) == 1)
   }
 }
